@@ -13,6 +13,26 @@ Scale: brute-force is O(queries x corpus) — fine for a broadcast-able
 query set; IVF prunes the corpus to one coarse cell per query, which
 is the pattern that survives 100 TB (cells ~ partitions, centroid
 table broadcast).
+
+Primitives: every index family here (IVF, IVF+PQ, graph ANN, k-means,
+SemDeDup) is a global routing step followed by a local scan inside the
+routed cells, and all of them are composed from one set of helpers:
+  - ``_vec_norm`` / ``_query_vecs``: the array<double> vector with its
+    hoisted norm, the operands of ``_cosine_prenorm``;
+  - ``_topk`` / ``_top_cosine``: the one per-partition top-k window
+    (row_number, ties broken by the last order key), used for cell
+    routing, ADC shortlists and cosine top-k alike;
+  - ``_exact_top`` + ``_recall_matched`` + ``_recall_cols``: the
+    brute-force ground truth and the recall@3 summary of every dial;
+  - ``_fan_in``: the ordered array fan-in (values sorted by position);
+    ``_micro_varr`` / ``_codewords`` build and average the PQ
+    micro-unit arrays on it;
+  - ``_argmin_fold``: the integer nearest-codeword/centroid fold over
+    those arrays; ``_cell_dists`` / ``_label_cells``: the exploded
+    centroid-distance and label-cell routers.
+Invariant: each helper emits the Catalyst expressions its call sites
+used to spell out by hand, so outputs stay bit-identical (pinned by
+tests/test_embedding_pins.py and the oracles).
 """
 
 from __future__ import annotations
@@ -68,25 +88,29 @@ _DUCK_COS = (
 # double mean can land on a true 7th-digit tie where Spark BigDecimal
 # and DuckDB double->decimal rounding disagree — the PARITY.md r8
 # codebook finding). ONE template for every codebook/centroid mean:
-# {div} is '//' on DuckDB and 'DIV' on Spark.
+# {msum} is the exact BIGINT micro-unit sum, {div} is '//' on DuckDB
+# and 'DIV' on Spark.
 _MICRO_MEAN_CW_TEMPLATE = (
-    "CAST(CAST(CASE WHEN CAST(SUM({col}) * 1000000 AS BIGINT) >= 0 "
-    "THEN (2 * CAST(SUM({col}) * 1000000 AS BIGINT) + COUNT(*)) "
+    "CAST(CAST(CASE WHEN {msum} >= 0 "
+    "THEN (2 * {msum} + COUNT(*)) "
     "{div} (2 * COUNT(*)) "
-    "ELSE -((2 * -CAST(SUM({col}) * 1000000 AS BIGINT) + COUNT(*)) "
+    "ELSE -((2 * -{msum} + COUNT(*)) "
     "{div} (2 * COUNT(*))) "
     "END AS DOUBLE) / 1000000 AS DECIMAL(12,6))"
 )
-_MICRO_MEAN_CW_DUCK = _MICRO_MEAN_CW_TEMPLATE.format(div="//", col="dv")
+_MICRO_MEAN_CW_DUCK = _MICRO_MEAN_CW_TEMPLATE.format(
+    msum="CAST(SUM(dv) * 1000000 AS BIGINT)", div="//"
+)
 # r15: on the Spark side the exact-6dp decimals are scaled to BIGINT
 # micro-units BEFORE the SUM (CAST(SUM(dv)*1e6 AS BIGINT) ==
 # SUM(CAST(dv*1e6 AS BIGINT)) — both are the exact integer sum — but
 # the long fold stays on the fixed-width aggregation fast path where
-# sum(decimal(12,6)) widens to a slow decimal(22,6) buffer). The
-# DuckDB oracle text is untouched.
-_MICRO_MEAN_CW_SPARK = _MICRO_MEAN_CW_TEMPLATE.format(div="DIV", col="dv").replace(
-    "CAST(SUM(dv) * 1000000 AS BIGINT)", "SUM(CAST(dv * 1000000 AS BIGINT))"
+# sum(decimal(12,6)) widens to a slow decimal(22,6) buffer).
+_MICRO_MEAN_CW_SPARK = _MICRO_MEAN_CW_TEMPLATE.format(
+    msum="SUM(CAST(dv * 1000000 AS BIGINT))", div="DIV"
 )
+# the same mean over a column that already holds micro-units
+_MICRO_MEAN_DVM_SPARK = _MICRO_MEAN_CW_TEMPLATE.format(msum="SUM(dvm)", div="DIV")
 
 
 # r15 (guide §1.2 step 2, §2.3 narrower types): the distance folds used
@@ -142,6 +166,201 @@ def _sq_nano9_long(a, b):
     ).otherwise(F.floor(d2 * 1e9 + F.lit(0.5)))
 
 
+# --------------------------------------------------------------------------
+# Vector primitives: the routing/scan building blocks every query below
+# is composed of (see the module docstring).
+# --------------------------------------------------------------------------
+
+_EMB_D = "CAST(embedding AS ARRAY<DOUBLE>)"
+
+
+def _vec_norm(vec: str, norm: str) -> list[F.Column]:
+    """``embedding`` as array<double> (``vec``) and its hoisted
+    sqrt(self-dot) (``norm``): the per-vector operands of
+    `_cosine_prenorm`."""
+    return [
+        F.col("embedding").cast("array<double>").alias(vec),
+        _snorm(_EMB_D).alias(norm),
+    ]
+
+
+def _query_vecs(e: DataFrame, cond) -> DataFrame:
+    """(q_id, qv, sq): the rows of ``e`` matching ``cond`` as a query
+    set for `_exact_top`."""
+    return e.filter(cond).select(F.col("vec_id").alias("q_id"), *_vec_norm("qv", "sq"))
+
+
+def _explode_pos(df: DataFrame, key: str, arr: str, val: str) -> DataFrame:
+    """(key, pos, val): the elements of array column ``arr`` with their
+    1-based positions."""
+    return df.select(key, F.posexplode(arr).alias("pos0", val)).select(
+        key, (F.col("pos0") + 1).alias("pos"), val
+    )
+
+
+def _topk(df: DataFrame, by, k: int, *order, rank: str | None = None) -> DataFrame:
+    """The first ``k`` rows of each ``by`` partition under ``order``
+    (row_number, so ``order`` ends in a unique key: the tie-break).
+    The rank column is dropped unless ``rank`` names it."""
+    rn = rank or "rn"
+    w = Window.partitionBy(by).orderBy(*order)
+    out = df.withColumn(rn, F.row_number().over(w)).filter(F.col(rn) <= k)
+    return out if rank else out.drop(rn)
+
+
+def _top_cosine(df: DataFrame, by, k: int) -> DataFrame:
+    """`_topk` by descending ``cosine``, ties to the smaller vec_id."""
+    return _topk(df, by, k, F.desc("cosine"), "vec_id")
+
+
+def _exact_top(q: DataFrame, base: DataFrame, k: int = 3) -> DataFrame:
+    """(q_id, vec_id, cosine): exact brute-force top-``k`` of each query
+    (q_id, qv, sq) over ``base`` (vec_id, ev, se), self excluded — the
+    ground truth of every recall dial. The query set is broadcast, the
+    corpus is never shuffled."""
+    scored = (
+        F.broadcast(q)
+        .crossJoin(base)
+        .filter(F.col("q_id") != F.col("vec_id"))
+        .select("q_id", "vec_id", _cosine_prenorm("qv", "ev", "sq", "se").alias("cosine"))
+    )
+    return _top_cosine(scored, "q_id", k)
+
+
+def _recall_matched(
+    queries: DataFrame, found: DataFrame, truth: DataFrame, keys=("q_id",)
+) -> DataFrame:
+    """(keys, m): per query row of ``queries``, how many of its
+    ``found`` (keys, vec_id) rows are in ``truth`` (q_id, vec_id);
+    0 when none."""
+    keys = list(keys)
+    hits = (
+        found.select(*keys, "vec_id")
+        .join(truth.select("q_id", "vec_id"), ["q_id", "vec_id"])
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("m"))
+    )
+    return queries.join(hits, keys, "left").select(
+        *keys, F.coalesce("m", F.lit(0)).alias("m")
+    )
+
+
+def _recall_cols(perfect: bool = True) -> list[F.Column]:
+    """n_queries, avg_recall (recall@3) and, with ``perfect``,
+    n_perfect — aggregates over a `_recall_matched` frame."""
+    n = F.count(F.lit(1))
+    cols = [
+        n.alias("n_queries"),
+        F.round(F.sum("m") * F.lit(1.0) / (F.lit(3) * n), 6).alias("avg_recall"),
+    ]
+    if perfect:
+        cols.append(
+            F.sum(F.when(F.col("m") == 3, 1).otherwise(0)).cast("long").alias("n_perfect")
+        )
+    return cols
+
+
+def _fan_in(order: str, field: str, value: F.Column | None = None) -> F.Column:
+    """Aggregate: the group's ``field`` values (or ``value`` named
+    ``field``) as one array in ascending ``order``."""
+    v = field if value is None else value.alias(field)
+    return F.transform(
+        F.sort_array(F.collect_list(F.struct(order, v))),
+        lambda s: s.getField(field),
+    )
+
+
+def _argmin_fold(vec: str, book: str, arr: str, key: str, term: str) -> F.Column:
+    """The ``key`` of the ``book`` entry (an array of
+    struct(``key``, ``arr``)) nearest the array column ``vec``: the
+    distance is the BIGINT sum of ``term`` over element pairs (x, y),
+    ties go to the smaller key — the per-row twin of a
+    row_number-over-(dist, key) argmin."""
+    return F.expr(
+        f"""element_at(array_sort(transform({book}, c -> struct(
+             aggregate(zip_with({vec}, c.{arr}, (x, y) -> {term}),
+                       CAST(0 AS BIGINT), (a, t) -> a + t) AS d,
+             c.{key} AS {key}))), 1).{key}"""
+    )
+
+
+def _cell_dists(
+    x: DataFrame, cents: DataFrame, key: str, val: str, exact6: bool = False
+) -> DataFrame:
+    """(key, cid, dist): squared L2 in exact BIGINT nano-units of each
+    exploded vector (key, pos, val) to every broadcast centroid
+    (cid, pos, cval). ``exact6`` operands are exact 6dp values and take
+    `_sq_nano9_long`; raw doubles keep the full `_nano9_long` round."""
+    v, c = F.col(val), F.col("cval")
+    term = _sq_nano9_long(v, c) if exact6 else _nano9_long((v - c) * (v - c))
+    return (
+        x.join(F.broadcast(cents), "pos")
+        .groupBy(key, "cid")
+        .agg(F.sum(term).alias("dist"))
+    )
+
+
+def _label_cells(
+    e: DataFrame, q_expl: DataFrame, nprobe: int, rank: str | None = None
+) -> DataFrame:
+    """(q_id, cell[, rank]): the label-cell IVF router. Each exploded
+    query (q_id, pos, qval) goes to the ``nprobe`` label centroids with
+    the largest exact micro-unit dot product, ties to the smaller
+    label."""
+    cents = (
+        e.select("label", F.posexplode("embedding").alias("pos0", "v"))
+        .select(
+            "label",
+            (F.col("pos0") + 1).alias("pos"),
+            F.col("v").cast("double").cast("decimal(12,6)").alias("dv"),
+        )
+        .groupBy("label", "pos")
+        .agg((F.sum("dv").cast("double") / F.count(F.lit(1))).alias("cval"))
+    )
+
+    def micro(c: str) -> F.Column:
+        return (F.col(c).cast("decimal(12,6)") * 1000000).cast("long")
+
+    dots = (
+        q_expl.join(F.broadcast(cents), "pos")
+        .groupBy("q_id", "label")
+        .agg(F.sum(micro("qval") * micro("cval")).alias("dot_d"))
+    )
+    top = _topk(dots, "q_id", nprobe, F.desc("dot_d"), "label", rank=rank)
+    return top.select("q_id", F.col("label").alias("cell"), *([rank] if rank else []))
+
+
+def _micro_varr(e: DataFrame, expl: DataFrame) -> DataFrame:
+    """(vec_id, sub, dvm array<bigint>): per-(vector, subspace) PQ
+    micro-unit arrays of ``expl`` (vec_id, sub, pos, dvm) in pos order —
+    the one fan-in table that codebook training and code assignment fold
+    against broadcast codeword arrays. Explicit AQE-exempt partition
+    count sized so each task folds ~4096 subspace rows, capped at
+    cluster parallelism; ``e`` is the (filtered) raw table whose
+    metadata-cheap count sizes it."""
+    n_vecs = e.count()
+    par = max(
+        1,
+        min(e.sparkSession.sparkContext.defaultParallelism, n_vecs * _PQ_M // 4096 + 1),
+    )
+    return (
+        expl.groupBy("vec_id", "sub")
+        .agg(_fan_in("pos", "dvm").alias("dvm"))
+        .repartition(par, "vec_id")
+    )
+
+
+def _codewords(assigned: DataFrame) -> DataFrame:
+    """(grp, sub, pos, cw): the exact micro-unit mean of every codeword
+    over its assigned subvectors (grp, sub, dvm — `_micro_varr`
+    arrays, where dvm[i] is pos = sub*_PQ_M + i + 1)."""
+    return (
+        assigned.select("grp", "sub", F.posexplode("dvm").alias("p0", "dvm"))
+        .groupBy("grp", "sub", (F.col("sub") * _PQ_M + F.col("p0") + 1).alias("pos"))
+        .agg(F.expr(_MICRO_MEAN_DVM_SPARK).alias("cw"))
+    )
+
+
 @query(
     "embedding_knn_bruteforce",
     oracle=f"""
@@ -162,26 +381,11 @@ def embedding_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the query set is broadcast (never shuffle the corpus); the
     per-query top-k is computed with a ranked window after scoring.
     """
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("ev"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("se"),
-    )
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", *_vec_norm("ev", "se"))
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), F.col("ev").alias("qv"), F.col("se").alias("sq")
     )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(e)
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .select("q_id", "vec_id", _cosine_prenorm("qv", "ev", "sq", "se").alias("cosine"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("q_id", "vec_id", "cosine")
-    )
+    return _exact_top(q, e, 5)
 
 
 @query(
@@ -247,12 +451,7 @@ def embedding_knn_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials = e.select("vec_id", "embedding").mapInPandas(
         partial_topk, schema="q_id long, vec_id long, cosine double"
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        partials.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("q_id", "vec_id", "cosine")
-    )
+    return _top_cosine(partials, "q_id", 5)
 
 
 @query(
@@ -283,7 +482,9 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DUCK_IVF_CTE = """
+# {name}: the routing CTE's name, {cols}: extra columns it keeps,
+# {bound}: its rank bound (how many cells each query probes)
+_DUCK_IVF_TEMPLATE = """
 centroids AS (
   SELECT label, i AS pos,
          CAST(SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(12,6))) AS DOUBLE) / COUNT(*) AS cval
@@ -299,12 +500,13 @@ q_dots AS (
          CAST(SUM(CAST(qval AS DECIMAL(12,6)) * CAST(cval AS DECIMAL(12,6))) AS DOUBLE) AS dot_d
   FROM q_exploded q JOIN centroids c ON q.pos = c.pos
   GROUP BY q_id, c.label),
-assigned AS (
-  SELECT q_id, label AS cell
+{name} AS (
+  SELECT q_id, label AS cell{cols}
   FROM (SELECT q_id, label, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dot_d DESC, label) AS rn
         FROM q_dots)
-  WHERE rn = 1)
+  WHERE rn {bound})
 """
+_DUCK_IVF_CTE = _DUCK_IVF_TEMPLATE.format(name="assigned", cols="", bound="= 1")
 
 
 @query(
@@ -342,58 +544,15 @@ def _spark_ivf_results(
     """(query set, IVF top-3 results) — shared by embedding_ivf_knn and
     the recall measurement."""
     e = load_table(spark, sf_dir, "embeddings")
-    cents = (
-        e.select("label", F.posexplode("embedding").alias("pos0", "v"))
-        .select(
-            "label",
-            (F.col("pos0") + 1).alias("pos"),
-            F.col("v").cast("double").cast("decimal(12,6)").alias("dv"),
-        )
-        .groupBy("label", "pos")
-        .agg((F.sum("dv").cast("double") / F.count(F.lit(1))).alias("cval"))
-    )
-    q = e.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("sq"),
-    )
-    q_expl = q.select("q_id", F.posexplode("qv").alias("pos0", "qval")).select(
-        "q_id", (F.col("pos0") + 1).alias("pos"), "qval"
-    )
-    q_dots = (
-        q_expl.join(F.broadcast(cents), "pos")
-        .groupBy("q_id", "label")
-        .agg(
-            F.sum(
-                (F.col("qval").cast("decimal(12,6)") * 1000000).cast("long")
-                * (F.col("cval").cast("decimal(12,6)") * 1000000).cast("long")
-            ).alias("dot_d")
-        )
-    )
-    w_assign = Window.partitionBy("q_id").orderBy(F.desc("dot_d"), "label")
-    assigned = (
-        q_dots.withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("q_id", F.col("label").alias("cell"))
-    )
-    base = e.select(
-        "vec_id",
-        "label",
-        F.col("embedding").cast("array<double>").alias("ev"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("se"),
-    )
+    q = _query_vecs(e, F.col("vec_id") % 97 == 0)
+    assigned = _label_cells(e, _explode_pos(q, "q_id", "qv", "qval"), 1)
+    base = e.select("vec_id", "label", *_vec_norm("ev", "se"))
     scored = (
         F.broadcast(q.join(assigned, "q_id"))
         .join(base, (F.col("label") == F.col("cell")) & (F.col("vec_id") != F.col("q_id")))
         .select("q_id", "cell", "vec_id", _cosine_prenorm("qv", "ev", "sq", "se").alias("cosine"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "vec_id")
-    top3 = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "cell", "vec_id", "cosine")
-    )
-    return q, top3
+    return q, _top_cosine(scored, "q_id", 3)
 
 
 @query(
@@ -446,36 +605,8 @@ def embedding_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     q, ivf = _spark_ivf_results(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings")
-    base = e.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("ev"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("se"),
-    )
-    bf_scored = (
-        F.broadcast(q)
-        .crossJoin(base)
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .select("q_id", "vec_id", _cosine_prenorm("qv", "ev", "sq", "se").alias("cosine"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "vec_id")
-    bf_top = (
-        bf_scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "vec_id")
-    )
-    inter = ivf.select("q_id", "vec_id").join(bf_top, ["q_id", "vec_id"])
-    matched = (
-        q.select("q_id")
-        .join(inter.groupBy("q_id").agg(F.count(F.lit(1)).alias("m")), "q_id", "left")
-        .select("q_id", F.coalesce("m", F.lit(0)).alias("m"))
-    )
-    return matched.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.round(F.sum("m") * F.lit(1.0) / (F.lit(3) * F.count(F.lit(1))), 6).alias(
-            "avg_recall"
-        ),
-        F.sum(F.when(F.col("m") == 3, 1).otherwise(0)).cast("long").alias("n_perfect"),
-    )
+    bf_top = _exact_top(q, e.select("vec_id", *_vec_norm("ev", "se")))
+    return _recall_matched(q.select("q_id"), ivf, bf_top).agg(*_recall_cols())
 
 
 @query(
@@ -501,10 +632,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse cell doubles as the dedup blocking key so the pair join is
     per-cell, not global O(n^2))."""
     e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.col("embedding").cast("array<double>").alias("ev"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("se"),
+        "vec_id", "label", *_vec_norm("ev", "se")
     )
     s = e.filter(F.col("vec_id") % 10 == 0).select(
         F.col("vec_id").alias("vec_a"), "label", F.col("ev").alias("av"), F.col("se").alias("sa")
@@ -599,11 +727,7 @@ def embedding_rp_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = b1.join(b2, (b1.bucket == b2.b2) & (b1.vec_a < b2.vec_b)).select(
         "bucket", "vec_a", "vec_b"
     )
-    ev = e.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("ev"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("sn"),
-    )
+    ev = e.select("vec_id", *_vec_norm("ev", "sn"))
     verified = (
         cand.join(
             ev.select(F.col("vec_id").alias("vec_a"), F.col("ev").alias("av"), F.col("sn").alias("sa")),
@@ -700,9 +824,7 @@ def embedding_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "embedding_ivf_multiprobe",
     oracle=f"""
-WITH {_DUCK_IVF_CTE.replace("assigned AS (", "assigned_mp AS (").replace(
-        "WHERE rn = 1)", "WHERE rn <= 2)").replace(
-        "SELECT q_id, label AS cell", "SELECT q_id, label AS cell, rn")},
+WITH {_DUCK_IVF_TEMPLATE.format(name="assigned_mp", cols=", rn", bound="<= 2")},
 bf_scored AS (
   SELECT q.q_id, e.vec_id,
          {_DUCK_COS.format(a="q.qv", b="e.embedding::DOUBLE[]")} AS cosine
@@ -754,46 +876,11 @@ def embedding_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     only to measure recall and runs on the sampled query set.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    cents = (
-        e.select("label", F.posexplode("embedding").alias("pos0", "v"))
-        .select(
-            "label",
-            (F.col("pos0") + 1).alias("pos"),
-            F.col("v").cast("double").cast("decimal(12,6)").alias("dv"),
-        )
-        .groupBy("label", "pos")
-        .agg((F.sum("dv").cast("double") / F.count(F.lit(1))).alias("cval"))
+    q = _query_vecs(e, F.col("vec_id") % 97 == 0)
+    assigned = _label_cells(
+        e, _explode_pos(q, "q_id", "qv", "qval"), 2, rank="cell_rank"
     )
-    q = e.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("sq"),
-    )
-    q_expl = q.select("q_id", F.posexplode("qv").alias("pos0", "qval")).select(
-        "q_id", (F.col("pos0") + 1).alias("pos"), "qval"
-    )
-    q_dots = (
-        q_expl.join(F.broadcast(cents), "pos")
-        .groupBy("q_id", "label")
-        .agg(
-            F.sum(
-                (F.col("qval").cast("decimal(12,6)") * 1000000).cast("long")
-                * (F.col("cval").cast("decimal(12,6)") * 1000000).cast("long")
-            ).alias("dot_d")
-        )
-    )
-    w_assign = Window.partitionBy("q_id").orderBy(F.desc("dot_d"), "label")
-    assigned = (
-        q_dots.withColumn("cell_rank", F.row_number().over(w_assign))
-        .filter(F.col("cell_rank") <= 2)
-        .select("q_id", F.col("label").alias("cell"), "cell_rank")
-    )
-    base = e.select(
-        "vec_id",
-        "label",
-        F.col("embedding").cast("array<double>").alias("ev"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("se"),
-    )
+    base = e.select("vec_id", "label", *_vec_norm("ev", "se"))
     probes = spark.range(1, 3).select(F.col("id").cast("int").alias("n_probe"))
     cand = (
         F.broadcast(probes)
@@ -803,39 +890,13 @@ def embedding_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = F.broadcast(cand).join(
         base, (F.col("label") == F.col("cell")) & (F.col("vec_id") != F.col("q_id"))
     ).select("n_probe", "q_id", "vec_id", _cosine_prenorm("qv", "ev", "sq", "se").alias("cosine"))
-    w_top = Window.partitionBy("n_probe", "q_id").orderBy(F.desc("cosine"), "vec_id")
-    ivf_top = (
-        scored.withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= 3)
-        .select("n_probe", "q_id", "vec_id")
-    )
-    bf_scored = (
-        F.broadcast(q)
-        .crossJoin(base.drop("label"))
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .select("q_id", "vec_id", _cosine_prenorm("qv", "ev", "sq", "se").alias("cosine"))
-    )
-    w_bf = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "vec_id")
-    bf_top = (
-        bf_scored.withColumn("rn", F.row_number().over(w_bf))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "vec_id")
-    )
-    inter = ivf_top.join(bf_top, ["q_id", "vec_id"]).groupBy("n_probe", "q_id").agg(
-        F.count(F.lit(1)).alias("m")
-    )
-    matched = (
-        F.broadcast(probes)
-        .crossJoin(q.select("q_id"))
-        .join(inter, ["n_probe", "q_id"], "left")
-        .select("n_probe", "q_id", F.coalesce("m", F.lit(0)).alias("m"))
-    )
-    return matched.groupBy("n_probe").agg(
-        F.count(F.lit(1)).cast("long").alias("n_queries"),
-        F.round(F.sum("m") * F.lit(1.0) / (F.lit(3) * F.count(F.lit(1))), 6).alias(
-            "avg_recall"
-        ),
-        F.sum(F.when(F.col("m") == 3, 1).otherwise(0)).cast("long").alias("n_perfect"),
+    ivf_top = _top_cosine(scored, ["n_probe", "q_id"], 3)
+    bf_top = _exact_top(q, base.drop("label"))
+    queries = F.broadcast(probes).crossJoin(q.select("q_id"))
+    return (
+        _recall_matched(queries, ivf_top, bf_top, ("n_probe", "q_id"))
+        .groupBy("n_probe")
+        .agg(*_recall_cols())
     )
 
 
@@ -896,44 +957,18 @@ def _pq_demo_parts(spark: SparkSession, sf_dir: str):
 
     def build_varr() -> DataFrame:
         e = load_table(spark, sf_dir, "embeddings")
-        n_vecs = e.count()  # metadata-cheap columnar count
-        par = max(
-            1,
-            min(spark.sparkContext.defaultParallelism, n_vecs * _PQ_M // 4096 + 1),
+        expl = e.select("vec_id", F.posexplode("embedding").alias("pos", "v")).select(
+            "vec_id",
+            F.floor(F.col("pos") / _PQ_M).cast("int").alias("sub"),
+            "pos",
+            (F.col("v").cast("double").cast("decimal(12,6)") * 1000000)
+            .cast("long")
+            .alias("dvm"),
         )
-        return (
-            e.select("vec_id", F.posexplode("embedding").alias("pos0", "v"))
-            .select(
-                "vec_id",
-                F.floor(F.col("pos0") / _PQ_M).cast("int").alias("sub"),
-                "pos0",
-                (F.col("v").cast("double").cast("decimal(12,6)") * 1000000)
-                .cast("long")
-                .alias("dvm"),
-            )
-            .groupBy("vec_id", "sub")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos0", "dvm"))),
-                    lambda s: s.getField("dvm"),
-                ).alias("dvm")
-            )
-            .repartition(par, "vec_id")
-        )
+        return _micro_varr(e, expl)
 
     varr = memo_table(spark, f"pq_demo_varr:{sf_dir}", build_varr)
-    mean_dvm = _MICRO_MEAN_CW_SPARK.replace("CAST(dv * 1000000 AS BIGINT)", "dvm")
-    cw = (
-        varr.select(
-            (F.col("vec_id") % _PQ_K).alias("grp"),
-            "sub",
-            F.posexplode("dvm").alias("p0", "dvm"),
-        )
-        .groupBy(
-            "grp", "sub", (F.col("sub") * _PQ_M + F.col("p0") + 1).alias("pos")
-        )
-        .agg(F.expr(mean_dvm).alias("cw"))
-    )
+    cw = _codewords(varr.select((F.col("vec_id") % _PQ_K).alias("grp"), "sub", "dvm"))
 
     def build_codes() -> DataFrame:
         return _pq_assign_hof(varr, cw).select(
@@ -1014,12 +1049,7 @@ def embedding_pq_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("q_id", "vec_id")
         .agg((F.sum("dist").cast("double") / 1e12).alias("adc_dist"))
     )
-    w = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
-    return (
-        adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "vec_id", "adc_dist")
-    )
+    return _topk(adc, "q_id", 3, "adc_dist", "vec_id")
 
 
 # --------------------------------------------------------------------------
@@ -1115,37 +1145,12 @@ def embedding_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "embeddings")
     # coarse routing (exact-decimal centroid assignment)
-    cents = (
-        e.select("label", F.posexplode("embedding").alias("pos0", "v"))
-        .select(
-            "label",
-            (F.col("pos0") + 1).alias("pos"),
-            F.col("v").cast("double").cast("decimal(12,6)").alias("dv"),
-        )
-        .groupBy("label", "pos")
-        .agg((F.sum("dv").cast("double") / F.count(F.lit(1))).alias("cval"))
-    )
     q_expl = (
         e.filter(F.col("vec_id") % 97 == 0)
         .select(F.col("vec_id").alias("q_id"), F.posexplode("embedding").alias("pos0", "qv"))
         .select("q_id", (F.col("pos0") + 1).alias("pos"), F.col("qv").cast("double").alias("qval"))
     )
-    q_dots = (
-        q_expl.join(F.broadcast(cents), "pos")
-        .groupBy("q_id", "label")
-        .agg(
-            F.sum(
-                (F.col("qval").cast("decimal(12,6)") * 1000000).cast("long")
-                * (F.col("cval").cast("decimal(12,6)") * 1000000).cast("long")
-            ).alias("dot_d")
-        )
-    )
-    w_assign = Window.partitionBy("q_id").orderBy(F.desc("dot_d"), "label")
-    assigned = (
-        q_dots.withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("q_id", F.col("label").alias("cell"))
-    )
+    assigned = _label_cells(e, q_expl, 1)
     # PQ pieces: the memoized demo-PQ bundle shared with
     # embedding_pq_adc_knn (r16 — both queries previously re-derived
     # the identical codebook/codes/LUT chains per invocation)
@@ -1165,11 +1170,8 @@ def embedding_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("q_id", "vec_id", "cell")
         .agg((F.sum("dist").cast("double") / 1e12).alias("adc_dist"))
     )
-    w = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
-    return (
-        adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "cell", "vec_id", "adc_dist")
+    return _topk(adc, "q_id", 3, "adc_dist", "vec_id").select(
+        "q_id", "cell", "vec_id", "adc_dist"
     )
 
 
@@ -1351,20 +1353,14 @@ def _normalized_vec_expl(
         e = load_table(spark, sf_dir, "embeddings")
         if pred is not None:
             e = e.filter(pred)
-        ed = "CAST(embedding AS ARRAY<DOUBLE>)"
-        dot = _SPARK_DOT.format(a=ed, b=ed)
+        dot = _SPARK_DOT.format(a=_EMB_D, b=_EMB_D)
         nv = e.select(
             "vec_id",
-            F.expr(f"transform({ed}, x -> round(x / sqrt({dot}), 6))").alias("nvec"),
+            F.expr(f"transform({_EMB_D}, x -> round(x / sqrt({dot}), 6))").alias("nvec"),
         )
-        return nv.select(
-            "vec_id", F.posexplode("nvec").alias("pos0", "val")
-        ).select("vec_id", (F.col("pos0") + 1).alias("pos"), "val")
+        return _explode_pos(nv, "vec_id", "nvec", "val")
 
     return memo_table(spark, f"norm_vec_expl:{sf_dir}:{pred}", build)
-
-
-_KMEANS_PAIR_MEMO: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
 
 def _kmeans_pair(
@@ -1388,30 +1384,17 @@ def _kmeans_pair(
 
     Scale: one broadcast join of k centroids + map-side partial
     aggregation per assignment; lineage is checkpoint-truncated per
-    round (PERF.md's iterative-loop lesson). Memoized per
-    (session, sf_dir, k, rounds, normalized, pred) — both consumers of
-    a configuration read one cached assignment/centroid pair. ``pred``
-    restricts the training corpus (delta-ingest test path; the k seed
-    vectors must satisfy it)."""
-    from pyspark.sql.types import DecimalType
+    round (PERF.md's iterative-loop lesson). Both frames are session
+    memo tables per (sf_dir, k, rounds, normalized, pred), built once
+    even when several threads ask at once (the index build trains on a
+    pool thread) — every consumer of a configuration reads one cached
+    assignment/centroid pair. ``pred`` restricts the training corpus
+    (delta-ingest test path; the k seed vectors must satisfy it)."""
+    from functools import cache
 
-    key = (spark.sparkContext.applicationId, sf_dir, k, rounds, normalized, pred)
-    got = _KMEANS_PAIR_MEMO.get(key)
-    if got is not None:
-        return got
-    from grapho_spark.sparkutil import checkpoint_state, materialize
+    from grapho_spark.sparkutil import materialize, memo_table
 
-    if normalized:
-        vecs = _normalized_vec_expl(spark, sf_dir, pred)
-    else:
-        e = load_table(spark, sf_dir, "embeddings")
-        if pred is not None:
-            e = e.filter(pred)
-        vecs = materialize(
-            e.select("vec_id", F.posexplode("embedding").alias("pos0", "val")).select(
-                "vec_id", (F.col("pos0") + 1).alias("pos"), "val"
-            )
-        )
+    key = f"kmeans:{sf_dir}:{k}:{rounds}:{normalized}:{pred}"
 
     # r15: the dist fold runs in exact BIGINT nano-units instead of
     # decimal(28,9) (argmin ordering is scale-invariant; per-vector
@@ -1441,103 +1424,99 @@ def _kmeans_pair(
     else:
         _term = "CAST(FLOOR(round((x - y) * (x - y), 9) * 1000000000 + 0.5D) AS BIGINT)"
 
-    # one array row per vector, built ONCE from the exploded table and
-    # reused by every round's assignment. Explicit partition count:
-    # AQE would coalesce the ~3MB agg output to one partition and
-    # serialize the fold; explicit repartition is AQE-exempt. Sized
-    # from the corpus (ceil(n/256) vectors per task) and capped at
-    # cluster parallelism — at scale the cap binds, locally it spreads
-    # the interpreted HOF work across cores.
-    _eb = load_table(spark, sf_dir, "embeddings")
-    if pred is not None:
-        _eb = _eb.filter(pred)
-    n_vecs = _eb.count()  # metadata-cheap columnar count
-    par = max(1, min(spark.sparkContext.defaultParallelism, n_vecs // 256 + 1))
-    varr = materialize(
-        vecs.groupBy("vec_id")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "val"))),
-                lambda s: s.getField("val"),
-            ).alias("varr")
+    @cache
+    def setup():
+        """(vecs, assign): the exploded corpus and the assignment fold."""
+        e = load_table(spark, sf_dir, "embeddings")
+        if pred is not None:
+            e = e.filter(pred)
+        if normalized:
+            vecs = _normalized_vec_expl(spark, sf_dir, pred)
+        else:
+            vecs = materialize(_explode_pos(e, "vec_id", "embedding", "val"))
+        # one array row per vector, built ONCE from the exploded table
+        # and reused by every round's assignment. Explicit partition
+        # count: AQE would coalesce the ~3MB agg output to one
+        # partition and serialize the fold; explicit repartition is
+        # AQE-exempt. Sized from the corpus (ceil(n/256) vectors per
+        # task) and capped at cluster parallelism — at scale the cap
+        # binds, locally it spreads the interpreted HOF work across
+        # cores.
+        n_vecs = e.count()  # metadata-cheap columnar count
+        par = max(1, min(spark.sparkContext.defaultParallelism, n_vecs // 256 + 1))
+        varr = materialize(
+            vecs.groupBy("vec_id")
+            .agg(_fan_in("pos", "val").alias("varr"))
+            .repartition(par, "vec_id")
         )
-        .repartition(par, "vec_id")
-    )
 
-    def assign(cents: DataFrame) -> DataFrame:
-        carr = (
-            cents.groupBy("cid")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "cval"))),
-                    lambda s: s.getField("cval"),
-                ).alias("cvec")
+        def assign(cents: DataFrame) -> DataFrame:
+            carr = (
+                cents.groupBy("cid")
+                .agg(_fan_in("pos", "cval").alias("cvec"))
+                .agg(F.sort_array(F.collect_list(F.struct("cid", "cvec"))).alias("cents"))
             )
-            .agg(F.sort_array(F.collect_list(F.struct("cid", "cvec"))).alias("cents"))
-        )
-        return varr.crossJoin(F.broadcast(carr)).select(
-            "vec_id",
-            F.expr(
-                f"""element_at(array_sort(transform(cents, c -> struct(
-                     aggregate(zip_with(varr, c.cvec, (x, y) -> {_term}),
-                               CAST(0 AS BIGINT), (a, t) -> a + t) AS d,
-                     c.cid AS cid))), 1).cid"""
-            ).alias("cid"),
-        )
-
-    def recompute(assigned: DataFrame) -> DataFrame:
-        # r15: micro-unit BIGINT fold; cast(sum_long as double)/1e6 and
-        # cast(sum_decimal(18,6) as double) are both the nearest double
-        # of the same exact sum, so the 6dp mean is bit-identical (an
-        # exact-6dp corpus skips the per-row BigDecimal round too)
-        micro = (
-            F.floor(F.col("val") * 1e6 + F.lit(0.5))
-            if normalized
-            else _micro6_long(F.col("val"))
-        )
-        return (
-            vecs.join(assigned, "vec_id")
-            .groupBy("cid", "pos")
-            .agg(
-                F.round(
-                    F.sum(micro).cast("double") / 1e6 / F.count(F.lit(1)),
-                    6,
-                ).alias("cval")
+            return varr.crossJoin(F.broadcast(carr)).select(
+                "vec_id", _argmin_fold("varr", "cents", "cvec", "cid", _term).alias("cid")
             )
-        )
 
-    if pred is None:
-        cents = vecs.filter(F.col("vec_id") < k).select(
-            F.col("vec_id").alias("cid"), "pos", F.col("val").alias("cval")
-        )
-    else:
-        # r12: a pred-restricted corpus must seed from its OWN first k
-        # vectors — ``vec_id < k`` intersected with the pred yields
-        # fewer than k live seeds (measured: a %5 sample at k=16 ran
-        # 4 effective cells, so every probe scanned the whole corpus).
-        # The k smallest in-corpus vec_ids keep the seed deterministic.
-        seed_ids = (
-            vecs.select("vec_id").distinct().orderBy("vec_id").limit(k)
-        )
-        cents = vecs.join(F.broadcast(seed_ids), "vec_id").select(
-            F.col("vec_id").alias("cid"), "pos", F.col("val").alias("cval")
-        )
-    # materialize (persist+count, ONE execution) per round instead of
-    # checkpoint_state (count + eager localCheckpoint = the plan runs
-    # twice): measured 26.8s vs 47.3s for the 32-cell/3-round chain at
-    # sf0.1 with bit-identical assignments (r14, VERDICT r13 #5);
-    # lineage depth stays bounded because rounds <= 3 everywhere and
-    # each round reads the previous round's cached frame.
-    for _ in range(rounds):
-        cents = materialize(recompute(assign(cents)))
-    # the stored pair is a session-shared view (read by every probe of
-    # this configuration): pin both frames out of the scratch FIFO
-    pair = (
-        materialize(assign(cents), pinned=True),
-        materialize(cents, pinned=True),
-    )
-    _KMEANS_PAIR_MEMO[key] = pair
-    return pair
+        return vecs, assign
+
+    def train() -> DataFrame:
+        vecs, assign = setup()
+
+        def recompute(assigned: DataFrame) -> DataFrame:
+            # r15: micro-unit BIGINT fold; cast(sum_long as double)/1e6
+            # and cast(sum_decimal(18,6) as double) are both the nearest
+            # double of the same exact sum, so the 6dp mean is
+            # bit-identical (an exact-6dp corpus skips the per-row
+            # BigDecimal round too)
+            micro = (
+                F.floor(F.col("val") * 1e6 + F.lit(0.5))
+                if normalized
+                else _micro6_long(F.col("val"))
+            )
+            return (
+                vecs.join(assigned, "vec_id")
+                .groupBy("cid", "pos")
+                .agg(
+                    F.round(
+                        F.sum(micro).cast("double") / 1e6 / F.count(F.lit(1)),
+                        6,
+                    ).alias("cval")
+                )
+            )
+
+        if pred is None:
+            cents = vecs.filter(F.col("vec_id") < k).select(
+                F.col("vec_id").alias("cid"), "pos", F.col("val").alias("cval")
+            )
+        else:
+            # r12: a pred-restricted corpus must seed from its OWN first
+            # k vectors — ``vec_id < k`` intersected with the pred
+            # yields fewer than k live seeds (measured: a %5 sample at
+            # k=16 ran 4 effective cells, so every probe scanned the
+            # whole corpus). The k smallest in-corpus vec_ids keep the
+            # seed deterministic.
+            seed_ids = (
+                vecs.select("vec_id").distinct().orderBy("vec_id").limit(k)
+            )
+            cents = vecs.join(F.broadcast(seed_ids), "vec_id").select(
+                F.col("vec_id").alias("cid"), "pos", F.col("val").alias("cval")
+            )
+        # materialize (persist+count, ONE execution) per round instead
+        # of checkpoint_state (count + eager localCheckpoint = the plan
+        # runs twice): measured 26.8s vs 47.3s for the 32-cell/3-round
+        # chain at sf0.1 with bit-identical assignments (r14, VERDICT
+        # r13 #5); lineage depth stays bounded because rounds <= 3
+        # everywhere and each round reads the previous round's cached
+        # frame.
+        for _ in range(rounds):
+            cents = materialize(recompute(assign(cents)))
+        return cents
+
+    cents = memo_table(spark, f"{key}:cents", train)
+    return memo_table(spark, f"{key}:assign", lambda: setup()[1](cents)), cents
 
 
 def _kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1724,11 +1703,7 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(50)
         .select("doc_id", F.row_number().over(Window.orderBy(F.desc("bm25"), "doc_id")).alias("r"))
     )
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("ev"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("se"),
-    )
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", *_vec_norm("ev", "se"))
     qv = e.filter(F.col("vec_id") == 0).select(
         F.col("ev").alias("qv"), F.col("se").alias("sq")
     )
@@ -1912,10 +1887,7 @@ def embedding_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     same triplet logic over candidate sets instead of the full scan.
     """
     e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("ev"),
-        "label",
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("se"),
+        "vec_id", "label", *_vec_norm("ev", "se")
     )
     anchors = e.filter(F.col("vec_id") % 199 == 0).select(
         F.col("vec_id").alias("a_id"),
@@ -1940,21 +1912,16 @@ def embedding_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             _cosine_prenorm("av", "ev", "sa", "se").alias("cosine"),
         )
     )
-    w = Window.partitionBy("a_id").orderBy(F.desc("cosine"), "vec_id")
-    pos = (
-        scored.filter(F.col("label") == F.col("a_label"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("a_id", F.col("vec_id").alias("pos_id"), F.col("cosine").alias("pos_cos"))
+    pos = _top_cosine(scored.filter(F.col("label") == F.col("a_label")), "a_id", 1).select(
+        "a_id", F.col("vec_id").alias("pos_id"), F.col("cosine").alias("pos_cos")
     )
-    neg = (
+    neg = _top_cosine(
         scored.filter(F.col("label") != F.col("a_label"))
         .join(F.broadcast(pos.select("a_id", "pos_cos")), "a_id")
-        .filter(F.col("cosine") > F.col("pos_cos"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("a_id", F.col("vec_id").alias("neg_id"), F.col("cosine").alias("neg_cos"))
-    )
+        .filter(F.col("cosine") > F.col("pos_cos")),
+        "a_id",
+        1,
+    ).select("a_id", F.col("vec_id").alias("neg_id"), F.col("cosine").alias("neg_cos"))
     return (
         pos.join(neg, "a_id", "left")
         .select(
@@ -2084,7 +2051,7 @@ def _duck_pq_trained_ctes(lut_pred: str = "vec_id % 97 = 0") -> str:
         parts.append(
             f"""p16_cw{t} AS (
   SELECT a.grp, e.sub, e.pos,
-         {_MICRO_MEAN_CW_TEMPLATE.format(div='//', col='e.dv')} AS cw
+         {_MICRO_MEAN_CW_TEMPLATE.format(msum='CAST(SUM(e.dv) * 1000000 AS BIGINT)', div='//')} AS cw
   FROM p16_expl e JOIN p16_a{t} a ON a.vec_id = e.vec_id AND a.sub = e.sub
   GROUP BY a.grp, e.sub, e.pos)"""
         )
@@ -2176,46 +2143,23 @@ def _pq_varr(
     micro-unit component arrays (``dvm[i]`` = CAST(dv*1e6 AS BIGINT) of
     pos = sub*_PQ_M + i + 1), memoized per (session, sf_dir, pred).
 
-    r16: the ONE fan-in table the codebook training rounds AND the
-    code assignment fold against broadcast codeword arrays — replacing
-    the (vec,pos)x(code,pos) exploded joins (n*64*K rows per pass)
-    with map-side integer HOFs, the same shape as _kmeans_pair's r15b
-    Lloyd assignment (guide §2.4/§2.2). Explicit AQE-exempt partition
-    count, sized so each task folds ~4096 subspace rows (the per-row
-    fold is K*_PQ_M integer ops — an 8x narrower row than the Lloyd
-    varr, hence the 8x larger rows-per-task target) and capped at
-    cluster parallelism."""
+    r16: the `_micro_varr` fan-in table the codebook training rounds
+    AND the code assignment fold against broadcast codeword arrays —
+    replacing the (vec,pos)x(code,pos) exploded joins (n*64*K rows per
+    pass) with map-side integer HOFs, the same shape as _kmeans_pair's
+    r15b Lloyd assignment (guide §2.4/§2.2). The per-row fold is
+    K*_PQ_M integer ops — an 8x narrower row than the Lloyd varr,
+    hence `_micro_varr`'s 8x larger rows-per-task target."""
     from grapho_spark.sparkutil import memo_table
 
     def build() -> DataFrame:
         e = load_table(spark, sf_dir, "embeddings")
         if pred is not None:
             e = e.filter(pred)
-        n_vecs = e.count()  # metadata-cheap columnar count
-        par = max(
-            1,
-            min(spark.sparkContext.defaultParallelism, n_vecs * _PQ_M // 4096 + 1),
+        expl = _pq_expl(spark, sf_dir, pred).select(
+            "vec_id", "sub", "pos", (F.col("dv") * 1000000).cast("long").alias("dvm")
         )
-        return (
-            _pq_expl(spark, sf_dir, pred)
-            .groupBy("vec_id", "sub")
-            .agg(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct(
-                                "pos",
-                                (F.col("dv") * 1000000)
-                                .cast("long")
-                                .alias("dvm"),
-                            )
-                        )
-                    ),
-                    lambda s: s.getField("dvm"),
-                ).alias("dvm")
-            )
-            .repartition(par, "vec_id")
-        )
+        return _micro_varr(e, expl)
 
     return memo_table(spark, f"pq_varr:{sf_dir}:{pred}", build)
 
@@ -2233,19 +2177,7 @@ def _pq_assign_hof(varr: DataFrame, book: DataFrame) -> DataFrame:
     row_number-over-(dist, grp) argmin with the identical tie-break."""
     barr = (
         book.groupBy("sub", "grp")
-        .agg(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            "pos",
-                            (F.col("cw") * 1000000).cast("long").alias("cwm"),
-                        )
-                    )
-                ),
-                lambda s: s.getField("cwm"),
-            ).alias("cwm")
-        )
+        .agg(_fan_in("pos", "cwm", (F.col("cw") * 1000000).cast("long")).alias("cwm"))
         .groupBy("sub")
         .agg(F.sort_array(F.collect_list(F.struct("grp", "cwm"))).alias("cbs"))
     )
@@ -2253,12 +2185,7 @@ def _pq_assign_hof(varr: DataFrame, book: DataFrame) -> DataFrame:
         "vec_id",
         "sub",
         "dvm",
-        F.expr(
-            """element_at(array_sort(transform(cbs, c -> struct(
-                 aggregate(zip_with(dvm, c.cwm, (x, y) -> (x - y) * (x - y)),
-                           CAST(0 AS BIGINT), (a, t) -> a + t) AS d,
-                 c.grp AS grp))), 1).grp"""
-        ).alias("grp"),
+        _argmin_fold("dvm", "cbs", "cwm", "grp", "(x - y) * (x - y)").alias("grp"),
     )
 
 
@@ -2289,20 +2216,10 @@ def _assign_to_cents(
     # r15: BIGINT nano-unit fold, same as _kmeans_pair's normalized
     # assign (the two must stay formula-identical so base-build and
     # append agree)
-    d = (
-        _normalized_vec_expl(spark, sf_dir, pred)
-        .join(F.broadcast(cents), "pos")
-        .groupBy("vec_id", "cid")
-        .agg(
-            F.sum(_sq_nano9_long(F.col("val"), F.col("cval"))).alias("dist")
-        )
+    d = _cell_dists(
+        _normalized_vec_expl(spark, sf_dir, pred), cents, "vec_id", "val", exact6=True
     )
-    w = Window.partitionBy("vec_id").orderBy("dist", "cid")
-    return (
-        d.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "cid")
-    )
+    return _topk(d, "vec_id", 1, "dist", "cid").select("vec_id", "cid")
 
 
 def _pq16_codebook(
@@ -2344,26 +2261,11 @@ def _pq16_codebook_impl(
     # COUNT(*) per (grp, sub, pos) — and therefore every codeword —
     # are bit-identical to the r15 join chain.
     varr = _pq_varr(spark, sf_dir, pred)
-    mean_dvm = _MICRO_MEAN_CW_SPARK.replace("CAST(dv * 1000000 AS BIGINT)", "dvm")
-
-    def recompute(assigned: DataFrame) -> DataFrame:
-        return (
-            assigned.select("grp", "sub", F.posexplode("dvm").alias("p0", "dvm"))
-            .groupBy(
-                "grp",
-                "sub",
-                (F.col("sub") * _PQ_M + F.col("p0") + 1).alias("pos"),
-            )
-            .agg(F.expr(mean_dvm).alias("cw"))
-        )
-
-    cw = recompute(
-        varr.select((F.col("vec_id") % _ANN_PQ_K).alias("grp"), "sub", "dvm")
-    )
+    cw = _codewords(varr.select((F.col("vec_id") % _ANN_PQ_K).alias("grp"), "sub", "dvm"))
     for _ in range(_ANN_PQ_TRAIN):
         # materialize, not checkpoint_state: same one-execution win as
         # _kmeans_pair's rounds (trains <= _ANN_PQ_TRAIN = 2 rounds)
-        cw = materialize(recompute(_pq_assign_hof(varr, cw)))
+        cw = materialize(_codewords(_pq_assign_hof(varr, cw)))
     return cw
 
 
@@ -2711,7 +2613,6 @@ def rebuild_ann_index(
     )
     if os.path.exists(marker):
         os.unlink(marker)
-    _KMEANS_PAIR_MEMO.clear()
     return ann_index_tables(spark, sf_dir, pred, cells=cells)
 
 
@@ -2753,18 +2654,9 @@ def _ann_probe(
     # multi-probe coarse routing against the stored centroids
     # (r15: BIGINT nano-unit fold — see _nano9_long; routing rank is
     # ordering-only, so the scaled integers decide identically)
-    q_dists = (
-        q_expl.join(F.broadcast(cents), "pos")
-        .groupBy("q_id", "cid")
-        .agg(
-            F.sum(_sq_nano9_long(F.col("qval"), F.col("cval"))).alias("dist")
-        )
-    )
-    w_route = Window.partitionBy("q_id").orderBy("dist", "cid")
-    route = (
-        q_dists.withColumn("rk", F.row_number().over(w_route))
-        .filter(F.col("rk") <= nprobe)
-        .select(F.col("q_id").alias("a_qid"), F.col("cid").alias("cell"))
+    q_dists = _cell_dists(q_expl, cents, "q_id", "qval", exact6=True)
+    route = _topk(q_dists, "q_id", nprobe, "dist", "cid").select(
+        F.col("q_id").alias("a_qid"), F.col("cid").alias("cell")
     )
     # per-query LUT from the stored trained codebook (r15: exact BIGINT
     # femto-units — qval IS a 6dp value, cw an exact 6dp decimal; the
@@ -2803,36 +2695,20 @@ def _ann_probe(
         .groupBy(F.col("l_qid").alias("q_id"), "vec_id")
         .agg(F.sum("dist").alias("adc_dist"))
     )
-    w_short = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
-    short = (
-        adc.withColumn("rn", F.row_number().over(w_short))
-        .filter(F.col("rn") <= _ANN_SHORTLIST)
-        .select("q_id", "vec_id")
+    short = _topk(adc, "q_id", _ANN_SHORTLIST, "adc_dist", "vec_id").select(
+        "q_id", "vec_id"
     )
     # exact-cosine re-rank of the shortlist against raw vectors
     # (r15: sqrt(self-dot) computed per VECTOR before the pair join,
     # not per pair — bit-identical, see _cosine_prenorm)
-    qv = e.filter(query_pred).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("sq"),
-    )
-    ev = e.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("ev"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("se"),
-    )
+    qv = _query_vecs(e, query_pred)
+    ev = e.select("vec_id", *_vec_norm("ev", "se"))
     rer = (
         ev.join(maybe_bc(short), "vec_id")
         .join(maybe_bc(qv), "q_id")
         .select("q_id", "vec_id", _cosine_prenorm("qv", "ev", "sq", "se").alias("cosine"))
     )
-    w_top = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        rer.withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "vec_id", "cosine")
-    )
+    return _top_cosine(rer, "q_id", 3)
 
 
 @query(
@@ -2910,43 +2786,11 @@ def embedding_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the index side reads stored codes (cheap); brute force is
     the expensive side and runs on the sampled query set, which is
     how production recall monitoring works at 100 TB."""
-    pq_top = embedding_ivfpq_indexed_knn(spark, sf_dir).select("q_id", "vec_id")
+    pq_top = embedding_ivfpq_indexed_knn(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("sq"),
-    )
-    base = e.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("ev"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("se"),
-    )
-    bf_scored = (
-        F.broadcast(q)
-        .crossJoin(base)
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .select("q_id", "vec_id", _cosine_prenorm("qv", "ev", "sq", "se").alias("cosine"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "vec_id")
-    bf_top = (
-        bf_scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "vec_id")
-    )
-    inter = pq_top.join(bf_top, ["q_id", "vec_id"])
-    matched = (
-        q.select("q_id")
-        .join(inter.groupBy("q_id").agg(F.count(F.lit(1)).alias("m")), "q_id", "left")
-        .select("q_id", F.coalesce("m", F.lit(0)).alias("m"))
-    )
-    return matched.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.round(F.sum("m") * F.lit(1.0) / (F.lit(3) * F.count(F.lit(1))), 6).alias(
-            "avg_recall"
-        ),
-        F.sum(F.when(F.col("m") == 3, 1).otherwise(0)).cast("long").alias("n_perfect"),
-    )
+    q = _query_vecs(e, F.col("vec_id") % 97 == 0)
+    bf_top = _exact_top(q, e.select("vec_id", *_vec_norm("ev", "se")))
+    return _recall_matched(q.select("q_id"), pq_top, bf_top).agg(*_recall_cols())
 
 
 # Scaled-sizing anchor (r12, VERDICT r11 #6): the health verdict's
@@ -3013,39 +2857,10 @@ def _ann_scaled_recall(
     )
     top = _ann_probe(
         spark, sf_dir, cents, book, codes, query_pred=query_pred, nprobe=nprobe
-    ).select("q_id", "vec_id")
-    q = e.filter(query_pred).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("sq"),
     )
-    base = e.filter(corpus_pred).select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("ev"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("se"),
-    )
-    bf = (
-        F.broadcast(q)
-        .crossJoin(base)
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .select("q_id", "vec_id", _cosine_prenorm("qv", "ev", "sq", "se").alias("cosine"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "vec_id")
-    bf_top = (
-        bf.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "vec_id")
-    )
-    inter = top.join(bf_top, ["q_id", "vec_id"])
-    matched = (
-        q.select("q_id")
-        .join(
-            inter.groupBy("q_id").agg(F.count(F.lit(1)).alias("m")),
-            "q_id",
-            "left",
-        )
-        .select("q_id", F.coalesce("m", F.lit(0)).alias("m"))
-    )
+    q = _query_vecs(e, query_pred)
+    bf_top = _exact_top(q, e.filter(corpus_pred).select("vec_id", *_vec_norm("ev", "se")))
+    matched = _recall_matched(q.select("q_id"), top, bf_top)
     # measured scan fraction: per-query routed-cell code rows / corpus
     cell_sizes = (
         codes.filter(F.col("sub") == 0)
@@ -3054,32 +2869,20 @@ def _ann_scaled_recall(
     )
     # re-derive the routing (same plan prefix as the probe; Catalyst
     # dedups the scan) — query-sample-sized
-    q_expl = (
-        e.filter(query_pred)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.expr(
-                "transform(CAST(embedding AS ARRAY<DOUBLE>), "
-                "x -> round(x / sqrt(aggregate(CAST(embedding AS ARRAY<DOUBLE>), "
-                "CAST(0.0 AS DOUBLE), (a, y) -> a + y * y)), 6))"
-            ).alias("nvec"),
-        )
-        .select("q_id", F.posexplode("nvec").alias("pos0", "qval"))
-        .select("q_id", (F.col("pos0") + 1).alias("pos"), "qval")
+    nq = e.filter(query_pred).select(
+        F.col("vec_id").alias("q_id"),
+        F.expr(
+            "transform(CAST(embedding AS ARRAY<DOUBLE>), "
+            "x -> round(x / sqrt(aggregate(CAST(embedding AS ARRAY<DOUBLE>), "
+            "CAST(0.0 AS DOUBLE), (a, y) -> a + y * y)), 6))"
+        ).alias("nvec"),
     )
     # r15: BIGINT nano-unit fold (exact-6dp operands; routing is
     # ordering-only) — see _sq_nano9_long
-    q_dists = (
-        q_expl.join(F.broadcast(cents), "pos")
-        .groupBy("q_id", "cid")
-        .agg(F.sum(_sq_nano9_long(F.col("qval"), F.col("cval"))).alias("dist"))
+    q_dists = _cell_dists(
+        _explode_pos(nq, "q_id", "nvec", "qval"), cents, "q_id", "qval", exact6=True
     )
-    w_route = Window.partitionBy("q_id").orderBy("dist", "cid")
-    routed = (
-        q_dists.withColumn("rk", F.row_number().over(w_route))
-        .filter(F.col("rk") <= nprobe)
-        .select("q_id", "cid")
-    )
+    routed = _topk(q_dists, "q_id", nprobe, "dist", "cid").select("q_id", "cid")
     scan = (
         routed.join(cell_sizes, F.col("cid") == F.col("cell"), "left")
         .groupBy("q_id")
@@ -3115,10 +2918,7 @@ def _ann_scaled_recall(
             F.lit(int(n)).cast("long").alias("n_vectors"),
             F.lit(cells).cast("long").alias("cells"),
             F.lit(nprobe).cast("long").alias("nprobe"),
-            F.count(F.lit(1)).alias("n_queries"),
-            F.round(
-                F.sum("m") * F.lit(1.0) / (F.lit(3) * F.count(F.lit(1))), 6
-            ).alias("avg_recall"),
+            *_recall_cols(perfect=False),
         )
         .crossJoin(F.broadcast(scan))
         .crossJoin(F.broadcast(ceiling))
@@ -3328,14 +3128,10 @@ def _nnd_edges(spark: SparkSession, va: DataFrame, k: int) -> DataFrame:
         .select("shard", F.col("vec_id").alias("src"), "dst")
         .distinct()
     )
-    w_top = Window.partitionBy("shard", "src").orderBy(F.desc("cos"), "dst")
-    edges = (
-        scored(seed_pairs)
-        .withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-    edges = checkpoint_state(edges)
+    def best(pairs: DataFrame) -> DataFrame:
+        return _topk(pairs, ["shard", "src"], k, F.desc("cos"), "dst")
+
+    edges = checkpoint_state(best(scored(seed_pairs)))
     b = _GRAPH_NND_SAMPLE
     for r in range(_GRAPH_NND_ROUNDS):
         und = (
@@ -3349,14 +3145,7 @@ def _nnd_edges(spark: SparkSession, va: DataFrame, k: int) -> DataFrame:
             )
             .distinct()
         )
-        w_s = Window.partitionBy("shard", "src").orderBy(
-            F.xxhash64("dst", F.lit(r)), "dst"
-        )
-        samp = (
-            und.withColumn("rn", F.row_number().over(w_s))
-            .filter(F.col("rn") <= b)
-            .drop("rn")
-        )
+        samp = _topk(und, ["shard", "src"], b, F.xxhash64("dst", F.lit(r)), "dst")
         cand = (
             samp.select("shard", F.col("src").alias("a"), F.col("dst").alias("m"))
             .join(
@@ -3369,15 +3158,13 @@ def _nnd_edges(spark: SparkSession, va: DataFrame, k: int) -> DataFrame:
             .select("shard", F.col("a").alias("src"), F.col("b").alias("dst"))
             .distinct()
         )
-        edges = (
-            edges.unionByName(scored(cand))
-            .groupBy("shard", "src", "dst")
-            .agg(F.max("cos").alias("cos"))
-            .withColumn("rn", F.row_number().over(w_top))
-            .filter(F.col("rn") <= k)
-            .drop("rn")
+        edges = checkpoint_state(
+            best(
+                edges.unionByName(scored(cand))
+                .groupBy("shard", "src", "dst")
+                .agg(F.max("cos").alias("cos"))
+            )
         )
-        edges = checkpoint_state(edges)
     return edges
 
 
@@ -3437,9 +3224,7 @@ def _closure_membership(
     assignment; the delta-append path routes batches through this)."""
     from pyspark.sql.types import DecimalType
 
-    vx = vecs.select(
-        "vec_id", F.posexplode("v").alias("pos0", "val")
-    ).select("vec_id", (F.col("pos0") + 1).alias("pos"), "val")
+    vx = _explode_pos(vecs, "vec_id", "v", "val")
     if eps <= 0.0:
         # r15: the primary assignment is ordering-only, so the dist
         # fold runs in exact BIGINT nano-units (argmin identical); the
@@ -3447,23 +3232,9 @@ def _closure_membership(
         # (1+eps)^2 threshold compares CAST-to-double dist VALUES —
         # reproducing those doubles from scaled longs adds a second
         # rounding that could flip an exact-boundary membership.
-        d_long = (
-            vx.join(F.broadcast(cents), "pos")
-            .groupBy("vec_id", "cid")
-            .agg(
-                F.sum(
-                    _nano9_long(
-                        (F.col("val") - F.col("cval"))
-                        * (F.col("val") - F.col("cval"))
-                    )
-                ).alias("dist")
-            )
-        )
-        w = Window.partitionBy("vec_id").orderBy("dist", "cid")
-        return (
-            d_long.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("vec_id", F.col("cid").cast("int").alias("shard"))
+        d_long = _cell_dists(vx, cents, "vec_id", "val")
+        return _topk(d_long, "vec_id", 1, "dist", "cid").select(
+            "vec_id", F.col("cid").cast("int").alias("shard")
         )
     d = (
         vx.join(F.broadcast(cents), "pos")
@@ -3672,12 +3443,7 @@ def _graph_adjacency(spark: SparkSession, tag: str) -> DataFrame:
     if not spark.catalog.tableExists(dname):
         return base.drop("gen")
     merged = base.unionByName(spark.table(dname))
-    w = Window.partitionBy("shard", "vec_id").orderBy(F.desc("gen"))
-    return (
-        merged.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn", "gen")
-    )
+    return _topk(merged, ["shard", "vec_id"], 1, F.desc("gen")).drop("gen")
 
 
 def ann_graph_health(
@@ -4063,30 +3829,12 @@ def _route_queries_to_shards(
     shard k-means trained with (centroids broadcast — they are tiny).
     cents=None means the single-shard build: everything routes to
     shard 0."""
-    from pyspark.sql.types import DecimalType
-
     if cents is None:
         return q.select(F.lit(0).alias("shard"), "q_id", "qv")
-    qx = q.select(
-        "q_id", F.posexplode("qv").alias("pos0", "qval")
-    ).select("q_id", (F.col("pos0") + 1).alias("pos"), "qval")
     # r15: BIGINT nano-unit fold (shard rank is ordering-only)
-    d = (
-        qx.join(F.broadcast(cents), "pos")
-        .groupBy("q_id", "cid")
-        .agg(
-            F.sum(
-                _nano9_long(
-                    (F.col("qval") - F.col("cval"))
-                    * (F.col("qval") - F.col("cval"))
-                )
-            ).alias("dist")
-        )
-    )
-    wq = Window.partitionBy("q_id").orderBy("dist", "cid")
+    d = _cell_dists(_explode_pos(q, "q_id", "qv", "qval"), cents, "q_id", "qval")
     return (
-        d.withColumn("rk", F.row_number().over(wq))
-        .filter(F.col("rk") <= r_shards)
+        _topk(d, "q_id", r_shards, "dist", "cid")
         .select(F.col("cid").cast("int").alias("shard"), "q_id")
         .join(q, "q_id")
         .select("shard", "q_id", "qv")
@@ -4163,16 +3911,11 @@ def _graph_recall_frame(
 
     routed = materialize(routed)
     res = _graph_beam_results(spark, graph, vecs, routed, k=3)
-    w_g = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "vec_id")
-    top = (
-        # a closure replica found in BOTH probed shards is one result,
-        # not two — dedup by (q_id, vec_id) before ranking so a
-        # duplicate can't burn two of the three top-k slots
-        res.groupBy("q_id", "vec_id")
-        .agg(F.max("cosine").alias("cosine"))
-        .withColumn("rn", F.row_number().over(w_g))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "vec_id")
+    # a closure replica found in BOTH probed shards is one result, not
+    # two — dedup by (q_id, vec_id) before ranking so a duplicate can't
+    # burn two of the three top-k slots
+    top = _top_cosine(
+        res.groupBy("q_id", "vec_id").agg(F.max("cosine").alias("cosine")), "q_id", 3
     )
     visited = (
         res.groupBy("q_id", "shard")
@@ -4180,25 +3923,9 @@ def _graph_recall_frame(
         .groupBy("q_id")
         .agg(F.sum("v1").alias("visited"))
     )
-    qv = q.select("q_id", F.col("qv").alias("qv_")).withColumn("sq", _snorm("qv_"))
-    base = e.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("ev"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("se"),
+    bf_top = _exact_top(
+        _query_vecs(e, query_pred), e.select("vec_id", *_vec_norm("ev", "se"))
     )
-    bf = (
-        F.broadcast(qv)
-        .crossJoin(base)
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .select("q_id", "vec_id", _cosine_prenorm("qv_", "ev", "sq", "se").alias("cosine"))
-    )
-    w_bf = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "vec_id")
-    bf_top = (
-        bf.withColumn("rn", F.row_number().over(w_bf))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "vec_id")
-    )
-    inter = top.join(bf_top, ["q_id", "vec_id"])
     # routing ceiling (the scaled-sizing dial's honesty column): the
     # fraction of TRUE top-3 neighbors living in a shard the query
     # probed — the beam can never beat it, so recall ≈ ceiling proves
@@ -4219,12 +3946,7 @@ def _graph_recall_frame(
     )
     memb_rows = graph.count()
     return (
-        q.select("q_id")
-        .join(
-            inter.groupBy("q_id").agg(F.count(F.lit(1)).alias("m")),
-            "q_id",
-            "left",
-        )
+        _recall_matched(q.select("q_id"), top, bf_top)
         .join(visited, "q_id", "left")
         .join(reachable, "q_id", "left")
         .agg(
@@ -4232,12 +3954,7 @@ def _graph_recall_frame(
             F.lit(int(_GRAPH_EF)).cast("long").alias("ef"),
             F.lit(int(n_shards)).cast("long").alias("n_shards"),
             F.lit(int(r_shards)).cast("long").alias("probed_shards"),
-            F.count(F.lit(1)).alias("n_queries"),
-            F.round(
-                F.sum(F.coalesce("m", F.lit(0)))
-                / (F.lit(3.0) * F.count(F.lit(1))),
-                6,
-            ).alias("avg_recall"),
+            *_recall_cols(perfect=False),
             F.round(
                 F.sum(F.coalesce("reach", F.lit(0)))
                 / (F.lit(3.0) * F.count(F.lit(1))),
@@ -4478,32 +4195,12 @@ def embedding_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: assignment is the k-means broadcast argmin; the in-cell
     scoring joins each query to n_probe/k of the corpus; brute force
     (the expensive truth side) runs on the sampled query set only."""
-    e = load_table(spark, sf_dir, "embeddings")
-    base = e.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("ev"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("se"),
-    )
-    q = e.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("sq"),
-    )
-    bf_scored = (
-        F.broadcast(q)
-        .crossJoin(base)
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .select("q_id", "vec_id", _cosine_prenorm("qv", "ev", "sq", "se").alias("cosine"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "vec_id")
-    bf_top = (
-        bf_scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "vec_id")
-    )
     from grapho_spark.sparkutil import materialize
 
-    bf_top = materialize(bf_top)
+    e = load_table(spark, sf_dir, "embeddings")
+    base = e.select("vec_id", *_vec_norm("ev", "se"))
+    q = _query_vecs(e, F.col("vec_id") % 97 == 0)
+    bf_top = materialize(_exact_top(q, base).select("q_id", "vec_id"))
 
     # train the dial configurations' Lloyd chains concurrently — they
     # are independent and memoized per config (VERDICT r13 #5)
@@ -4515,35 +4212,18 @@ def embedding_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k, rounds, _ in _DIAL_CONFIGS
         ]
     )
-    outs = []
+    q_expl = _explode_pos(
+        e.filter(F.col("vec_id") % 97 == 0).withColumnRenamed("vec_id", "q_id"),
+        "q_id",
+        "embedding",
+        "val",
+    )
+    out = None
     for k, rounds, nprobe in _DIAL_CONFIGS:
         assign, cents = _kmeans_pair(spark, sf_dir, k, rounds, normalized=False)
-        q_expl = (
-            e.filter(F.col("vec_id") % 97 == 0)
-            .select(
-                F.col("vec_id").alias("q_id"),
-                F.posexplode("embedding").alias("pos0", "val"),
-            )
-            .select("q_id", (F.col("pos0") + 1).alias("pos"), "val")
-        )
         # r15: BIGINT nano-unit fold (route rank is ordering-only)
-        q_dists = (
-            q_expl.join(F.broadcast(cents), "pos")
-            .groupBy("q_id", "cid")
-            .agg(
-                F.sum(
-                    _nano9_long(
-                        (F.col("val") - F.col("cval")) * (F.col("val") - F.col("cval"))
-                    )
-                ).alias("dist")
-            )
-        )
-        w_route = Window.partitionBy("q_id").orderBy("dist", "cid")
-        route = (
-            q_dists.withColumn("rk", F.row_number().over(w_route))
-            .filter(F.col("rk") <= nprobe)
-            .select("q_id", "cid")
-        )
+        q_dists = _cell_dists(q_expl, cents, "q_id", "val")
+        route = _topk(q_dists, "q_id", nprobe, "dist", "cid").select("q_id", "cid")
         cellmates = assign.withColumnRenamed("vec_id", "c_vid")
         cell_scored = (
             F.broadcast(route.join(q, "q_id"))
@@ -4552,32 +4232,10 @@ def embedding_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(base, F.col("c_vid") == base.vec_id)
             .select("q_id", "vec_id", _cosine_prenorm("qv", "ev", "sq", "se").alias("cosine"))
         )
-        cell_top = (
-            cell_scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 3)
-            .select("q_id", "vec_id")
-        )
-        inter = cell_top.join(bf_top, ["q_id", "vec_id"])
-        matched = (
-            q.select("q_id")
-            .join(
-                inter.groupBy("q_id").agg(F.count(F.lit(1)).alias("m")),
-                "q_id",
-                "left",
-            )
-            .select("q_id", F.coalesce("m", F.lit(0)).alias("m"))
-        )
-        agg = matched.agg(
-            F.count(F.lit(1)).alias("n_queries"),
-            F.round(
-                F.sum("m") * F.lit(1.0) / (F.lit(3) * F.count(F.lit(1))), 6
-            ).alias("avg_recall"),
-            F.sum(F.when(F.col("m") == 3, 1).otherwise(0))
-            .cast("long")
-            .alias("n_perfect"),
-        )
-        outs.append(
-            agg.select(
+        one = (
+            _recall_matched(q.select("q_id"), _top_cosine(cell_scored, "q_id", 3), bf_top)
+            .agg(*_recall_cols())
+            .select(
                 F.lit(k).alias("cells"),
                 F.lit(rounds).alias("lloyd_rounds"),
                 F.lit(nprobe).alias("n_probe"),
@@ -4586,9 +4244,7 @@ def embedding_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_perfect",
             )
         )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
+        out = one if out is None else out.unionByName(one)
     return out
 
 
@@ -4620,22 +4276,12 @@ def ann_index_stream_tables(spark: SparkSession, sf_dir: str):
         cents, book, _ = ann_index_tables(spark, sf_dir)
         cents_arr = (
             cents.groupBy("cid")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "cval"))),
-                    lambda s: s.getField("cval"),
-                ).alias("cvec")
-            )
+            .agg(_fan_in("pos", "cval").alias("cvec"))
             .agg(F.sort_array(F.collect_list(F.struct("cid", "cvec"))).alias("cents"))
         )
         book_arr = (
             book.groupBy("sub", "grp")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "cw"))),
-                    lambda s: s.getField("cw"),
-                ).alias("cwv")
-            )
+            .agg(_fan_in("pos", "cw").alias("cwv"))
             .agg(
                 F.sort_array(F.collect_list(F.struct("sub", "grp", "cwv"))).alias(
                     "books"
@@ -4648,12 +4294,7 @@ def ann_index_stream_tables(spark: SparkSession, sf_dir: str):
         _, _, codes = ann_index_tables(spark, sf_dir)
         return (
             codes.groupBy("cell", "vec_id")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("sub", "code"))),
-                    lambda s: s.getField("code"),
-                ).alias("codes")
-            )
+            .agg(_fan_in("sub", "code").alias("codes"))
             .groupBy("cell")
             .agg(F.sort_array(F.collect_list(F.struct("vec_id", "codes"))).alias("members"))
         )
@@ -4689,8 +4330,7 @@ def ann_probe_mapside(
     so the map-side folds equal the batch groupBy sums bit-for-bit —
     the oracle is the same generated SQL the batch probe family uses,
     checked by value hash."""
-    ed = "CAST(embedding AS ARRAY<DOUBLE>)"
-    dot = _SPARK_DOT.format(a=ed, b=ed)
+    dot = _SPARK_DOT.format(a=_EMB_D, b=_EMB_D)
     # r16 (guide §2.6/§1.2): the per-row probe folds below are
     # heavyweight INTERPRETED expressions (~17ms/row measured at
     # sf0.1), and a query micro-batch arriving as one file/offset range
@@ -4703,7 +4343,7 @@ def ann_probe_mapside(
     q = (
         q_df.select(
             F.col("vec_id").alias("q_id"),
-            F.expr(f"transform({ed}, x -> round(x / sqrt({dot}), 6))").alias("nq"),
+            F.expr(f"transform({_EMB_D}, x -> round(x / sqrt({dot}), 6))").alias("nq"),
         )
         .withColumn("jk", F.lit(1))
         .join(F.broadcast(static_cb), "jk")
@@ -4860,16 +4500,12 @@ def _semdedup_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair join AND the dial read one materialized copy (the
     project-collapse trap would otherwise recompute the decimal
     distance agg + window once per consumer)."""
-    from pyspark.sql.types import DecimalType
-
     from grapho_spark.sparkutil import memo_table
 
     def build() -> DataFrame:
         assign, cents = _kmeans_pair(spark, sf_dir, 4, 1)
         e = load_table(spark, sf_dir, "embeddings")
-        vecs = e.select(
-            "vec_id", F.posexplode("embedding").alias("pos0", "val")
-        ).select("vec_id", (F.col("pos0") + 1).alias("pos"), "val")
+        vecs = _explode_pos(e, "vec_id", "embedding", "val")
         # r15: BIGINT nano-unit fold (the per-cell centroid-distance
         # rank is ordering-only; dist never leaves the frame)
         own = (
@@ -4963,11 +4599,7 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15: sqrt(self-dot) hoisted to the vector table — computed once
     # per vector, not once per pair (the per-pair fold is 3 aggregates
     # of which 2 are per-vector; see _cosine_prenorm, bit-identical)
-    ev = e.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("ev"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("sn"),
-    )
+    ev = e.select("vec_id", *_vec_norm("ev", "sn"))
     later = (
         ranked.join(ev, "vec_id")
         .select(
@@ -5080,11 +4712,7 @@ def embedding_semdedup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "embeddings")
     ranked = _semdedup_ranked(spark, sf_dir)
-    ev = e.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("ev"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("sn"),
-    )
+    ev = e.select("vec_id", *_vec_norm("ev", "sn"))
     a = (
         ranked.filter(F.col("vec_id") % 7 == 0)
         .join(ev, "vec_id")
@@ -5208,11 +4836,7 @@ def corpus_semantic_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     assign, _ = _kmeans_pair(spark, sf_dir, 4, 1)
     e = load_table(spark, sf_dir, "embeddings")
-    ev = e.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("ev"),
-        _snorm("CAST(embedding AS ARRAY<DOUBLE>)").alias("sn"),
-    )
+    ev = e.select("vec_id", *_vec_norm("ev", "sn"))
     split_bucket = F.conv(
         F.substring(F.md5(F.col("vec_id").cast("string")), 1, 6), 16, 10
     ).cast("long") % 100

@@ -1762,8 +1762,6 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_ROUNDS = 8
 BPE_WORD_RE = "[a-z]+"
 
-_BPE_MEMO: dict = {}
-
 
 def _bpe_train(spark: SparkSession, sf_dir: str):
     """(merges, vocab) after BPE_ROUNDS greedy merge rounds.
@@ -1775,15 +1773,24 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     each round is a vocab-sized pair count + a 1-row argmax broadcast
     back onto the vocab table. checkpoint_state pins per-round state
     so round N does not replay rounds 1..N-1 (the iterative-loop
-    lineage lesson, PERF.md)."""
+    lineage lesson, PERF.md). Both frames are session memo tables
+    (sparkutil.memo_table), trained once per (session, sf_dir)."""
+    from functools import cache
+
+    from grapho_spark.sparkutil import memo_table
+
+    train = cache(lambda: _bpe_rounds(spark, sf_dir))
+    return (
+        memo_table(spark, f"bpe_merges:{sf_dir}", lambda: train()[0]),
+        memo_table(spark, f"bpe_vocab:{sf_dir}", lambda: train()[1]),
+    )
+
+
+def _bpe_rounds(spark: SparkSession, sf_dir: str):
+    """(merges, vocab) frames of the BPE_ROUNDS training loop."""
     from functools import reduce
 
     from grapho_spark.sparkutil import checkpoint_state, materialize
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _BPE_MEMO.get(key)
-    if got is not None:
-        return got
 
     d = load_table(spark, sf_dir, "documents")
     wc = (
@@ -1858,18 +1865,8 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
             )
         )
 
-    # session-shared views (stored in _BPE_MEMO): pinned out of the
-    # scratch-persist FIFO (r16)
-    merges = materialize(
-        reduce(lambda a, b: a.unionAll(b), winners).filter(F.col("pair_count") > 0),
-        pinned=True,
-    )
-    vocab = materialize(
-        seg.select("w", "cnt", F.size(F.split("seg", " ")).alias("n_pieces")),
-        pinned=True,
-    )
-    _BPE_MEMO[key] = (merges, vocab)
-    return merges, vocab
+    merges = reduce(lambda a, b: a.unionAll(b), winners).filter(F.col("pair_count") > 0)
+    return merges, seg.select("w", "cnt", F.size(F.split("seg", " ")).alias("n_pieces"))
 
 
 def _duck_bpe_ctes() -> str:

@@ -21,8 +21,8 @@ import threading as _threading
 # always CORRECT (a plain persist recomputes from lineage on re-use;
 # nothing checkpoint-truncated is ever registered here) — it only
 # trades recompute time, and an entry old enough to be evicted belongs
-# to a long-finished query. Session-shared views (memo_table, the
-# kmeans pair memo) are registered pinned and never evicted.
+# to a long-finished query. Session-shared views (memo_table) are
+# registered pinned and never evicted.
 _SCRATCH_PERSISTS: list[DataFrame] = []
 _SCRATCH_LOCK = _threading.Lock()
 _SCRATCH_CAP = max(8, int(_os.environ.get("SPARK_GRAFT_SCRATCH_PERSISTS", "48")))
@@ -46,13 +46,21 @@ def materialize(df: DataFrame, pinned: bool = False) -> DataFrame:
     ``pinned=True`` marks a session-shared view (stored in a
     cross-call memo): it is exempt from the bounded scratch-persist
     FIFO above and survives for the session. Callers that first
-    materialized a frame as scratch and then pin it (the kmeans pair
-    memo pins its last round's frame) get the registry entry upgraded.
+    materialized a frame as scratch and then pin it (a memo_table
+    builder returning a materialized frame) get the registry entry
+    upgraded.
+
+    A failing count unpersists the frame before the error propagates:
+    it was never registered, so nothing else would release it.
     """
     from pyspark import StorageLevel
 
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
+    try:
+        df.count()
+    except BaseException:
+        df.unpersist(blocking=True)
+        raise
     evict: list[DataFrame] = []
     with _SCRATCH_LOCK:
         if pinned:

@@ -302,8 +302,11 @@ def ann_build_time(spark, sf_dir: str) -> float:
     marker = scratch_path("grapho_spark_index", f"_BUILD_OK_{tag}")
     if os.path.exists(marker):
         os.unlink(marker)
-    emb._KMEANS_PAIR_MEMO.clear()
-    for k in [k for k in sparkutil._MEMO if f"norm_vec_expl:{sf_dir}" in k[1]]:
+    for k in [
+        k
+        for k in sparkutil._MEMO
+        if k[1].startswith((f"kmeans:{sf_dir}:", f"norm_vec_expl:{sf_dir}:"))
+    ]:
         del sparkutil._MEMO[k]
     t0 = time.perf_counter()
     emb.ann_index_tables(spark, sf_dir)
