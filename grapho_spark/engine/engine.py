@@ -11,9 +11,17 @@ declared-semantics fixes catalogued in SURVEY.md §1.3/§7:
   (server.go:609-614), node refs resolve by direct ID or first
   property-match (server.go:745-765; made deterministic via smallest
   ID).
-- UPDATE/DELETE/MATCH WHERE: conjunctive equality only; a key missing
-  from the schema matches nothing (server.go:779-782); ``null``
-  matches stored nulls (server.go:793-797 — eqNullSafe).
+- UPDATE/DELETE/MATCH WHERE: the reference's conjunctive equality,
+  extended to a conjunction of OR-groups of =/</>/<>/IN predicates; a
+  key missing from the schema matches nothing (server.go:779-782);
+  ``null`` matches stored nulls (server.go:793-797 — eqNullSafe).
+  One binder, ``_bind_where``, resolves every key and coerces every
+  literal ONCE per statement into a bound tree, and three lowerings
+  read that tree: a Spark ``Column`` (``_where_col``), a row test for
+  pure-buffer DML and endpoint refs (``_row_test``) and zone-pruning
+  members (``zones.compile_pruning_groups``). Invariant: every leaf
+  of every lowering returns true or false, never NULL, so NOT is
+  plain negation.
 - Declared-semantics divergences (enforced here, absent in the
   reference): typed coercion by catalog type, applied DEFAULTs, real
   NOT NULL (explicit null rejected), UNIQUE/PK guards, enum value
@@ -41,6 +49,7 @@ double-persistence replay conflict (server.go:47-68, SURVEY.md §3-B).
 from __future__ import annotations
 
 import json
+import operator
 import os
 import shutil
 import tempfile
@@ -290,51 +299,180 @@ def _having_value(lit: "ast.Literal", dt: ST.DataType, name: str) -> object:
     return lit.text
 
 
-def _having_member(
-    out: DataFrame, p: "ast.Property | ast.PredGroup", allowed: dict[str, str]
-) -> Column:
-    """One HAVING disjunction member: leaf comparison over a resolved
-    result column, or a nested parenthesized group. Unknown names are
-    ERRORS (the post-aggregate namespace is closed — exactly the set
-    ORDER BY enforces), unlike WHERE's missing-prop-matches-nothing
-    reference rule which applies to open row schemas."""
-    if isinstance(p, ast.PredGroup):
-        sub = _having_pred(out, p.items, allowed)
-        return ~sub if p.negated else sub
-    if p.name not in allowed:
-        raise EngineError(
-            f"HAVING field {p.name!r} is not a group key or aggregate "
-            f"alias of this RETURN (available: {sorted(set(allowed))})"
-        )
-    col_name = allowed[p.name]
-    dt = out.schema[col_name].dataType
-    if p.op == "in":
-        vals = [_having_value(v, dt, p.name) for v in p.in_values]
-        one = _in_pred(F.col(col_name), vals)
-    else:
-        v = _having_value(p.value, dt, p.name)
-        one = _cmp(F.col(col_name), p.op, F.lit(v).cast(dt))
-    return ~one if p.negated else one
+def _bind(items: tuple, bind_leaf) -> list[list]:
+    """The bound tree of a WHERE/HAVING item list: its conjunction of
+    OR-groups, each leaf bound by ``bind_leaf`` (which resolves the
+    key and coerces the literal, or raises), nested groups recursed."""
+    return [
+        [
+            zn.Sub(_bind(p.items, bind_leaf), p.negated)
+            if isinstance(p, ast.PredGroup)
+            else bind_leaf(p)
+            for p in group
+        ]
+        for group in _where_groups(items)
+    ]
 
 
-def _having_pred(
-    out: DataFrame,
-    items: tuple["ast.Property | ast.PredGroup", ...],
-    allowed: dict[str, str],
-) -> Column:
-    """HAVING predicate (r12): the WHERE conjunction-of-OR-groups
-    encoding compiled against post-aggregation result columns. A plain
-    ``filter`` after the agg — Catalyst keeps the partial-agg shape
-    and the filter never blocks pushdown below the aggregate (it
-    can't: it reads aggregate outputs)."""
+def _coerce_where_value(p: "ast.Property", spec: FieldSpec, name: str) -> object:
+    """A WHERE leaf's literal coerced by the field's catalog type (a
+    list for ``IN``)."""
+    if p.op == "in" and spec.type.elem is not None:
+        raise EngineError(f"IN is not supported on array field {name!r}")
+    try:
+        if p.op == "in":
+            return [coerce_literal(v, spec.type, name) for v in p.in_values]
+        return coerce_literal(p.value, spec.type, name)
+    except CoercionError as e:
+        raise EngineError(str(e)) from e
+
+
+def _bind_where(
+    where: tuple,
+    elements: list[tuple[str | None, dict[str, FieldSpec], list[str]]],
+) -> list[list]:
+    """THE WHERE binder: resolve every key and coerce every literal
+    once against the pattern ``elements`` — ``(alias, field specs,
+    columns)`` each; one element for node MATCH, DML and endpoint
+    refs, several for chain and variable-length MATCH. A qualified
+    key ``a.field`` targets exactly the element aliased ``a``; an
+    unqualified key targets EVERY element declaring the field (the
+    leaf is their conjunction). A key no element resolves binds to a
+    Dead member — FALSE, the reference's missing-key-matches-nothing
+    rule (server/server.go:779-782)."""
+
+    def leaf(p: "ast.Property") -> tuple:
+        q, f = p.name.split(".", 1) if "." in p.name else (None, p.name)
+        owners = []
+        for i, (alias, specs, columns) in enumerate(elements):
+            spec = specs.get(f)
+            if (q is not None and q != alias) or spec is None or f not in columns:
+                continue
+            owners.append(
+                (i, f, spark_type(spec.type), _coerce_where_value(p, spec, f))
+            )
+        if not owners:
+            return zn.Dead(p, p.negated)
+        return zn.Leaf(p.op, tuple(owners), p.negated)
+
+    return _bind(where, leaf)
+
+
+def _bind_having(
+    items: tuple, out: DataFrame, allowed: dict[str, str]
+) -> list[list]:
+    """HAVING binds against the closed set of result columns: unknown
+    names are ERRORS (exactly the set ORDER BY enforces), unlike
+    WHERE's missing-key-matches-nothing rule for open row schemas;
+    literals coerce by the result column's Spark type. It lowers to a
+    plain ``filter`` after the agg: Catalyst keeps the partial-agg
+    shape (the filter reads aggregate outputs, so it cannot block
+    pushdown below the aggregate)."""
+
+    def leaf(p: "ast.Property") -> tuple:
+        if p.name not in allowed:
+            raise EngineError(
+                f"HAVING field {p.name!r} is not a group key or aggregate "
+                f"alias of this RETURN (available: {sorted(set(allowed))})"
+            )
+        col = allowed[p.name]
+        dt = out.schema[col].dataType
+        if p.op == "in":
+            val = [_having_value(v, dt, p.name) for v in p.in_values]
+        else:
+            val = _having_value(p.value, dt, p.name)
+        return zn.Leaf(p.op, ((0, col, dt, val),), p.negated)
+
+    return _bind(items, leaf)
+
+
+def _where_col(groups: list, aliases: list[str] | None = None) -> Column:
+    """The Spark ``Column`` lowering of a bound tree. Columns are the
+    bare field names, or ``<alias>_<field>`` over the alias-prefixed
+    chain/var-length columns. ``=`` is null-safe equality
+    (server.go:793-797); ``<``/``>``/``<>`` use guarded SQL comparison
+    (see ``_cmp``); ``IN`` compiles to a pushable In filter (see
+    ``_in_pred``); a Dead member is FALSE. Every leaf is TOTAL, so NOT
+    is plain negation (never a three-valued surprise on DELETE's
+    ``~pred`` keep side). Catalyst constant-folds the FALSE members
+    away, so pushdown is unaffected."""
     pred = F.lit(True)
-    for group in _where_groups(items):
+    for group in groups:
         gpred: Column | None = None
-        for p in group:
-            one = _having_member(out, p, allowed)
+        for m in group:
+            if isinstance(m, zn.Sub):
+                one = _where_col(m.groups, aliases)
+            elif isinstance(m, zn.Dead):
+                one = F.lit(False)
+            else:
+                one = None
+                for i, f, dt, val in m.owners:
+                    col = F.col(f"{aliases[i]}_{f}" if aliases else f)
+                    x = (
+                        _in_pred(col, val)
+                        if m.op == "in"
+                        else _cmp(col, m.op, F.lit(val).cast(dt))
+                    )
+                    one = x if one is None else one & x
+            one = ~one if m.negated else one
             gpred = one if gpred is None else (gpred | one)
         pred = pred & (gpred if gpred is not None else F.lit(False))
     return pred
+
+
+_ROW_CMP = {
+    "<": operator.lt,
+    ">": operator.gt,
+    "<=": operator.le,
+    ">=": operator.ge,
+    "<>": operator.ne,
+}
+_TIMESTAMP = ST.TimestampType()
+
+
+def _row_holds(op: str, got: object, val: object) -> bool:
+    """One leaf comparison with ``_cmp``/``_in_pred`` semantics."""
+    if op == "in":
+        return any(_row_holds("=", got, v) for v in val)
+    if got is None or val is None:
+        return op == "=" and got is val
+    return got == val if op == "=" else _ROW_CMP[op](got, val)
+
+
+def _row_test(groups: list, aliases: list[str] | None = None):
+    """The row-test lowering of a bound tree: ``callable(row) ->
+    bool`` over row dicts keyed like ``_where_col``'s columns, with
+    the same semantics. Pure-buffer DML and endpoint refs use it:
+    point DML on unflushed in-memory rows is the reference's own
+    execution model (Go maps on one machine), and a distributed job
+    over a 4-row createDataFrame costs ~0.5s per statement.
+    Timestamps compare as the instants Spark stores — epoch
+    microseconds, as ``TimestampType().toInternal`` computes them —
+    so values with and without a UTC offset order like they do in
+    the ``Column`` lowering."""
+
+    def member(m):
+        if isinstance(m, zn.Sub):
+            test = _row_test(m.groups, aliases)
+        elif isinstance(m, zn.Dead):
+            test = lambda r: False  # noqa: E731
+        else:
+            checks = []
+            for i, f, dt, val in m.owners:
+                norm = (
+                    _TIMESTAMP.toInternal
+                    if isinstance(dt, ST.TimestampType)
+                    else (lambda v: v)
+                )
+                val = [norm(v) for v in val] if m.op == "in" else norm(val)
+                checks.append((f"{aliases[i]}_{f}" if aliases else f, norm, val))
+            test = lambda r: all(  # noqa: E731
+                _row_holds(m.op, norm(r.get(key)), val) for key, norm, val in checks
+            )
+        return (lambda r: not test(r)) if m.negated else test
+
+    compiled = [[member(m) for m in group] for group in groups]
+    return lambda r: all(any(t(r) for t in g) for g in compiled)
 
 
 def _id_sort_key() -> list[Column]:
@@ -433,7 +571,7 @@ def _apply_order_limit(
         out = out.agg(F.count(F.lit(1)).alias("n_rows"))
         if getattr(stmt, "having", ()):
             out = out.filter(
-                _having_pred(out, stmt.having, {"n_rows": "n_rows"})
+                _where_col(_bind_having(stmt.having, out, {"n_rows": "n_rows"}))
             )
         return out
     if stmt.return_agg:
@@ -445,7 +583,9 @@ def _apply_order_limit(
         alias = f"{func.lower()}_{fname.replace('.', '_')}"
         out = out.agg(_AGG_FNS[func](F.col(resolved)).alias(alias))
         if getattr(stmt, "having", ()):
-            out = out.filter(_having_pred(out, stmt.having, {alias: alias}))
+            out = out.filter(
+                _where_col(_bind_having(stmt.having, out, {alias: alias}))
+            )
         return out
     if stmt.return_aggs:
         # Grouped-aggregate RETURN: the return fields are the group
@@ -494,7 +634,7 @@ def _apply_order_limit(
         # namespace ORDER BY resolves against. Applied before ORDER
         # BY/LIMIT — SQL clause order.
         if getattr(stmt, "having", ()):
-            out = out.filter(_having_pred(out, stmt.having, allowed))
+            out = out.filter(_where_col(_bind_having(stmt.having, out, allowed)))
         user_cols = []
         for name, desc in stmt.order_by:
             if name not in allowed:
@@ -2102,27 +2242,6 @@ class GraphEngine:
             return buf_df
         return self.spark.createDataFrame([], tab.schema)
 
-    def _compile_prune(
-        self,
-        where,
-        specs: dict[str, FieldSpec],
-        columns: list[str],
-        alias: str | None = None,
-    ) -> list | None:
-        """WHERE compiled to zone-prunable conjunct groups, or None
-        when pruning is off / nothing prunable survives."""
-        if not where or not self.zone_stats:
-            return None
-        return zn.compile_pruning_groups(
-            where,
-            specs,
-            columns,
-            alias,
-            self._resolve_prop_name,
-            coerce_literal,
-            self._coerce_in_values,
-        )
-
     def _pruned_merged_df(
         self, key: tuple[str, str], tab: _Table, groups: list | None
     ) -> DataFrame | None:
@@ -2152,6 +2271,31 @@ class GraphEngine:
         df = self._compose_mut_parts(tab, start)
         buf_df = self._buffer_df(tab)
         return df.unionByName(buf_df) if buf_df is not None else df
+
+    def _element_scan(
+        self,
+        key: tuple[str, str],
+        alias: str,
+        where: list,
+        i: int,
+        nullable: bool,
+    ) -> DataFrame:
+        """Pattern element ``i``'s live view for chain and
+        variable-length MATCH, every column prefixed ``<alias>_``. Its
+        base scan is zone/bloom-pruned by the WHERE groups that bind
+        exclusively to it; on a NULLABLE side (at/after an OPTIONAL
+        hop, or an optional endpoint) only predicates that also reject
+        the NULL padding qualify (see zones.compile_chain_pruning_groups)."""
+        df = None
+        if where and self.zone_stats:
+            df = self._pruned_merged_df(
+                key,
+                self.tables[key],
+                zn.compile_chain_pruning_groups(where, i, nullable),
+            )
+        if df is None:
+            df = self._merged_df(key)
+        return df.select(*[F.col(c).alias(f"{alias}_{c}") for c in df.columns])
 
     # --------------------------------------------------------- helpers
 
@@ -2224,258 +2368,6 @@ class GraphEngine:
             if bf is not None and row.get(fname) is not None:
                 bf.put(row[fname])
 
-    def _resolve_prop_name(
-        self, p: ast.Property, alias: str | None
-    ) -> str | None:
-        """Resolve an (optionally alias-qualified) WHERE key against a
-        single element: ``a.field`` matches only when ``a`` is this
-        element's alias; an unqualified name passes through. None =
-        this predicate cannot match this element."""
-        if "." not in p.name:
-            return p.name
-        q, f = p.name.split(".", 1)
-        return f if alias is not None and q == alias else None
-
-    def _coerce_in_values(
-        self, p: ast.Property, spec: FieldSpec, name: str
-    ) -> list:
-        if spec.type.elem is not None:
-            raise EngineError(
-                f"IN is not supported on array field {name!r}"
-            )
-        try:
-            return [coerce_literal(v, spec.type, name) for v in p.in_values]
-        except CoercionError as e:
-            raise EngineError(str(e)) from e
-
-    def _py_where(
-        self,
-        where: tuple[ast.Property, ...],
-        specs: dict[str, FieldSpec],
-        columns: list[str],
-        alias: str | None = None,
-    ):
-        """Driver-side twin of ``_where_pred`` for PURE-BUFFER tables
-        (never flushed, never bound — all rows are dicts the engine
-        itself coerced): returns ``callable(row) -> bool`` with the
-        same semantics — conjunction of OR-groups, null-safe equality
-        (null matches null), IN membership, unknown key matches
-        nothing, same coercion errors.
-
-        Point DML on unflushed in-memory data is the reference's own
-        execution model (Go maps on one machine); scheduling a
-        distributed job to scan a 4-row createDataFrame costs ~0.5s of
-        pure overhead per statement. Both sides of every comparison
-        come from ``coerce_literal``, so Python ``==`` agrees with the
-        Column predicate for every storable type."""
-        # group -> list of member callables; a member whose key is
-        # unknown matches nothing (compiles to False — so its NOT
-        # matches everything, mirroring _where_member); a group with
-        # only such members matches nothing at all.
-        compiled: list[list] = [
-            [self._py_member(p, specs, columns, alias) for p in group]
-            for group in _where_groups(where)
-        ]
-
-        def match(r: dict) -> bool:
-            return all(
-                any(m(r) for m in members) for members in compiled
-            )
-
-        return match
-
-    def _py_member(
-        self,
-        p: "ast.Property | ast.PredGroup",
-        specs: dict[str, FieldSpec],
-        columns: list[str],
-        alias: str | None = None,
-    ):
-        """One disjunction member of ``_py_where`` (leaf or nested
-        group), with its NOT applied — coercion errors raise at
-        compile time, like the distributed path."""
-        if isinstance(p, ast.PredGroup):
-            sub = self._py_where(p.items, specs, columns, alias)
-            return (lambda r: not sub(r)) if p.negated else sub
-        name = self._resolve_prop_name(p, alias)
-        spec = specs.get(name) if name is not None else None
-        if spec is None or name not in columns:
-            leaf = lambda r: False  # noqa: E731
-        elif p.op == "in":
-            vals = self._coerce_in_values(p, spec, name)
-
-            def leaf(r, name=name, vals=vals):
-                got = r.get(name)
-                if got is None:
-                    return any(v is None for v in vals)
-                return any(v is not None and got == v for v in vals)
-
-        else:
-            try:
-                val = coerce_literal(p.value, spec.type, name)
-            except CoercionError as e:
-                raise EngineError(str(e)) from e
-
-            def leaf(r, name=name, op=p.op, val=val):
-                got = r.get(name)
-                if op != "=":
-                    # range/<> extension: null never matches (SQL
-                    # semantics; total, so NOT is plain negation)
-                    if got is None or val is None:
-                        return False
-                    if op == "<>":
-                        return got != val
-                    if op == "<=":
-                        return got <= val
-                    if op == ">=":
-                        return got >= val
-                    return got < val if op == "<" else got > val
-                if got is None or val is None:
-                    return got is val
-                return got == val
-
-        return (lambda r: not leaf(r)) if p.negated else leaf
-
-    def _where_pred(
-        self,
-        where: tuple[ast.Property, ...],
-        specs: dict[str, FieldSpec],
-        columns: list[str],
-        alias: str | None = None,
-    ) -> Column:
-        """Conjunction of OR-groups; a key absent from the schema
-        matches nothing (server/server.go:779-782) — the member
-        compiles to FALSE, so within a disjunction only that member
-        dies and the group survives on its other members (and
-        ``NOT missing: x``, false negated, matches everything —
-        compositional semantics). ``=`` is null-safe equality
-        (server.go:793-797); ``<``/``>``/``<>`` use guarded SQL
-        comparison (see ``_cmp``); ``IN`` compiles to a pushable In
-        filter (see ``_in_pred``); parenthesized groups recurse;
-        every leaf is TOTAL, so NOT is plain negation (never a
-        three-valued surprise on DELETE's ``~pred`` keep side).
-        Catalyst constant-folds the FALSE leaves away, so pushdown is
-        unaffected."""
-        pred = F.lit(True)
-        for group in _where_groups(where):
-            gpred: Column | None = None
-            for p in group:
-                one = self._where_member(p, specs, columns, alias)
-                gpred = one if gpred is None else (gpred | one)
-            pred = pred & (gpred if gpred is not None else F.lit(False))
-        return pred
-
-    def _where_member(
-        self,
-        p: "ast.Property | ast.PredGroup",
-        specs: dict[str, FieldSpec],
-        columns: list[str],
-        alias: str | None = None,
-    ) -> Column:
-        """One disjunction member of ``_where_pred`` (leaf predicate or
-        nested parenthesized group), with its NOT applied."""
-        if isinstance(p, ast.PredGroup):
-            sub = self._where_pred(p.items, specs, columns, alias)
-            return ~sub if p.negated else sub
-        name = self._resolve_prop_name(p, alias)
-        spec = specs.get(name) if name is not None else None
-        if spec is None or name not in columns:
-            one: Column = F.lit(False)
-        elif p.op == "in":
-            one = _in_pred(F.col(name), self._coerce_in_values(p, spec, name))
-        else:
-            try:
-                val = coerce_literal(p.value, spec.type, name)
-            except CoercionError as e:
-                raise EngineError(str(e)) from e
-            one = _cmp(F.col(name), p.op, F.lit(val).cast(spark_type(spec.type)))
-        return ~one if p.negated else one
-
-    def _prefixed_where_pred(
-        self,
-        items: tuple["ast.Property | ast.PredGroup", ...],
-        aliases: list[str],
-        specs: list[dict[str, FieldSpec]],
-        on_dead=None,
-    ) -> Column:
-        """Conjunction of OR-groups over alias-prefixed chain /
-        var-length columns (the prefixed twin of ``_where_pred``).
-        ``on_dead`` is called with each non-viable member (used by the
-        var-length path to reject WHERE on edge properties); a group
-        left with no viable member matches nothing."""
-        pred = F.lit(True)
-        for group in _where_groups(items):
-            gpred: Column | None = None
-            for p in group:
-                one = self._prefixed_member_pred(
-                    p, aliases, specs, on_dead=on_dead
-                )
-                if one is None:
-                    if on_dead is not None:
-                        on_dead(p)  # may raise (var-length edge props)
-                    if getattr(p, "negated", False):
-                        # NOT over a non-viable member matches
-                        # everything (compositional: NOT false)
-                        one = F.lit(True)
-                    else:
-                        continue
-                gpred = one if gpred is None else (gpred | one)
-            pred = pred & (gpred if gpred is not None else F.lit(False))
-        return pred
-
-    def _prefixed_member_pred(
-        self,
-        p: "ast.Property | ast.PredGroup",
-        aliases: list[str],
-        specs: list[dict[str, FieldSpec]],
-        on_dead=None,
-    ) -> Column | None:
-        """One WHERE member over alias-prefixed chain/var-length
-        columns: an alias-qualified key (``a.field``) targets exactly
-        its element; an unqualified key applies to EVERY element
-        declaring the field (AND — the chain's documented semantics);
-        NOT negates the member as a whole (parenthesized groups
-        recurse; all leaves are total). None = this member is not
-        viable (the group loop turns a negated dead member into
-        match-everything, compositional with ``_where_member``, after
-        giving ``on_dead`` its chance to reject)."""
-        if isinstance(p, ast.PredGroup):
-            sub = self._prefixed_where_pred(
-                p.items, aliases, specs, on_dead=on_dead
-            )
-            return ~sub if p.negated else sub
-        name = p.name
-        if "." in name:
-            q, f = name.split(".", 1)
-            if q not in aliases:
-                return None
-            spec = specs[aliases.index(q)].get(f)
-            if spec is None:
-                return None
-            owners = [(q, spec)]
-            name = f
-        else:
-            owners = [
-                (aliases[i], sp[name])
-                for i, sp in enumerate(specs)
-                if name in sp
-            ]
-            if not owners:
-                return None
-        expr: Column | None = None
-        for alias, spec in owners:
-            col = F.col(f"{alias}_{name}")
-            if p.op == "in":
-                one = _in_pred(col, self._coerce_in_values(p, spec, name))
-            else:
-                try:
-                    val = coerce_literal(p.value, spec.type, name)
-                except CoercionError as e:
-                    raise EngineError(str(e)) from e
-                one = _cmp(col, p.op, F.lit(val).cast(spark_type(spec.type)))
-            expr = one if expr is None else expr & one
-        return ~expr if p.negated else expr
-
     # ------------------------------------------------------------- DML
 
     def _insert_node(self, stmt: ast.InsertNodeStmt) -> StatementResult:
@@ -2501,28 +2393,49 @@ class GraphEngine:
             "insert", f"Inserted node {stmt.node_type} id={row[ID_COLUMN]}", count=1
         )
 
-    def _resolve_node_ref(self, ref: ast.NodeRef, declared_label: str, side: str) -> str:
+    def _endpoint_ref(
+        self, ref: ast.NodeRef, declared_label: str, side: str
+    ) -> tuple[_Table, list]:
+        """Check an edge endpoint ref's node type against the edge's
+        declared label and bind its properties (an id ref binds none):
+        the node table and the bound tree."""
         if ref.node_type != declared_label:
             raise EngineError(
-                f"{side} node type {ref.node_type!r} does not match edge endpoint {declared_label!r}"
+                f"{side} node type {ref.node_type!r} does not match "
+                f"edge endpoint {declared_label!r}"
             )
         nt = self.catalog.node(ref.node_type)
         if nt is None:
             raise EngineError(f"node type {ref.node_type!r} does not exist")
-        key = ("node", ref.node_type)
-        tab = self._table(*key)
+        tab = self._table("node", ref.node_type)
+        props = ref.properties if ref.id is None else ()
+        return tab, _bind_where(
+            props, [(None, nt.field_map(), tab.schema.fieldNames())]
+        )
+
+    @staticmethod
+    def _ref_test(ref: ast.NodeRef, bound: list):
+        """Row test of an endpoint ref: its id, else its properties (a
+        bare ref matches every node)."""
+        if ref.id is not None:
+            return lambda r: r.get(ID_COLUMN) == ref.id.text
+        return _row_test(bound)
+
+    @staticmethod
+    def _ref_col(ref: ast.NodeRef, bound: list) -> Column:
+        """The ``Column`` lowering of an endpoint ref (see ``_ref_test``)."""
+        if ref.id is not None:
+            return F.col(ID_COLUMN) == F.lit(ref.id.text)
+        return _where_col(bound)
+
+    def _resolve_node_ref(self, ref: ast.NodeRef, declared_label: str, side: str) -> str:
+        tab, bound = self._endpoint_ref(ref, declared_label, side)
+        if ref.id is None and not ref.properties:
+            raise EngineError(f"{side} node reference needs an id or properties")
         if tab.base is None:
             # pure-buffer fast path: point lookup over driver-held rows,
             # same deterministic smallest-ID first-match
-            columns = [f.name for f in tab.schema.fields]
-            if ref.id is not None:
-                test = lambda r: r.get(ID_COLUMN) == ref.id.text  # noqa: E731
-            elif ref.properties:
-                test = self._py_where(ref.properties, nt.field_map(), columns)
-            else:
-                raise EngineError(
-                    f"{side} node reference needs an id or properties"
-                )
+            test = self._ref_test(ref, bound)
             ids = sorted(
                 (r[ID_COLUMN] for r in tab.buffer if test(r)),
                 key=lambda i: (len(i), i),
@@ -2530,23 +2443,24 @@ class GraphEngine:
             if not ids:
                 raise EngineError(f"{side} node not found for {ref.node_type}")
             return ids[0]
-        df = self._merged_df(key)
         if ref.id is not None:
             # direct-ID refs are EXISTENCE checks (the resolved id is
             # the literal itself) — answerable from the driver buffer
             # plus a bucket-pruned read of one leaf dir instead of a
             # table scan per INSERT EDGE
-            if self._point_id_exists(key, tab, ref.id.text):
+            if self._point_id_exists(("node", ref.node_type), tab, ref.id.text):
                 return ref.id.text
             raise EngineError(f"{side} node not found for {ref.node_type}")
-        elif ref.properties:
-            pred = self._where_pred(ref.properties, nt.field_map(), df.columns)
-            # deterministic first-match: smallest ID (the reference's
-            # first-match is Go map-iteration nondeterministic,
-            # server.go:758-764 — documented divergence)
-            hits = df.filter(pred).orderBy(*_id_sort_key()).limit(1).collect()
-        else:
-            raise EngineError(f"{side} node reference needs an id or properties")
+        # deterministic first-match: smallest ID (the reference's
+        # first-match is Go map-iteration nondeterministic,
+        # server.go:758-764 — documented divergence)
+        hits = (
+            self._merged_df(("node", ref.node_type))
+            .filter(_where_col(bound))
+            .orderBy(*_id_sort_key())
+            .limit(1)
+            .collect()
+        )
         if not hits:
             raise EngineError(f"{side} node not found for {ref.node_type}")
         return hits[0][ID_COLUMN]
@@ -2616,124 +2530,67 @@ class GraphEngine:
             probe.filter(F.col(ID_COLUMN) == F.lit(id_text)).limit(1).collect()
         )
 
-    def _endpoint_id_set(
-        self, ref: ast.NodeRef, declared_label: str, side: str
-    ) -> DataFrame:
-        """ALL node ids matching an endpoint ref (set semantics for
-        UPDATE/DELETE qualification — unlike INSERT's single resolve).
-        A bare ref (no id, no props) matches every node of the type."""
-        if ref.node_type != declared_label:
-            raise EngineError(
-                f"{side} node type {ref.node_type!r} does not match "
-                f"edge endpoint {declared_label!r}"
-            )
-        nt = self.catalog.node(ref.node_type)
-        if nt is None:
-            raise EngineError(f"node type {ref.node_type!r} does not exist")
-        df = self._merged_df(("node", ref.node_type))
-        if ref.id is not None:
-            pred = F.col(ID_COLUMN) == F.lit(ref.id.text)
-        elif ref.properties:
-            pred = self._where_pred(ref.properties, nt.field_map(), df.columns)
-        else:
-            pred = F.lit(True)
-        return df.filter(pred).select(ID_COLUMN)
-
-    def _py_endpoint_ids(
-        self, ref: ast.NodeRef, declared_label: str, side: str
-    ) -> set[str] | None:
-        """Driver-side twin of ``_endpoint_id_set`` for pure-buffer
-        node tables: the full id set matching an endpoint ref, or
-        ``None`` when the node table is flushed/bound (the caller must
-        take the distributed path). Validation errors are identical to
-        the distributed twin and raised before eligibility is decided."""
-        if ref.node_type != declared_label:
-            raise EngineError(
-                f"{side} node type {ref.node_type!r} does not match "
-                f"edge endpoint {declared_label!r}"
-            )
-        nt = self.catalog.node(ref.node_type)
-        if nt is None:
-            raise EngineError(f"node type {ref.node_type!r} does not exist")
-        tab = self._table("node", ref.node_type)
-        if tab.base is not None:
-            return None
-        columns = [f.name for f in tab.schema.fields]
-        if ref.id is not None:
-            test = lambda r: r.get(ID_COLUMN) == ref.id.text  # noqa: E731
-        elif ref.properties:
-            test = self._py_where(ref.properties, nt.field_map(), columns)
-        else:
-            test = lambda r: True  # noqa: E731
-        return {r[ID_COLUMN] for r in tab.buffer if test(r)}
-
-    def _py_dml_tests(
+    def _mutation_rows(
         self,
         stmt: ast.UpdateNodeStmt
         | ast.UpdateEdgeStmt
         | ast.DeleteNodeStmt
         | ast.DeleteEdgeStmt,
-        is_node: bool,
+        kind: str,
         type_name: str,
         specs: dict[str, FieldSpec],
         tab: _Table,
-    ):
-        """Match tests for a pure-buffer UPDATE/DELETE: the WHERE
-        predicate plus (edge DML) endpoint-qualification membership
-        tests. Returns a list of ``callable(row) -> bool`` or ``None``
-        when a referenced endpoint table is flushed/bound, in which
-        case the caller must run the distributed plan."""
-        columns = [f.name for f in tab.schema.fields]
-        tests = []
-        if stmt.where:
-            tests.append(self._py_where(stmt.where, specs, columns))
-        from_ref = getattr(stmt, "from_node", None)
-        to_ref = getattr(stmt, "to_node", None)
-        if not is_node and (from_ref or to_ref):
+    ) -> tuple:
+        """The matched-rows step UPDATE and DELETE share. The WHERE and
+        the edge endpoint refs (set semantics: ALL matching nodes,
+        unlike INSERT's single resolve) bind once. On a pure-buffer
+        table whose endpoint node tables are pure-buffer too they lower
+        to one row test: ``(test, None, None)``, and the statement runs
+        with zero Spark jobs. Otherwise ``(None, df, pred)``: the live
+        view zone-pruned for the WHERE, with each endpoint's matching
+        ids left-joined on as a marker column (node ids are unique, so
+        the joins never duplicate edge rows, and the predicate stays a
+        distributed plan — no driver-side id collection)."""
+        key = (kind, type_name)
+        where = _bind_where(stmt.where, [(None, specs, tab.schema.fieldNames())])
+        eps = []
+        if kind == "edge":
             et = self.catalog.edge(type_name)
             assert et is not None
             for ref, side, col, label in (
-                (from_ref, "FROM", SRC_COLUMN, et.from_ep.label),
-                (to_ref, "TO", DST_COLUMN, et.to_ep.label),
+                (stmt.from_node, "FROM", SRC_COLUMN, et.from_ep.label),
+                (stmt.to_node, "TO", DST_COLUMN, et.to_ep.label),
             ):
-                if ref is None:
-                    continue
-                ids = self._py_endpoint_ids(ref, label, side)
-                if ids is None:
-                    return None
+                if ref is not None:
+                    eps.append((ref, side, col, *self._endpoint_ref(ref, label, side)))
+        if tab.base is None and all(ep_tab.base is None for *_, ep_tab, _ in eps):
+            tests = [_row_test(where)]
+            for ref, _, col, ep_tab, bound in eps:
+                hit = self._ref_test(ref, bound)
+                ids = {r[ID_COLUMN] for r in ep_tab.buffer if hit(r)}
                 tests.append(lambda r, c=col, s=ids: r.get(c) in s)
-        return tests
-
-    def _endpoint_qualify(
-        self,
-        df: DataFrame,
-        edge_type: str,
-        from_ref: ast.NodeRef | None,
-        to_ref: ast.NodeRef | None,
-    ) -> tuple[DataFrame, Column, list[str]]:
-        """Join endpoint-id sets onto an edge DataFrame as marker
-        columns; returns (joined df, match predicate, marker columns to
-        drop afterwards). Node ids are unique, so the left joins never
-        duplicate edge rows — and the predicate stays a distributed
-        plan (no driver-side id collection)."""
-        et = self.catalog.edge(edge_type)
-        assert et is not None
-        pred = F.lit(True)
-        drops: list[str] = []
-        for ref, side, col, label in (
-            (from_ref, "FROM", SRC_COLUMN, et.from_ep.label),
-            (to_ref, "TO", DST_COLUMN, et.to_ep.label),
-        ):
-            if ref is None:
-                continue
+            return (lambda r: all(t(r) for t in tests)), None, None
+        # zone/bloom pruning: restrict the base scan to the leafs whose
+        # stats admit the predicate (point statements on a bloomed
+        # field read O(1) leafs instead of the chain)
+        df = self._pruned_merged_df(
+            key,
+            tab,
+            zn.compile_pruning_groups(where) if where and self.zone_stats else None,
+        )
+        if df is None:
+            df = self._merged_df(key)
+        pred = _where_col(where)
+        for ref, side, col, _, bound in eps:
             marker = f"_grapho_{side.lower()}_match"
-            ids = self._endpoint_id_set(ref, label, side).select(
-                F.col(ID_COLUMN).alias(marker)
+            ids = (
+                self._merged_df(("node", ref.node_type))
+                .filter(self._ref_col(ref, bound))
+                .select(F.col(ID_COLUMN).alias(marker))
             )
             df = df.join(ids, df[col] == ids[marker], "left")
             pred = pred & F.col(marker).isNotNull()
-            drops.append(marker)
-        return df, pred, drops
+        return None, df, pred
 
     def _insert_edge(self, stmt: ast.InsertEdgeStmt) -> StatementResult:
         et = self.catalog.edge(stmt.edge_type)
@@ -2924,7 +2781,29 @@ class GraphEngine:
         are already in the side file — the anti-join removes their
         stale originals). Plan depth is bounded: past
         2·max_delta_chain layers the view is rebased into one scratch
-        snapshot (O(live rows), amortized over the window)."""
+        snapshot (O(live rows), amortized over the window).
+
+        First the side file's hash buckets are recorded as touched —
+        plus the buffer's, since the fold below moves buffered inserts
+        into base (a later partial rewrite would otherwise drop
+        surviving ex-buffer rows in untouched buckets; caught by the
+        r10 durable soak, seed 209)."""
+        side = (
+            self.spark.read.schema(tab.schema).parquet(path)
+            if op == "u"
+            else self.spark.read.parquet(path)
+        )
+        if tab.touched_buckets is not None:
+            tab.touched_buckets |= {
+                int(r["b"])
+                for r in side.select(
+                    self._bucket_expr(self._tab_bucket_n(tab)).alias("b")
+                )
+                .distinct()
+                .collect()
+            }
+            if tab.buffer:
+                tab.touched_buckets |= self._buffer_buckets(tab)
         buf_df = self._buffer_df(tab)
         base = (
             tab.base
@@ -2940,18 +2819,15 @@ class GraphEngine:
             self._side_file_bytes(path) <= _MUT_BROADCAST_BYTES
         )
         if op == "u":
-            patch = self.spark.read.schema(tab.schema).parquet(path)
-            ids = patch.select(ID_COLUMN)
+            ids = side.select(ID_COLUMN)
             if small:
                 ids = F.broadcast(ids)
             tab.base = base.join(ids, ID_COLUMN, "left_anti").unionByName(
-                patch
+                side
             )
             tab.base_layers += 2
         else:
-            ids = self.spark.read.parquet(path)
-            if small:
-                ids = F.broadcast(ids)
+            ids = F.broadcast(side) if small else side
             tab.base = base.join(ids, ID_COLUMN, "left_anti")
             tab.base_layers += 1
         tab.mut_parts.append((op, path))
@@ -2977,19 +2853,18 @@ class GraphEngine:
         self,
         stmt: ast.UpdateNodeStmt | ast.UpdateEdgeStmt,
         kind: str,
-        is_node: bool,
         type_name: str,
         tab: _Table,
-        tests: list,
+        test,
         sets: dict[str, object],
     ) -> StatementResult:
         """UPDATE over a pure-buffer table: mutate the driver-held row
         dicts in place. The uniqueness guard checks the WOULD-BE state
         before any mutation (like the distributed path, which builds
         new_df first), so a violation leaves the table untouched."""
-        matched = [r for r in tab.buffer if all(t(r) for t in tests)]
+        matched = [r for r in tab.buffer if test(r)]
         if matched:
-            if is_node:
+            if kind == "node":
                 nt = self.catalog.node(type_name)
                 hit_ids = {id(r) for r in matched}
                 for idx in nt.indexes:
@@ -3021,33 +2896,10 @@ class GraphEngine:
         specs = self._field_specs(kind, type_name)
         key = (kind, type_name)
         tab = self._table(*key)
-        if tab.base is None:
-            # pure-buffer fast path (same statement semantics, zero
-            # Spark jobs): eligible unless an endpoint ref points at a
-            # flushed/bound node table
-            tests = self._py_dml_tests(stmt, is_node, type_name, specs, tab)
-            if tests is not None:
-                sets = self._coerce_sets(stmt, specs, type_name)
-                return self._update_buffer(stmt, kind, is_node, type_name, tab, tests, sets)
-        df = self._merged_df(key)
-        if stmt.where:
-            # zone/bloom pruning: restrict the base scan to the leafs
-            # whose stats admit the predicate (point statements on a
-            # bloomed field read O(1) leafs instead of the chain)
-            pruned = self._pruned_merged_df(
-                key, tab, self._compile_prune(stmt.where, specs, df.columns)
-            )
-            if pruned is not None:
-                df = pruned
-        pred = self._where_pred(stmt.where, specs, df.columns) if stmt.where else F.lit(True)
-        ep_drops: list[str] = []
-        if not is_node and (stmt.from_node or stmt.to_node):
-            df, ep_pred, ep_drops = self._endpoint_qualify(
-                df, type_name, stmt.from_node, stmt.to_node
-            )
-            pred = pred & ep_pred
-
+        test, df, pred = self._mutation_rows(stmt, kind, type_name, specs, tab)
         sets = self._coerce_sets(stmt, specs, type_name)
+        if test is not None:
+            return self._update_buffer(stmt, kind, type_name, tab, test, sets)
 
         # ONE base scan per statement (r12): write the matched rows
         # (with SET applied) straight to the side file, then derive
@@ -3062,8 +2914,7 @@ class GraphEngine:
         cols = [f.name for f in tab.schema.fields]
         path = self._mut_scratch_dir()
         patch_rows.select(*cols).write.mode("overwrite").parquet(path)
-        patch = self.spark.read.schema(tab.schema).parquet(path)
-        count = patch.count()
+        count = self.spark.read.schema(tab.schema).parquet(path).count()
         if count:
             # Uniqueness guard BEFORE any state change. Every matched
             # row gets the SAME literal — a violation is exactly
@@ -3074,24 +2925,27 @@ class GraphEngine:
             # O(1) check plus one pushdown probe per set unique field.
             if is_node:
                 nt = self.catalog.node(type_name)
+                set_lits = {p.name: p.value for p in stmt.set}
                 for idx in nt.indexes:
                     if idx.unique and idx.field in sets:
-                        v = sets[idx.field]
-                        if v is None:
+                        if sets[idx.field] is None:
                             continue  # nulls never collide
                         # the probe searches UNMATCHED rows, so the
                         # WHERE-pruned df above is not a superset of
                         # its search space — prune by the probe's own
                         # equality instead (unique fields are bloomed)
+                        probe = _bind_where(
+                            (ast.Property(idx.field, set_lits[idx.field]),),
+                            [(None, specs, cols)],
+                        )
                         probe_df = self._pruned_merged_df(
-                            key, tab, [[("=", idx.field, v)]]
+                            key, tab, zn.compile_pruning_groups(probe)
                         )
                         if probe_df is None:
                             probe_df = self._merged_df(key)
                         clash = count > 1 or bool(
                             probe_df.filter(
-                                ~pred.eqNullSafe(F.lit(True))
-                                & (F.col(idx.field) == F.lit(v))
+                                ~pred.eqNullSafe(F.lit(True)) & _where_col(probe)
                             )
                             .limit(1)
                             .count()
@@ -3104,22 +2958,6 @@ class GraphEngine:
                             raise EngineError(
                                 f"unique violation on {idx.field!r} after update"
                             )
-            if tab.touched_buckets is not None:
-                tab.touched_buckets |= {
-                    int(r["b"])
-                    for r in patch.select(
-                        self._bucket_expr(self._tab_bucket_n(tab)).alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                }
-                if tab.buffer:
-                    # the mutation folds buffered inserts into base
-                    # (buffer cleared in _publish_mutation) — record
-                    # THEIR buckets too, or a later partial rewrite
-                    # would drop surviving ex-buffer rows in untouched
-                    # buckets (caught by the r10 durable soak, seed 209)
-                    tab.touched_buckets |= self._buffer_buckets(tab)
             self._publish_mutation(tab, path, "u", count)
             # SET may introduce values unseen by the sketches — a stale
             # bloom would false-negative and skip a real duplicate scan.
@@ -3132,68 +2970,27 @@ class GraphEngine:
         kind = "node" if is_node else "edge"
         type_name = stmt.node_type if is_node else stmt.edge_type
         specs = self._field_specs(kind, type_name)
-        key = (kind, type_name)
-        tab = self._table(*key)
-        has_ep = not is_node and (
-            getattr(stmt, "from_node", None) or getattr(stmt, "to_node", None)
-        )
-        if not has_ep and not stmt.where:
+        tab = self._table(kind, type_name)
+        if not stmt.where and (is_node or not (stmt.from_node or stmt.to_node)):
             # the parser mandates a predicate; guard the programmatic path
             raise EngineError("DELETE requires WHERE or endpoint refs")
-        if tab.base is None:
+        test, df, pred = self._mutation_rows(stmt, kind, type_name, specs, tab)
+        if test is not None:
             # pure-buffer fast path: filter the driver-held rows
-            tests = self._py_dml_tests(stmt, is_node, type_name, specs, tab)
-            if tests is not None:
-                keep = [r for r in tab.buffer if not all(t(r) for t in tests)]
-                count = len(tab.buffer) - len(keep)
-                if count:
-                    tab.buffer = keep
-                    tab.dirty = True
-                self._log_dml(stmt)
-                return StatementResult(
-                    "delete", f"Deleted {count} {kind}(s)", count=count
-                )
-        df = self._merged_df(key)
-        if stmt.where:
-            # same zone/bloom leaf pruning as _update
-            pruned = self._pruned_merged_df(
-                key, tab, self._compile_prune(stmt.where, specs, df.columns)
-            )
-            if pruned is not None:
-                df = pruned
-        pred = (
-            self._where_pred(stmt.where, specs, df.columns)
-            if stmt.where
-            else F.lit(True)
-        )
-        ep_drops: list[str] = []
-        if has_ep:
-            df, ep_pred, ep_drops = self._endpoint_qualify(
-                df, type_name, stmt.from_node, stmt.to_node
-            )
-            pred = pred & ep_pred
+            keep = [r for r in tab.buffer if not test(r)]
+            count = len(tab.buffer) - len(keep)
+            if count:
+                tab.buffer = keep
+                tab.dirty = True
+            self._log_dml(stmt)
+            return StatementResult("delete", f"Deleted {count} {kind}(s)", count=count)
         # ONE base scan (r12): persist the deletion vector of matched
         # _ids (O(matched), not an O(table) rewrite), then derive count
-        # and touched buckets from the side file — mirrors _update.
+        # and touched buckets from the side file, as in _update.
         path = self._mut_scratch_dir()
-        df.filter(pred).select(ID_COLUMN).write.mode("overwrite").parquet(
-            path
-        )
-        ids = self.spark.read.parquet(path)
-        count = ids.count()
+        df.filter(pred).select(ID_COLUMN).write.mode("overwrite").parquet(path)
+        count = self.spark.read.parquet(path).count()
         if count:
-            if tab.touched_buckets is not None:
-                tab.touched_buckets |= {
-                    int(r["b"])
-                    for r in ids.select(
-                        self._bucket_expr(self._tab_bucket_n(tab)).alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                }
-                if tab.buffer:
-                    # same fold-the-buffer bucket recording as _update
-                    tab.touched_buckets |= self._buffer_buckets(tab)
             self._publish_mutation(tab, path, "d", count)
         # NOTE: like the reference, DELETE NODE does not cascade or
         # validate dangling edges (SURVEY.md §2.1 #12).
@@ -3266,41 +3063,34 @@ class GraphEngine:
             if nt is None:
                 raise EngineError(f"node type {el.type!r} does not exist")
             key = ("node", el.type)
-            # AS OF reads the committed version's parquet (buffered
-            # rows are NOT part of a past version); WHERE/RETURN
-            # resolve against the current catalog's field specs
-            # intersected with the version's physical columns.
             tab = self.tables[key]
+            alias, specs = el.alias or el.type, nt.field_map()
+            columns = tab.schema.fieldNames()
+            where = _bind_where(stmt.where, [(alias, specs, columns)])
             # zone/bloom pruning: a point MATCH on a bloomed/statted
             # field reads O(candidate) leafs instead of the chain
-            # (conservative for AS OF column drift: a member the
-            # version cannot resolve compiles to FALSE in the filter
-            # and merely declines to prune here)
-            groups = self._compile_prune(
-                stmt.where,
-                nt.field_map(),
-                tab.schema.fieldNames(),
-                alias=el.alias or el.type,
+            groups = (
+                zn.compile_pruning_groups(where)
+                if where and self.zone_stats
+                else None
             )
             if stmt.as_of is not None:
+                # AS OF reads the committed version's parquet (buffered
+                # rows are NOT part of a past version); WHERE/RETURN
+                # resolve against the current catalog's field specs
+                # intersected with the version's physical columns, so a
+                # drifted version rebinds (pruning above stays
+                # conservative: a field the version lacks has no stats)
                 df = self._df_at(
                     "node", el.type, stmt.as_of, prune_groups=groups
                 )
+                if df.columns != columns:
+                    where = _bind_where(stmt.where, [(alias, specs, df.columns)])
             else:
                 df = self._pruned_merged_df(key, tab, groups)
                 if df is None:
                     df = self._merged_df(key)
-            pred = (
-                self._where_pred(
-                    stmt.where,
-                    nt.field_map(),
-                    df.columns,
-                    alias=el.alias or el.type,
-                )
-                if stmt.where
-                else F.lit(True)
-            )
-            df = df.filter(pred)
+            df = df.filter(_where_col(where))
             if stmt.return_fields or stmt.return_aggs:
                 cols: list[Column] = [F.col(ID_COLUMN)]
                 for rf, user_al in _return_items(stmt):
@@ -3313,7 +3103,7 @@ class GraphEngine:
                         # an undeclared field
                         q, f = rf.split(".", 1)
                         outn = user_al or f"{q}_{f}"
-                        if q == (el.alias or el.type) and f in df.columns:
+                        if q == alias and f in df.columns:
                             cols.append(F.col(f).alias(outn))
                         elif multi:
                             cols.append(F.lit(None).cast("string").alias(outn))
@@ -3456,31 +3246,6 @@ class GraphEngine:
                 or (i == len(pattern) - 1 and pattern[i].optional)
             )
 
-        def prefixed(i: int) -> DataFrame:
-            kind = "node" if i % 2 == 0 else "edge"
-            key = (kind, pattern[i].type)
-            df = None
-            if stmt.where and self.zone_stats:
-                tab = self.tables.get(key)
-                if tab is not None:
-                    groups = zn.compile_chain_pruning_groups(
-                        stmt.where,
-                        specs[i],
-                        tab.schema.fieldNames(),
-                        aliases[i],
-                        aliases,
-                        _nullable(i),
-                        coerce_literal,
-                        self._coerce_in_values,
-                    )
-                    df = self._pruned_merged_df(key, tab, groups)
-            if df is None:
-                df = self._merged_df(key)
-            return df.select(
-                *[F.col(c).alias(f"{aliases[i]}_{c}") for c in df.columns]
-            )
-
-        out = prefixed(0)
         # OPTIONAL (r11): the marked edge hop and every later hop
         # compile to LEFT joins — left-prefix rows survive with
         # NULL-padded edge/right-node fields when nothing matches
@@ -3504,6 +3269,22 @@ class GraphEngine:
                 "OPTIONAL on the leading node cannot combine with an "
                 "OPTIONAL first edge (ambiguous full-outer semantics)"
             )
+        keys = [
+            ("node" if i % 2 == 0 else "edge", el.type)
+            for i, el in enumerate(pattern)
+        ]
+        where = _bind_where(
+            stmt.where,
+            [
+                (aliases[i], specs[i], self._table(*keys[i]).schema.fieldNames())
+                for i in range(len(pattern))
+            ],
+        )
+
+        def prefixed(i: int) -> DataFrame:
+            return self._element_scan(keys[i], aliases[i], where, i, _nullable(i))
+
+        out = prefixed(0)
         opt_seen = False
         for i in range(1, len(pattern), 2):
             opt_seen = opt_seen or pattern[i].optional
@@ -3529,9 +3310,7 @@ class GraphEngine:
             )
 
         if stmt.where:
-            out = out.filter(
-                self._prefixed_where_pred(stmt.where, aliases, specs)
-            )
+            out = out.filter(_where_col(where, aliases))
 
         id_cols = [f"{a}_{ID_COLUMN}" for a in aliases]
         ret_cols: list[str] = []
@@ -3627,6 +3406,33 @@ class GraphEngine:
                 "repeated types in an edge pattern need distinct aliases"
             )
         a, e_alias, b = aliases
+        node_keys = [("node", left_el.type), ("node", right_el.type)]
+        node_aliases = [a, b]
+        node_specs = [nt_l.field_map(), nt_r.field_map()]
+        where = _bind_where(
+            stmt.where,
+            [
+                (al, sp, self._table(*key).schema.fieldNames())
+                for al, sp, key in zip(node_aliases, node_specs, node_keys)
+            ],
+        )
+
+        def reject_edge_props(groups: list) -> None:
+            # the edge list carries no predicates: a WHERE key that
+            # binds to neither endpoint but names an edge property is
+            # an error, not a FALSE member
+            for m in (m for g in groups for m in g):
+                if isinstance(m, zn.Sub):
+                    reject_edge_props(m.groups)
+                elif isinstance(m, zn.Dead):
+                    bare = m.prop.name.split(".", 1)[-1]
+                    if bare in et.prop_map():
+                        raise EngineError(
+                            f"WHERE on edge property {bare!r} is not "
+                            f"supported across a variable-length edge"
+                        )
+
+        reject_edge_props(where)
 
         edges = self._merged_df(("edge", edge_el.type)).select(
             F.col(SRC_COLUMN).alias("_s"), F.col(DST_COLUMN).alias("_d")
@@ -3658,51 +3464,20 @@ class GraphEngine:
             pairs = pairs.unionByName(extra)
         pairs = pairs.groupBy("_s", "_d").agg(F.min("_hops").alias("_hops"))
 
-        def prefixed(
-            alias: str, type_name: str, nullable: bool
-        ) -> DataFrame:
-            # zone/bloom pruning of the endpoint scans (r14, VERDICT
-            # r13 #3): same per-element compile as the chain path —
-            # groups resolving exclusively to this alias prune its
-            # base leafs; on the NULLABLE side (right endpoint of an
-            # OPTIONAL *bounds edge) only padding-rejecting predicates
-            # qualify. The traversal itself (the edge list) carries no
-            # predicates (WHERE on edge props is rejected above), so
-            # only the node scans prune.
-            key = ("node", type_name)
-            df = None
-            if stmt.where and self.zone_stats:
-                tab = self.tables.get(key)
-                if tab is not None:
-                    groups = zn.compile_chain_pruning_groups(
-                        stmt.where,
-                        self.catalog.node(type_name).field_map(),
-                        tab.schema.fieldNames(),
-                        alias,
-                        aliases,
-                        nullable,
-                        coerce_literal,
-                        self._coerce_in_values,
-                    )
-                    df = self._pruned_merged_df(key, tab, groups)
-            if df is None:
-                df = self._merged_df(key)
-            return df.select(
-                *[F.col(c).alias(f"{alias}_{c}") for c in df.columns]
-            )
-
         # r12: OPTIONAL on the *bounds edge = left-outer composition —
         # every left-endpoint row survives; rows with no reachable
         # right endpoint within the bounds NULL-pad hops and the right
         # node's columns. The (pairs ⋈ right) inner block builds first
         # so the outer join NULL-pads it as a unit (joining pairs
         # left-outer then right inner would re-drop the padded rows).
+        # The endpoint scans prune like chain elements (r14); only the
+        # right endpoint of an OPTIONAL *bounds edge is nullable.
         inner = pairs.join(
-            prefixed(b, right_el.type, nullable=edge_el.optional),
+            self._element_scan(node_keys[1], b, where, 1, edge_el.optional),
             F.col("_d") == F.col(f"{b}_{ID_COLUMN}"),
         )
         out = (
-            prefixed(a, left_el.type, nullable=False)
+            self._element_scan(node_keys[0], a, where, 0, False)
             .join(
                 inner,
                 F.col("_s") == F.col(f"{a}_{ID_COLUMN}"),
@@ -3712,24 +3487,8 @@ class GraphEngine:
             .drop("_s", "_d", "_hops")
         )
 
-        node_specs = [nt_l.field_map(), nt_r.field_map()]
-        node_aliases = [a, b]
-
-        def _reject_edge_prop(p: ast.Property) -> None:
-            bare = p.name.split(".", 1)[-1]
-            if bare in et.prop_map():
-                raise EngineError(
-                    f"WHERE on edge property {bare!r} is not "
-                    f"supported across a variable-length edge"
-                )
-
         if stmt.where:
-            out = out.filter(
-                self._prefixed_where_pred(
-                    stmt.where, node_aliases, node_specs,
-                    on_dead=_reject_edge_prop,
-                )
-            )
+            out = out.filter(_where_col(where, node_aliases))
 
         id_cols = [f"{a}_{ID_COLUMN}", f"{b}_{ID_COLUMN}"]
         ret_cols: list[str] = []

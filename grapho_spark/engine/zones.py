@@ -49,7 +49,7 @@ import datetime as dt
 import json
 import os
 from functools import reduce
-from typing import Any, Callable
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -440,139 +440,84 @@ def probe_zone_blooms_distributed(
 
 # ---------------------------------------------------------- pruning
 
-# A compiled pruning member: ("false",) for a member that can never
-# match (unknown field / alias mismatch), or (op, field, value) with
-# op in {"=", "<", "<=", ">", ">=", "<>", "in"} and value the coerced
-# Python literal (a list for "in").
+# The bound WHERE tree (built once per statement by
+# ``engine._bind_where``; HAVING binds the same shape): a conjunction
+# (list) of OR-groups (lists) of members. ``owners`` holds one
+# ``(element, field, spark_type, coerced_value)`` per pattern element
+# the leaf constrains — the leaf is their conjunction; an ``in``
+# value is a list. A Dead member (unknown key, alias mismatch, column
+# missing from the version) means FALSE; ``prop`` is its AST leaf.
+
+
+class Leaf(NamedTuple):
+    op: str
+    owners: tuple
+    negated: bool
+
+
+class Sub(NamedTuple):
+    groups: list
+    negated: bool
+
+
+class Dead(NamedTuple):
+    prop: Any
+    negated: bool
+
+
+# A pruning member: ("false",) for a member that can never match, or
+# (op, field, value) with op in {"=", "<", "<=", ">", ">=", "<>", "in"}
+# and value the coerced Python literal (a list for "in").
 Member = tuple
 
 
 def compile_pruning_groups(
-    where,
-    specs,
-    columns: list[str],
-    alias: str | None,
-    resolve_name: Callable,
-    coerce: Callable,
-    coerce_in: Callable,
+    groups: list, i: int = 0, nullable: bool = False
 ) -> list[list[Member]] | None:
-    """Mirror of ``_where_pred``'s compilation into a zone-prunable
-    form: a conjunction of OR-groups of simple members. Any group
-    containing a nested PredGroup or a negated member is DROPPED from
-    pruning (conservative — the remaining groups still prune
-    conjunctively). Returns None when nothing prunable survives."""
-    from grapho_spark.engine.engine import _where_groups
-    from grapho_spark.gql import ast
+    """The zone-pruning lowering of a bound WHERE for pattern element
+    ``i`` (0 for a one-element binding: node MATCH, DML): the
+    OR-groups that can soundly prune that element's base scan. A
+    group is dropped (prunes nothing) when it holds a nested group, a
+    negated member, or a leaf with no owner on element ``i`` (another
+    element can satisfy it on its own). A Dead member lowers to
+    ``("false",)``.
 
-    out: list[list[Member]] = []
-    for group in _where_groups(where):
-        members: list[Member] = []
-        usable = True
-        for p in group:
-            if isinstance(p, ast.PredGroup) or getattr(p, "negated", False):
-                usable = False
-                break
-            name = resolve_name(p, alias)
-            spec = specs.get(name) if name is not None else None
-            if spec is None or name not in columns:
-                members.append(("false",))
-                continue
-            try:
-                if p.op == "in":
-                    members.append(("in", name, coerce_in(p, spec, name)))
-                else:
-                    members.append((p.op, name, coerce(p.value, spec.type, name)))
-            except Exception:
-                # coercion errors surface from _where_pred itself;
-                # pruning just declines
-                return None
-        if usable and members:
-            out.append(members)
-    return out or None
-
-
-def compile_chain_pruning_groups(
-    where,
-    el_specs,
-    columns: list[str],
-    el_alias: str,
-    all_aliases: list[str],
-    nullable_side: bool,
-    coerce: Callable,
-    coerce_in: Callable,
-) -> list[list[Member]] | None:
-    """Chain-MATCH twin of ``compile_pruning_groups`` for ONE pattern
-    element: compiles the WHERE groups that can soundly prune this
-    element's base scan under ``_prefixed_where_pred`` semantics.
-
-    A member is evaluable against this element when it is a plain,
-    non-negated Property that either (a) qualifies THIS alias, or
-    (b) is unqualified and THIS element declares the field — in the
-    unqualified case the member compiles to an AND across every
-    declaring element, so "this element's conjunct unsatisfiable"
-    still proves the whole member false. A member qualifying another
-    alias (or unqualified and undeclared here) can be true regardless
-    of this element's rows, so its GROUP prunes nothing here.
-
-    ``nullable_side``: the element's columns can be NULL-padded by an
+    ``nullable``: the element's columns can be NULL-padded by an
     OPTIONAL hop. Removing scanned rows then CONVERTS filtered-out
     join rows into padded rows, which is only sound when every member
     also rejects the all-NULL padding — true for every op except a
     null-matching equality/IN (``field: null``), so those members
-    disqualify their group on nullable sides."""
-    from grapho_spark.engine.engine import _where_groups
-    from grapho_spark.gql import ast
-
+    drop their group on nullable sides. Returns None when no group
+    survives."""
     out: list[list[Member]] = []
-    for group in _where_groups(where):
+    for group in groups:
         members: list[Member] = []
-        usable = True
-        for p in group:
-            if isinstance(p, ast.PredGroup) or getattr(p, "negated", False):
-                usable = False
+        for m in group:
+            if m.negated or isinstance(m, Sub):
                 break
-            name = p.name
-            if "." in name:
-                q, f = name.split(".", 1)
-                if q != el_alias:
-                    # another element's member can satisfy the group
-                    # on its own — unless it can NEVER match (alias
-                    # not in the pattern at all == compiles to a
-                    # skipped member)
-                    usable = q not in all_aliases
-                    if not usable:
-                        break
-                    continue
-                name = f
-            spec = el_specs.get(name)
-            if spec is None or name not in columns:
-                if "." in p.name:
-                    # qualified to us but unknown: the member is
-                    # SKIPPED by _prefixed_where_pred (not false), so
-                    # it cannot help the group match — ignorable
-                    continue
-                # unqualified and not ours: other declaring elements
-                # decide; conservatively the group may match
-                usable = False
+            if isinstance(m, Dead):
+                members.append(("false",))
+                continue
+            own = next((o for o in m.owners if o[0] == i), None)
+            if own is None:
                 break
-            try:
-                if p.op == "in":
-                    vals = coerce_in(p, spec, name)
-                    if nullable_side and any(v is None for v in vals):
-                        usable = False
-                        break
-                    members.append(("in", name, vals))
-                else:
-                    val = coerce(p.value, spec.type, name)
-                    if nullable_side and p.op == "=" and val is None:
-                        usable = False
-                        break
-                    members.append((p.op, name, val))
-            except Exception:
-                return None
-        if usable and members:
-            out.append(members)
+            _, name, _, val = own
+            if nullable and (
+                any(v is None for v in val)
+                if m.op == "in"
+                else m.op == "=" and val is None
+            ):
+                break
+            members.append((m.op, name, val))
+        else:
+            if members:
+                out.append(members)
     return out or None
+
+
+# Chain and variable-length MATCH call the same lowering under this
+# name, so traces tell per-element pruning from node/DML pruning.
+compile_chain_pruning_groups = compile_pruning_groups
 
 
 def _eq_cannot(stats: dict | None, bloom, rows: int, val: Any) -> bool:

@@ -157,6 +157,76 @@ def test_update_set_column_also_in_where(eng):
     assert (rows["a"].age, rows["a"].city) == (31, "v2")
 
 
+_STAMPS = [
+    "2024-01-01T10:00:00+02:00",  # 08:00 UTC
+    "2024-01-01T08:00:00",
+    "2024-01-01T07:30:00",
+    "2024-01-01T09:00:00+00:00",
+    "2024-01-01T08:30:00-01:00",  # 09:30 UTC
+    None,
+]
+
+
+@pytest.mark.parametrize(
+    "pred",
+    [
+        "ts: '2024-01-01T08:00:00'",
+        "ts < '2024-01-01T08:00:00'",
+        "ts <> '2024-01-01T10:00:00+02:00'",
+        "ts IN ('2024-01-01T08:00:00+00:00', '2024-01-01T09:30:00')",
+    ],
+)
+def test_pure_buffer_dml_matches_match_on_mixed_offsets(eng, pred):
+    """UPDATE/DELETE on a pure-buffer table (the row-test lowering)
+    select exactly the rows MATCH (the Spark lowering) returns when a
+    datetime field mixes values with and without a UTC offset: both
+    compare the instants Spark stores."""
+    eng.execute("CREATE NODE Ev (k: int, ts: datetime, tag: string);")
+    for k, ts in enumerate(_STAMPS):
+        lit = "null" if ts is None else f"'{ts}'"
+        eng.execute(f"INSERT NODE Ev (k: {k}, ts: {lit});")
+
+    def ks(where: str) -> list[int]:
+        df = eng.execute(f"MATCH Ev WHERE {where} RETURN k;")[0].df
+        return sorted(r.k for r in df.collect())
+
+    want = ks(pred)
+    assert want
+    upd = eng.execute(f"UPDATE NODE Ev SET tag: 'hit' WHERE {pred};")[0]
+    assert upd.count == len(want)
+    assert ks("tag: 'hit'") == want
+    assert eng.execute(f"DELETE NODE Ev WHERE {pred};")[0].count == len(want)
+    left = eng.execute("MATCH Ev RETURN k;")[0].df.collect()
+    assert sorted(r.k for r in left) == sorted(set(range(len(_STAMPS))) - set(want))
+    assert eng.tables[("node", "Ev")].base is None  # never left the buffer
+
+
+@pytest.mark.parametrize(
+    "where", ["w: 1", "k.w > 0", "name: 'a' OR (NOT k.w: 1)"]
+)
+def test_var_length_where_on_edge_property_raises(eng, where):
+    eng.execute(
+        "CREATE NODE P (name: string);"
+        "CREATE EDGE K (FROM P MANY, TO P MANY, PROPS (w: int));"
+    )
+    with pytest.raises(
+        EngineError,
+        match="WHERE on edge property 'w' is not supported across a "
+        "variable-length edge",
+    ):
+        eng.execute(f"MATCH P a, K*1..2 k, P b WHERE {where};")
+
+
+def test_having_unknown_name_raises(eng):
+    eng.execute("CREATE NODE P (name: string, age: int);")
+    with pytest.raises(
+        EngineError,
+        match=r"HAVING field 'nope' is not a group key or aggregate alias "
+        r"of this RETURN \(available: \['n', 'name'\]\)",
+    ):
+        eng.execute("MATCH P RETURN name, COUNT(*) AS n HAVING nope > 1;")
+
+
 def test_update_missing_property_matches_nothing(eng):
     eng.execute("CREATE NODE P (name: string); INSERT NODE P (name: 'a');")
     res = eng.execute("UPDATE NODE P SET name: 'z' WHERE ghost: 1;")[0]
