@@ -55,6 +55,10 @@ class NodeType:
     fields: tuple[FieldSpec, ...] = ()
     pk: str = ""  # "" => internal synthetic id
     indexes: tuple[IndexSpec, ...] = ()
+    # True for a type bound to existing data (GraphEngine.bind_node_type):
+    # its _id is the primary key's text, so INSERT mints _id = str(pk)
+    # instead of taking the next sequential id.
+    pk_id: bool = False
 
     def field_map(self) -> dict[str, FieldSpec]:
         return {f.name: f for f in self.fields}
@@ -213,6 +217,7 @@ def catalog_to_json(c: Catalog) -> dict:
                 "fields": [field_spec_to_json(f) for f in n.fields],
                 "pk": n.pk,
                 "indexes": [{"field": i.field, "unique": i.unique} for i in n.indexes],
+                **({"pk_id": True} if n.pk_id else {}),
             }
             for n in c.nodes
         ],
@@ -235,6 +240,7 @@ def catalog_from_json(d: dict) -> Catalog:
             fields=tuple(field_spec_from_json(f) for f in n["fields"]),
             pk=n.get("pk", ""),
             indexes=tuple(IndexSpec(i["field"], i["unique"]) for i in n.get("indexes", ())),
+            pk_id=n.get("pk_id", False),
         )
         for n in d.get("nodes", ())
     )

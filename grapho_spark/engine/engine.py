@@ -40,6 +40,15 @@ leaf dirs only. At cluster scale the buffer would be a streaming
 ingest table and flush() a compaction job — same architecture
 (Delta/Iceberg deletion vectors + OPTIMIZE).
 
+Driver rows (buffer, folded buffer snapshots, SHOW/DESCRIBE/EXPLAIN
+output) enter Spark one way, ``_local_frame``: an Arrow table that
+becomes a LocalRelation, which Spark filters and projects on the
+driver with no job. A node MATCH, UPDATE or DELETE on a small flushed
+table (``_small_scan``: at most ``_SMALL_SCAN_ROWS`` rows to scan)
+reads the pruned chain files with pyarrow and replays the mutation
+layers on the driver, so point statements run with zero Spark jobs —
+the reference's own in-memory execution model at OLTP sizes.
+
 Durability: DDL goes ONLY to the catalog store (events JSONL); DML
 goes ONLY to the commit log (JSONL of statement ASTs), replayed past
 the manifest offset on open — this separation avoids the reference's
@@ -56,10 +65,16 @@ import tempfile
 import threading
 import weakref
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as ST
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from grapho_spark.catalog.ddl import DDLError, apply_ddl
 from grapho_spark.catalog.store import CatalogStore, _from_jsonable, _to_jsonable
@@ -70,6 +85,7 @@ from grapho_spark.catalog.types import (
     Endpoint,
     FieldSpec,
     ID_COLUMN,
+    IndexSpec,
     NodeType,
     SRC_COLUMN,
     edge_struct,
@@ -104,6 +120,18 @@ BUCKET_COLUMN = "_gbkt"
 # estimation.
 _MUT_BROADCAST_ROWS = 1_000_000
 _MUT_BROADCAST_BYTES = 32 << 20  # compressed parquet on disk
+
+# Small-table scans (_small_scan): a node MATCH, UPDATE or DELETE on a
+# flushed table whose rows to scan (kept leafs + side files + buffer)
+# number at most this many reads them with pyarrow on the driver and
+# runs with zero Spark jobs; larger scans take the Spark plan.
+# Measured on a 4-vCPU VM, warm JVM, 4-column bound table (PERF.md,
+# "OLTP point DML"): MATCH wall time breaks even near 20k rows (0.26 s
+# both ways; 0.36 s vs 0.27 s at 50k) while DML stays ahead past 50k,
+# so the cap sits at half the MATCH break-even.
+_SMALL_SCAN_ROWS = 10_000
+
+_ID_SCHEMA = ST.StructType([ST.StructField(ID_COLUMN, ST.StringType(), False)])
 
 # Serializes the register-views + analyze window of GraphEngine.sql()
 # across ALL engine instances sharing this process's SparkSession (temp
@@ -256,8 +284,10 @@ class _Table:
     # superset of base+buffer across flushes.
     blooms: dict[str, object] = field(default_factory=dict)
     # Merge-on-read mutation layers since the last flush, in statement
-    # order. Entries: ("fold", DataFrame) — a buffer snapshot folded
-    # into the view at mutation time; ("d", path) — a deletion-vector
+    # order. Entries: ("fold", rows) — a buffer snapshot folded into
+    # the view at mutation time, held as an Arrow table (row tuples
+    # when the schema has no Arrow form; both enter Spark through
+    # _local_frame); ("d", path) — a deletion-vector
     # parquet of matched _ids; ("u", path) — a rewrite parquet of
     # matched rows with SET applied; ("rebase", path) — a full view
     # snapshot that RESTARTS the composition (depth bound). The live
@@ -428,6 +458,14 @@ _ROW_CMP = {
     "<>": operator.ne,
 }
 _TIMESTAMP = ST.TimestampType()
+# bound PK column types whose ``str`` text is Spark's cast to string
+_PK_ID_TYPES = (ST.ShortType, ST.IntegerType, ST.LongType, ST.StringType)
+# type families whose widths the row test compares exactly under one
+# another (see _row_test_exact)
+_ROW_FAMILIES = (
+    (ST.ByteType, ST.ShortType, ST.IntegerType, ST.LongType),
+    (ST.FloatType, ST.DoubleType),
+)
 
 
 def _row_holds(op: str, got: object, val: object) -> bool:
@@ -439,17 +477,25 @@ def _row_holds(op: str, got: object, val: object) -> bool:
     return got == val if op == "=" else _ROW_CMP[op](got, val)
 
 
+def _float_key(v: float | None) -> tuple | None:
+    """A float as a key that orders like Spark: NaN equals NaN and is
+    above every number."""
+    return None if v is None else ((1, 0.0) if v != v else (0, v))
+
+
 def _row_test(groups: list, aliases: list[str] | None = None):
     """The row-test lowering of a bound tree: ``callable(row) ->
     bool`` over row dicts keyed like ``_where_col``'s columns, with
-    the same semantics. Pure-buffer DML and endpoint refs use it:
-    point DML on unflushed in-memory rows is the reference's own
-    execution model (Go maps on one machine), and a distributed job
-    over a 4-row createDataFrame costs ~0.5s per statement.
-    Timestamps compare as the instants Spark stores — epoch
-    microseconds, as ``TimestampType().toInternal`` computes them —
-    so values with and without a UTC offset order like they do in
-    the ``Column`` lowering."""
+    the same semantics. DML on driver-held rows (a pure-buffer table
+    or a small flushed table's scan, see ``_mutation_rows``) and
+    endpoint refs use it: point DML on in-memory rows is the
+    reference's own execution model (Go maps on one machine), and a
+    Spark job costs ~0.5 s per statement. Timestamps compare as the
+    instants Spark stores — epoch microseconds, as
+    ``TimestampType().toInternal`` computes them — so values with and
+    without a UTC offset order like they do in the ``Column``
+    lowering; floating-point NaN equals NaN and sorts above every
+    number, as in Spark."""
 
     def member(m):
         if isinstance(m, zn.Sub):
@@ -459,11 +505,12 @@ def _row_test(groups: list, aliases: list[str] | None = None):
         else:
             checks = []
             for i, f, dt, val in m.owners:
-                norm = (
-                    _TIMESTAMP.toInternal
-                    if isinstance(dt, ST.TimestampType)
-                    else (lambda v: v)
-                )
+                if isinstance(dt, ST.TimestampType):
+                    norm = _TIMESTAMP.toInternal
+                elif isinstance(dt, (ST.DoubleType, ST.FloatType)):
+                    norm = _float_key
+                else:
+                    norm = lambda v: v  # noqa: E731
                 val = [norm(v) for v in val] if m.op == "in" else norm(val)
                 checks.append((f"{aliases[i]}_{f}" if aliases else f, norm, val))
             test = lambda r: all(  # noqa: E731
@@ -473,6 +520,29 @@ def _row_test(groups: list, aliases: list[str] | None = None):
 
     compiled = [[member(m) for m in group] for group in groups]
     return lambda r: all(any(t(r) for t in g) for g in compiled)
+
+
+def _row_test_exact(groups: list, schema: ST.StructType) -> bool:
+    """Does the row test of ``groups`` select exactly what the
+    ``Column`` does over rows of ``schema``? It does when every bound
+    field stores its catalog type, up to the width of an integer or a
+    float (both sides in one family). A bound table can store other
+    types under a catalog type (a decimal or a byte under ``string``):
+    the ``Column`` compares those with Spark's casts, the row test with
+    Python's."""
+    for m in (m for g in groups for m in g):
+        if isinstance(m, zn.Sub):
+            if not _row_test_exact(m.groups, schema):
+                return False
+        elif isinstance(m, zn.Leaf):
+            for _, f, dt, _ in m.owners:
+                have = schema[f].dataType
+                if have != dt and not any(
+                    isinstance(have, fam) and isinstance(dt, fam)
+                    for fam in _ROW_FAMILIES
+                ):
+                    return False
+    return True
 
 
 def _id_sort_key() -> list[Column]:
@@ -666,7 +736,8 @@ def _apply_order_limit(
     for name, desc in stmt.order_by:
         resolved = _resolve_result_col(out, name, "ORDER BY")
         user_cols.append(F.col(resolved).desc() if desc else F.col(resolved).asc())
-    out = out.orderBy(*user_cols, *tiebreak)
+    if user_cols or tiebreak:  # no tiebreak: the input is in order
+        out = out.orderBy(*user_cols, *tiebreak)
     if getattr(stmt, "offset", None):
         # paging: the deterministic tiebreak above makes the skipped
         # prefix stable, so consecutive pages never overlap or gap;
@@ -696,6 +767,106 @@ def _hkey(v: object) -> object:
     """Hashable key with value-equality semantics (array fields are
     Python lists; nested arrays nest)."""
     return tuple(_hkey(x) for x in v) if isinstance(v, list) else v
+
+
+def _arrow_values(values: list, dt: ST.DataType) -> list:
+    """One column of driver values in the form pyarrow takes for the
+    Arrow type of ``dt``. Timestamps become the epoch microseconds
+    ``toInternal`` computes, exactly as ``createDataFrame(list, …)``
+    converts them (pyarrow's own conversion reads a naive value as UTC,
+    not as local time); arrays recurse."""
+    if isinstance(dt, (ST.TimestampType, ST.TimestampNTZType)):
+        return [None if v is None else dt.toInternal(v) for v in values]
+    if isinstance(dt, ST.ArrayType):
+        return [
+            None if v is None else _arrow_values(v, dt.elementType) for v in values
+        ]
+    return values
+
+
+def _arrow_table(rows: list, schema: ST.StructType) -> pa.Table:
+    """Driver rows (dicts keyed by field name, or tuples in schema
+    order) as one Arrow table of ``schema``. Raises when the schema has
+    no Arrow form or a value does not convert."""
+    asch = to_arrow_schema(schema, error_on_duplicated_field_names_in_struct=True)
+    cols = []
+    for i, f in enumerate(schema.fields):
+        vals = [r.get(f.name) if isinstance(r, dict) else r[i] for r in rows]
+        cols.append(pa.array(_arrow_values(vals, f.dataType), type=asch.field(i).type))
+    return pa.Table.from_arrays(cols, schema=asch)
+
+
+def _snapshot(rows: list, schema: ST.StructType) -> "pa.Table | list[tuple]":
+    """Driver rows as an Arrow table of ``schema`` (``_arrow_table``),
+    or as row tuples when the schema or a value has no Arrow form."""
+    try:
+        return _arrow_table(rows, schema)
+    except (TypeError, ValueError, PySparkException):
+        return [
+            tuple(r.get(f.name) for f in schema.fields)
+            if isinstance(r, dict)
+            else tuple(r)
+            for r in rows
+        ]
+
+
+def _parquet_table(paths: list[str], asch: pa.Schema) -> pa.Table:
+    """Parquet files read with pyarrow and cast to ``asch``: Spark's
+    INT96 timestamps are read as naive microseconds holding the UTC
+    instant (pyarrow's default nanoseconds overflow silently outside
+    1677-2262) and become UTC microseconds, and a column a file lacks
+    reads as nulls, as Spark's read with a schema does."""
+    parts = []
+    for p in paths:
+        t = pq.ParquetFile(p, coerce_int96_timestamp_unit="us").read()
+        parts.append(
+            pa.Table.from_arrays(
+                [
+                    t.column(f.name).cast(f.type)
+                    if f.name in t.column_names
+                    else pa.nulls(t.num_rows, f.type)
+                    for f in asch
+                ],
+                schema=asch,
+            )
+        )
+    return pa.concat_tables(parts) if parts else asch.empty_table()
+
+
+def _write_side_file(path: str, rows: list, schema: ST.StructType) -> None:
+    """A mutation side file written from the driver: one parquet part
+    in the directory ``path``, readable like Spark's."""
+    os.makedirs(path)
+    pq.write_table(
+        _arrow_table(rows, schema), os.path.join(path, "part-00000.parquet")
+    )
+
+
+def _parquet_files(path: str) -> list[str]:
+    """The parquet data files of a side-file directory."""
+    return sorted(
+        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
+    )
+
+
+def _id_order(t: pa.Table) -> pa.Table:
+    """``t`` in the engine's ``_id`` order, ``(length(_id), _id)``
+    (see ``_id_sort_key``; Python's code-point order is Spark's UTF-8
+    byte order)."""
+    ids = t.column(ID_COLUMN).to_pylist()
+    order = sorted(range(len(ids)), key=lambda i: (len(ids[i]), ids[i]))
+    return t.take(pa.array(order, type=pa.int64()))
+
+
+class _Files(NamedTuple):
+    """A chain read's file selection (``_chain_files``): the paths to
+    read, the rows they hold (None when a leaf has no inventory), the
+    physical schema, and whether zone pruning dropped any leaf."""
+
+    paths: list[str]
+    rows: int | None
+    schema: ST.StructType | None
+    pruned: bool
 
 
 class GraphEngine:
@@ -1001,16 +1172,43 @@ class GraphEngine:
     def bind_node_type(self, name: str, df: DataFrame, pk: str) -> None:
         """Register an existing DataFrame (e.g. a parquet fixture table)
         as a node type; ``pk`` becomes both the declared PRIMARY KEY and
-        the string ``_id``. This is the bulk path: MATCH/UPDATE/DELETE
-        compile to full Spark plans over the bound data."""
+        the string ``_id``. The PK gets its unique index, as CREATE NODE
+        gives it, so INSERT rejects a duplicate key; and the type is
+        marked ``pk_id``, so INSERT mints ``_id = str(pk)`` (a
+        sequential id could collide with a bound row's key text). The
+        catalog snapshot records the mark, so replay after a reopen
+        mints the same ids. The PK must be an integer or a string
+        column: only for those does Python's ``str`` spell a key as
+        Spark's cast does (a double reads ``1.0E20`` in Spark, a bool
+        ``true``). MATCH/UPDATE/DELETE compile to full Spark plans over
+        the bound data, or run on the driver once a flushed table is
+        small (``_small_scan``)."""
         with self._lock:
             if self.catalog.node(name) is not None:
                 raise EngineError(f"node {name!r} already exists")
+            if pk not in df.columns or not isinstance(
+                df.schema[pk].dataType, _PK_ID_TYPES
+            ):
+                raise EngineError(
+                    f"primary key {pk!r} of bound node type {name!r} must be "
+                    f"an integer or string column"
+                )
             fields = tuple(
-                FieldSpec(name=f.name, type=_spark_to_type_spec(f.dataType), not_null=False)
+                FieldSpec(
+                    name=f.name,
+                    type=_spark_to_type_spec(f.dataType),
+                    not_null=False,
+                    unique=f.name == pk,
+                )
                 for f in df.schema.fields
             )
-            nt = NodeType(name=name, fields=fields, pk=pk)
+            nt = NodeType(
+                name=name,
+                fields=fields,
+                pk=pk,
+                indexes=(IndexSpec(pk, unique=True),),
+                pk_id=True,
+            )
             self.catalog = self.catalog.with_node(nt)
             base = df.withColumn(ID_COLUMN, F.col(pk).cast("string")).select(
                 ID_COLUMN, *[f.name for f in df.schema.fields]
@@ -1321,24 +1519,26 @@ class GraphEngine:
             for k in [k for k in cache if k[0] == kind and k[1] == name]:
                 del cache[k]
 
-    def _chain_read(
+    def _chain_files(
         self,
         kind: str,
         name: str,
         version: int,
         schema: ST.StructType | None = None,
         prune_groups: list | None = None,
-    ) -> tuple[DataFrame, bool]:
-        """The table AS OF ``version`` read from the per-version file
-        manifests: explicit file paths (no directory listing — the
-        100-TB metadata fix, VERDICT r12 #1) with the recorded
-        physical schema (no footer inference). A chain member or leaf
-        without an inventory (pre-r13 dirs) falls back to its dir
-        path; ``prune_groups`` (compiled WHERE, engine/zones.py)
-        drops leafs whose zone stats/bloom prove no base row can
-        match. Returns (df, pruned_any)."""
+    ) -> _Files:
+        """The files of the table AS OF ``version``, selected from the
+        per-version file manifests: explicit file paths (no directory
+        listing — the 100-TB metadata fix, VERDICT r12 #1) with the
+        recorded physical schema (no footer inference) and their row
+        count. A chain member or leaf without an inventory (pre-r13
+        dirs) falls back to its dir path (rows unknown);
+        ``prune_groups`` (compiled WHERE, engine/zones.py) drops leafs
+        whose zone stats/bloom prove no base row can match, and a
+        pruned selection appends its decision to ``_prune_log``."""
         base_dir = os.path.join(self.data_dir, "tables", f"{kind}_{name}")
         paths: list[str] = []
+        rows: int | None = 0
         pruned_any = False
         kept_leafs = total_leafs = 0
         read_schema = schema
@@ -1401,6 +1601,7 @@ class GraphEngine:
         for owner, leaf_key, ldir, meta in records:
             if meta is None:
                 paths.append(ldir)  # legacy dir: list, never prune
+                rows = None
                 continue
             if prune_groups is not None:
                 stats = meta.get("_stats")
@@ -1423,6 +1624,8 @@ class GraphEngine:
                     continue
                 kept_leafs += 1
             paths.extend(os.path.join(ldir, f[0]) for f in meta["files"])
+            if rows is not None:
+                rows += meta["rows"]
         if prune_groups is not None and total_leafs > 0:
             # total_leafs == 0 means every element was legacy/no-
             # inventory (nothing was prunable) — an audit line reading
@@ -1439,18 +1642,36 @@ class GraphEngine:
                     "job" if probed is not None else "driver",
                 )
             )
-        if not paths:
+        return _Files(paths, rows, read_schema, pruned_any)
+
+    def _read_files(self, kind: str, name: str, sel: _Files) -> DataFrame:
+        """Spark's read of a file selection (an empty selection reads
+        as an empty frame with the best-known schema)."""
+        if not sel.paths:
             tab = self.tables.get((kind, name))
             empty_schema = (
-                read_schema
-                if read_schema is not None
+                sel.schema
+                if sel.schema is not None
                 else (tab.schema if tab is not None else ST.StructType([]))
             )
-            return self.spark.createDataFrame([], empty_schema), pruned_any
+            return self._local_frame([], empty_schema)
         reader = self.spark.read
-        if read_schema is not None:
-            reader = reader.schema(read_schema)
-        return reader.parquet(*paths), pruned_any
+        if sel.schema is not None:
+            reader = reader.schema(sel.schema)
+        return reader.parquet(*sel.paths)
+
+    def _chain_read(
+        self,
+        kind: str,
+        name: str,
+        version: int,
+        schema: ST.StructType | None = None,
+        prune_groups: list | None = None,
+    ) -> tuple[DataFrame, bool]:
+        """The table AS OF ``version`` read by Spark from its file
+        selection (``_chain_files``). Returns (df, pruned_any)."""
+        sel = self._chain_files(kind, name, version, schema, prune_groups)
+        return self._read_files(kind, name, sel), sel.pruned
 
     def _df_at(
         self,
@@ -1788,21 +2009,25 @@ class GraphEngine:
                 for e in victims:
                     shutil.rmtree(os.path.join(vdir, e), ignore_errors=True)
 
+    def _id_buckets(self, ids: list[str], n: int) -> list[int]:
+        """``pmod(xxhash64(_id), n)`` of each driver-held id, in order.
+        Spark computes the hash (it must be the JVM xxhash64, so bucket
+        membership cannot drift from what flush writes), but over a
+        local relation: the projection folds into it on the driver, so
+        no job runs."""
+        if not ids:
+            return []
+        frame = self._local_frame([(i,) for i in ids], _ID_SCHEMA)
+        return [r[0] for r in frame.select(self._bucket_expr(n)).collect()]
+
     def _buffer_buckets(self, tab: _Table) -> set[int]:
-        """Hash buckets of the driver-held buffer rows — a buffer-sized
-        Spark job (the bucket hash must be the JVM xxhash64, so it is
-        never computed driver-side)."""
-        buf = self._buffer_df(tab)
-        if buf is None:
-            return set()
-        return {
-            int(r["b"])
-            for r in buf.select(
-                self._bucket_expr(self._tab_bucket_n(tab)).alias("b")
+        """Hash buckets of the driver-held buffer rows (zero jobs, see
+        ``_id_buckets``)."""
+        return set(
+            self._id_buckets(
+                [r[ID_COLUMN] for r in tab.buffer], self._tab_bucket_n(tab)
             )
-            .distinct()
-            .collect()
-        }
+        )
 
     def _write_bucketed(
         self, kind: str, name: str, tab: _Table, prev: int, staging: str
@@ -1878,7 +2103,7 @@ class GraphEngine:
             start = (
                 self.spark.read.schema(tab.schema).parquet(*leaf_paths)
                 if leaf_paths
-                else self.spark.createDataFrame([], tab.schema)
+                else self._local_frame([], tab.schema)
             )
             df = self._compose_mut_parts(tab, start)
             buf_df = self._buffer_df(tab)
@@ -2017,7 +2242,7 @@ class GraphEngine:
                 base = (
                     self.spark.read.schema(schema).parquet(*chain)
                     if chain
-                    else self.spark.createDataFrame([], schema)
+                    else self._local_frame([], schema)
                 )
                 # restore the live layout's bucket count from the tip
                 # chain's bucket-complete version (its first element),
@@ -2223,13 +2448,27 @@ class GraphEngine:
             raise EngineError(f"{kind} type {name!r} does not exist")
         return tab
 
+    def _local_frame(
+        self, data: "list | pa.Table", schema: "ST.StructType | str"
+    ) -> DataFrame:
+        """THE way driver rows enter Spark: ``data`` (an Arrow table of
+        ``schema``, or rows as ``_snapshot`` takes them; ``schema`` may
+        be a DDL string) becomes one Arrow table and ``createDataFrame``
+        turns it into a LocalRelation. Spark folds filters and projections over a local
+        relation into it on the driver, so reading one runs no job,
+        where a frame built from a Python list is a parallelized RDD
+        that costs a job (~0.5 s) at every use. A schema or value
+        without an Arrow form keeps the list path."""
+        if isinstance(schema, str):
+            schema = ST.StructType.fromDDL(schema)
+        if not isinstance(data, pa.Table):
+            data = _snapshot(data, schema)
+        return self.spark.createDataFrame(data, schema)
+
     def _buffer_df(self, tab: _Table) -> DataFrame | None:
         if not tab.buffer:
             return None
-        rows = [
-            tuple(r.get(f.name) for f in tab.schema.fields) for r in tab.buffer
-        ]
-        return self.spark.createDataFrame(rows, tab.schema)
+        return self._local_frame(tab.buffer, tab.schema)
 
     def _merged_df(self, key: tuple[str, str]) -> DataFrame:
         tab = self.tables[key]
@@ -2240,37 +2479,108 @@ class GraphEngine:
             return tab.base
         if buf_df is not None:
             return buf_df
-        return self.spark.createDataFrame([], tab.schema)
+        return self._local_frame([], tab.schema)
 
-    def _pruned_merged_df(
-        self, key: tuple[str, str], tab: _Table, groups: list | None
-    ) -> DataFrame | None:
-        """The live view with the flushed-chain start zone-pruned for
-        a compiled WHERE (VERDICT r12 #2): candidate leafs read by
-        explicit file list, pending mutation layers replayed in full,
-        current buffer unioned. Sound because a base row the pruning
-        drops either still holds its (non-matching) base values or
-        was rewritten — in which case its composed row arrives via a
-        fully-read patch layer while the anti-join removes the base
-        copy regardless. None when pruning does not apply (no chain,
-        ALTER in flight, rebase layer, no inventories) or removed
-        nothing — callers fall back to the ordinary merged view."""
-        if (
-            groups is None
-            or tab.version == 0
-            or not self.data_dir
-            or tab.touched_buckets is None  # ALTER migrated the base
-            or any(op == "rebase" for op, _ in tab.mut_parts)
-        ):
-            return None
-        start, pruned = self._chain_read(
-            key[0], key[1], tab.version, schema=tab.schema, prune_groups=groups
+    def _live_view(
+        self,
+        key: tuple[str, str],
+        tab: _Table,
+        groups: list | None,
+        small: bool = False,
+    ) -> "DataFrame | pa.Table":
+        """The live view of a table for a compiled WHERE (``groups``;
+        None = nothing to prune by). With ``small``, an Arrow table in
+        ``_id`` order when the table is pure-buffer or ``_small_scan``
+        applies, at most ``_SMALL_SCAN_ROWS`` rows either way. Otherwise a
+        DataFrame: with the flushed-chain start zone-pruned (VERDICT
+        r12 #2), candidate leafs read by explicit file list, pending
+        mutation layers replayed in full, current buffer unioned. Sound
+        because a base row the pruning drops either still holds its
+        (non-matching) base values or was rewritten — in which case its
+        composed row arrives via a fully-read patch layer while the
+        anti-join removes the base copy regardless. Pruning does not
+        apply with no chain, an ALTER in flight, a rebase layer or no
+        inventories, and when it removed nothing the ordinary merged
+        view is returned."""
+        if small and tab.base is None and len(tab.buffer) <= _SMALL_SCAN_ROWS:
+            buf = _snapshot(tab.buffer, tab.schema)  # a pure-buffer table
+            if isinstance(buf, pa.Table):
+                return _id_order(buf)
+        chain = (
+            bool(self.data_dir)
+            and tab.version > 0
+            and tab.touched_buckets is not None  # ALTER migrated the base
         )
-        if not pruned:
-            return None
-        df = self._compose_mut_parts(tab, start)
+        sel = None
+        if (
+            chain
+            and (groups is not None or small)
+            and not any(op == "rebase" for op, _ in tab.mut_parts)
+        ):
+            sel = self._chain_files(*key, tab.version, tab.schema, groups)
+        if small and chain:
+            scan = self._small_scan(tab, sel)
+            if scan is not None:
+                return scan
+        if sel is None or not sel.pruned:
+            return self._merged_df(key)
+        df = self._compose_mut_parts(tab, self._read_files(*key, sel))
         buf_df = self._buffer_df(tab)
         return df.unionByName(buf_df) if buf_df is not None else df
+
+    def _small_scan(self, tab: _Table, sel: _Files | None) -> pa.Table | None:
+        """The live view of a small flushed table built on the driver
+        with pyarrow: the selected chain files (or the last rebase
+        snapshot, which restarts the composition), the pending mutation
+        layers applied in order (``d``: anti-join on ``_id``; ``u``:
+        matched rows replaced; ``fold``: rows appended), the buffer
+        appended, sorted by ``_id``. None when a selected leaf has no
+        inventory or the rows to scan exceed ``_SMALL_SCAN_ROWS``."""
+        parts = tab.mut_parts
+        rebase = max(
+            (i for i, (op, _) in enumerate(parts) if op == "rebase"), default=-1
+        )
+        if rebase < 0 and (sel is None or sel.rows is None):
+            return None
+        parts = parts[max(rebase, 0) :]
+        files = {ref: _parquet_files(ref) for op, ref in parts if op != "fold"}
+        rows = (sel.rows if rebase < 0 else 0) + len(tab.buffer)
+        rows += sum(
+            len(ref)
+            if op == "fold"
+            else sum(pq.ParquetFile(f).metadata.num_rows for f in files[ref])
+            for op, ref in parts
+        )
+        if rows > _SMALL_SCAN_ROWS:
+            return None
+        try:
+            asch = to_arrow_schema(tab.schema)
+            out = asch.empty_table() if rebase >= 0 else _parquet_table(sel.paths, asch)
+            for op, ref in parts:
+                if op == "fold":
+                    out = pa.concat_tables([out, ref])
+                elif op == "rebase":
+                    out = _parquet_table(files[ref], asch)
+                else:
+                    side = _parquet_table(
+                        files[ref],
+                        asch if op == "u" else pa.schema([asch.field(ID_COLUMN)]),
+                    )
+                    out = out.filter(
+                        pc.invert(
+                            pc.is_in(
+                                out.column(ID_COLUMN),
+                                value_set=side.column(ID_COLUMN),
+                            )
+                        )
+                    )
+                    if op == "u":
+                        out = pa.concat_tables([out, side])
+            if tab.buffer:
+                out = pa.concat_tables([out, _arrow_table(tab.buffer, tab.schema)])
+        except (pa.ArrowException, TypeError, ValueError, PySparkException):
+            return None  # no Arrow form (a fold kept row tuples): Spark path
+        return _id_order(out)
 
     def _element_scan(
         self,
@@ -2286,15 +2596,13 @@ class GraphEngine:
         exclusively to it; on a NULLABLE side (at/after an OPTIONAL
         hop, or an optional endpoint) only predicates that also reject
         the NULL padding qualify (see zones.compile_chain_pruning_groups)."""
-        df = None
-        if where and self.zone_stats:
-            df = self._pruned_merged_df(
-                key,
-                self.tables[key],
-                zn.compile_chain_pruning_groups(where, i, nullable),
-            )
-        if df is None:
-            df = self._merged_df(key)
+        df = self._live_view(
+            key,
+            self.tables[key],
+            zn.compile_chain_pruning_groups(where, i, nullable)
+            if where and self.zone_stats
+            else None,
+        )
         return df.select(*[F.col(c).alias(f"{alias}_{c}") for c in df.columns])
 
     # --------------------------------------------------------- helpers
@@ -2382,8 +2690,11 @@ class GraphEngine:
         unique_fields = [i.field for i in nt.indexes if i.unique]
         key = ("node", stmt.node_type)
         self._check_unique(key, unique_fields, row)
-        row[ID_COLUMN] = str(self.next_id)
-        self.next_id += 1
+        if nt.pk_id:
+            row[ID_COLUMN] = str(row[nt.pk])
+        else:
+            row[ID_COLUMN] = str(self.next_id)
+            self.next_id += 1
         tab = self._table(*key)
         tab.buffer.append(row)
         tab.dirty = True
@@ -2470,8 +2781,9 @@ class GraphEngine:
     ) -> bool:
         """Does a row with this exact ``_id`` exist? Buffer rows are
         checked driver-side (no job). On a CLEAN flushed table the
-        disk probe is BUCKET-PRUNED: one tiny job computes the id's
-        hash bucket, then only the owning ``_gbkt`` leaf dir (plus any
+        disk probe is BUCKET-PRUNED: the id's hash bucket is computed
+        with no job (``_id_buckets``), then only the owning ``_gbkt``
+        leaf dir (plus any
         delta dirs, which are batch-sized) is read — O(1) files where
         the merged-frame filter reads every file's listing/footers.
         At 100 TB this is the difference between a point lookup and a
@@ -2501,15 +2813,7 @@ class GraphEngine:
         )
         paths: list[str] = []
         if bm is not None:
-            b = (
-                self.spark.range(1)
-                .select(
-                    F.pmod(
-                        F.xxhash64(F.lit(id_text)), F.lit(int(bm["n"]))
-                    ).alias("b")
-                )
-                .first()["b"]
-            )
+            b = self._id_buckets([id_text], int(bm["n"]))[0]
             owner = bm["map"].get(str(b))
             if owner is not None:
                 paths.append(
@@ -2543,10 +2847,14 @@ class GraphEngine:
     ) -> tuple:
         """The matched-rows step UPDATE and DELETE share. The WHERE and
         the edge endpoint refs (set semantics: ALL matching nodes,
-        unlike INSERT's single resolve) bind once. On a pure-buffer
-        table whose endpoint node tables are pure-buffer too they lower
-        to one row test: ``(test, None, None)``, and the statement runs
-        with zero Spark jobs. Otherwise ``(None, df, pred)``: the live
+        unlike INSERT's single resolve) bind once and the result is
+        ``(test, rows, df, pred)``. When every endpoint node table is
+        pure-buffer, the statement runs on the driver with zero Spark
+        jobs: on a pure-buffer table ``(test, None, None, None)``, a
+        row test over ``tab.buffer``; on a small flushed table
+        ``(test, rows, None, pred)``, the same test over the rows of
+        ``_small_scan`` (``pred`` is the WHERE's ``Column`` for the
+        unique probe). Otherwise ``(None, None, df, pred)``: the live
         view zone-pruned for the WHERE, with each endpoint's matching
         ids left-joined on as a marker column (node ids are unique, so
         the joins never duplicate edge rows, and the predicate stays a
@@ -2563,24 +2871,37 @@ class GraphEngine:
             ):
                 if ref is not None:
                     eps.append((ref, side, col, *self._endpoint_ref(ref, label, side)))
-        if tab.base is None and all(ep_tab.base is None for *_, ep_tab, _ in eps):
+        driver_eps = all(ep_tab.base is None for *_, ep_tab, _ in eps)
+        if driver_eps:
             tests = [_row_test(where)]
             for ref, _, col, ep_tab, bound in eps:
                 hit = self._ref_test(ref, bound)
                 ids = {r[ID_COLUMN] for r in ep_tab.buffer if hit(r)}
                 tests.append(lambda r, c=col, s=ids: r.get(c) in s)
-            return (lambda r: all(t(r) for t in tests)), None, None
+            test = lambda r: all(t(r) for t in tests)  # noqa: E731
+            if tab.base is None:
+                return test, None, None, None
         # zone/bloom pruning: restrict the base scan to the leafs whose
         # stats admit the predicate (point statements on a bloomed
         # field read O(1) leafs instead of the chain)
-        df = self._pruned_merged_df(
+        # the driver path writes SET values into Arrow columns: each
+        # must be stored as its catalog type (a string into a bound
+        # decimal column only converts through Spark's cast)
+        exact = _row_test_exact(where, tab.schema) and all(
+            tab.schema[p.name].dataType == spark_type(specs[p.name].type)
+            for p in getattr(stmt, "set", ())
+            if p.name in specs and p.name in tab.schema.fieldNames()
+        )
+        view = self._live_view(
             key,
             tab,
             zn.compile_pruning_groups(where) if where and self.zone_stats else None,
+            small=driver_eps and exact,
         )
-        if df is None:
-            df = self._merged_df(key)
         pred = _where_col(where)
+        if isinstance(view, pa.Table):
+            return test, view.to_pylist(), None, pred
+        df = view
         for ref, side, col, _, bound in eps:
             marker = f"_grapho_{side.lower()}_match"
             ids = (
@@ -2590,7 +2911,7 @@ class GraphEngine:
             )
             df = df.join(ids, df[col] == ids[marker], "left")
             pred = pred & F.col(marker).isNotNull()
-        return None, df, pred
+        return None, None, df, pred
 
     def _insert_edge(self, stmt: ast.InsertEdgeStmt) -> StatementResult:
         et = self.catalog.edge(stmt.edge_type)
@@ -2731,11 +3052,7 @@ class GraphEngine:
         _ID is a subset of its row width, so the true broadcast
         payload (the _id projection) is never larger than this."""
         try:
-            return sum(
-                os.stat(os.path.join(path, f)).st_size
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
+            return sum(os.stat(f).st_size for f in _parquet_files(path))
         except OSError:
             return 0
 
@@ -2749,13 +3066,15 @@ class GraphEngine:
         out = start
         for op, ref in tab.mut_parts:
             if op == "fold":
-                out = out.unionByName(ref)
+                out = out.unionByName(self._local_frame(ref, tab.schema))
             elif op == "rebase":
                 # full-view snapshot: composition restarts here
                 out = self.spark.read.schema(tab.schema).parquet(ref)
             elif op == "d":
                 out = out.join(
-                    self.spark.read.parquet(ref), ID_COLUMN, "left_anti"
+                    self.spark.read.schema(_ID_SCHEMA).parquet(ref),
+                    ID_COLUMN,
+                    "left_anti",
                 )
             else:  # "u"
                 patch = self.spark.read.schema(tab.schema).parquet(ref)
@@ -2765,7 +3084,12 @@ class GraphEngine:
         return out
 
     def _publish_mutation(
-        self, tab: _Table, path: str, op: str, count: int
+        self,
+        tab: _Table,
+        path: str,
+        op: str,
+        count: int,
+        ids: list[str] | None = None,
     ) -> None:
         """Merge-on-read publish of an UPDATE/DELETE (VERDICT r11 #1):
         compose the statement's side file onto the live view —
@@ -2787,32 +3111,32 @@ class GraphEngine:
         plus the buffer's, since the fold below moves buffered inserts
         into base (a later partial rewrite would otherwise drop
         surviving ex-buffer rows in untouched buckets; caught by the
-        r10 durable soak, seed 209)."""
-        side = (
-            self.spark.read.schema(tab.schema).parquet(path)
-            if op == "u"
-            else self.spark.read.parquet(path)
-        )
+        r10 durable soak, seed 209). When the matched ``ids`` are on
+        the driver, their buckets are hashed with no job."""
+        side = self.spark.read.schema(
+            tab.schema if op == "u" else _ID_SCHEMA
+        ).parquet(path)
         if tab.touched_buckets is not None:
-            tab.touched_buckets |= {
-                int(r["b"])
-                for r in side.select(
-                    self._bucket_expr(self._tab_bucket_n(tab)).alias("b")
-                )
-                .distinct()
-                .collect()
-            }
+            n = self._tab_bucket_n(tab)
+            tab.touched_buckets |= (
+                set(self._id_buckets(ids, n))
+                if ids is not None
+                else {
+                    int(r[0])
+                    for r in side.select(self._bucket_expr(n)).distinct().collect()
+                }
+            )
             if tab.buffer:
                 tab.touched_buckets |= self._buffer_buckets(tab)
-        buf_df = self._buffer_df(tab)
         base = (
             tab.base
             if tab.base is not None
-            else self.spark.createDataFrame([], tab.schema)
+            else self._local_frame([], tab.schema)
         )
-        if buf_df is not None:
-            tab.mut_parts.append(("fold", buf_df))
-            base = base.unionByName(buf_df)
+        if tab.buffer:
+            fold = _snapshot(tab.buffer, tab.schema)
+            tab.mut_parts.append(("fold", fold))
+            base = base.unionByName(self._local_frame(fold, tab.schema))
             tab.buffer = []
             tab.base_layers += 1
         small = count <= _MUT_BROADCAST_ROWS and (
@@ -2896,25 +3220,43 @@ class GraphEngine:
         specs = self._field_specs(kind, type_name)
         key = (kind, type_name)
         tab = self._table(*key)
-        test, df, pred = self._mutation_rows(stmt, kind, type_name, specs, tab)
+        test, rows, df, pred = self._mutation_rows(
+            stmt, kind, type_name, specs, tab
+        )
         sets = self._coerce_sets(stmt, specs, type_name)
-        if test is not None:
+        nt = self.catalog.node(type_name) if is_node else None
+        if nt is not None and nt.pk_id and nt.pk in sets:
+            raise EngineError(
+                f"primary key {nt.pk!r} of a bound node type is its _id "
+                f"and cannot be updated"
+            )
+        if test is not None and rows is None:
             return self._update_buffer(stmt, kind, type_name, tab, test, sets)
 
-        # ONE base scan per statement (r12): write the matched rows
-        # (with SET applied) straight to the side file, then derive
-        # count and touched buckets from the side file itself —
-        # footer-cheap reads of an O(matched) table, replacing the
-        # separate stats aggregation scan of the whole chain.
-        patch_rows = df.filter(pred)
-        for k, v in sets.items():
-            patch_rows = patch_rows.withColumn(
-                k, F.lit(v).cast(df.schema[k].dataType)
-            )
         cols = [f.name for f in tab.schema.fields]
         path = self._mut_scratch_dir()
-        patch_rows.select(*cols).write.mode("overwrite").parquet(path)
-        count = self.spark.read.schema(tab.schema).parquet(path).count()
+        ids = None
+        if rows is not None:
+            # small table: the matched rows, with SET applied, go to
+            # the side file from the driver
+            matched = [{**r, **sets} for r in rows if test(r)]
+            count = len(matched)
+            ids = [r[ID_COLUMN] for r in matched]
+            if count:
+                _write_side_file(path, matched, tab.schema)
+        else:
+            # ONE base scan per statement (r12): write the matched rows
+            # (with SET applied) straight to the side file, then derive
+            # count and touched buckets from the side file itself —
+            # footer-cheap reads of an O(matched) table, replacing the
+            # separate stats aggregation scan of the whole chain.
+            patch_rows = df.filter(pred)
+            for k, v in sets.items():
+                patch_rows = patch_rows.withColumn(
+                    k, F.lit(v).cast(df.schema[k].dataType)
+                )
+            patch_rows.select(*cols).write.mode("overwrite").parquet(path)
+            count = self.spark.read.schema(tab.schema).parquet(path).count()
         if count:
             # Uniqueness guard BEFORE any state change. Every matched
             # row gets the SAME literal — a violation is exactly
@@ -2924,7 +3266,6 @@ class GraphEngine:
             # replaces the old full-table groupBy-dedup scan with an
             # O(1) check plus one pushdown probe per set unique field.
             if is_node:
-                nt = self.catalog.node(type_name)
                 set_lits = {p.name: p.value for p in stmt.set}
                 for idx in nt.indexes:
                     if idx.unique and idx.field in sets:
@@ -2938,11 +3279,9 @@ class GraphEngine:
                             (ast.Property(idx.field, set_lits[idx.field]),),
                             [(None, specs, cols)],
                         )
-                        probe_df = self._pruned_merged_df(
+                        probe_df = self._live_view(
                             key, tab, zn.compile_pruning_groups(probe)
                         )
-                        if probe_df is None:
-                            probe_df = self._merged_df(key)
                         clash = count > 1 or bool(
                             probe_df.filter(
                                 ~pred.eqNullSafe(F.lit(True)) & _where_col(probe)
@@ -2958,7 +3297,7 @@ class GraphEngine:
                             raise EngineError(
                                 f"unique violation on {idx.field!r} after update"
                             )
-            self._publish_mutation(tab, path, "u", count)
+            self._publish_mutation(tab, path, "u", count, ids)
             # SET may introduce values unseen by the sketches — a stale
             # bloom would false-negative and skip a real duplicate scan.
             tab.blooms.clear()
@@ -2974,8 +3313,10 @@ class GraphEngine:
         if not stmt.where and (is_node or not (stmt.from_node or stmt.to_node)):
             # the parser mandates a predicate; guard the programmatic path
             raise EngineError("DELETE requires WHERE or endpoint refs")
-        test, df, pred = self._mutation_rows(stmt, kind, type_name, specs, tab)
-        if test is not None:
+        test, rows, df, pred = self._mutation_rows(
+            stmt, kind, type_name, specs, tab
+        )
+        if test is not None and rows is None:
             # pure-buffer fast path: filter the driver-held rows
             keep = [r for r in tab.buffer if not test(r)]
             count = len(tab.buffer) - len(keep)
@@ -2988,10 +3329,18 @@ class GraphEngine:
         # _ids (O(matched), not an O(table) rewrite), then derive count
         # and touched buckets from the side file, as in _update.
         path = self._mut_scratch_dir()
-        df.filter(pred).select(ID_COLUMN).write.mode("overwrite").parquet(path)
-        count = self.spark.read.parquet(path).count()
+        ids = None
+        if rows is not None:
+            # small table: the deletion vector is written from the driver
+            ids = [r[ID_COLUMN] for r in rows if test(r)]
+            count = len(ids)
+            if count:
+                _write_side_file(path, [(i,) for i in ids], _ID_SCHEMA)
+        else:
+            df.filter(pred).select(ID_COLUMN).write.mode("overwrite").parquet(path)
+            count = self.spark.read.parquet(path).count()
         if count:
-            self._publish_mutation(tab, path, "d", count)
+            self._publish_mutation(tab, path, "d", count, ids)
         # NOTE: like the reference, DELETE NODE does not cascade or
         # validate dangling edges (SURVEY.md §2.1 #12).
         self._log_dml(stmt)
@@ -3058,6 +3407,18 @@ class GraphEngine:
                 "stringifies heterogenous columns; SUM/AVG would cast-"
                 "error and COUNT(DISTINCT)/MIN/MAX would compare strings)"
             )
+        # A single-element MATCH that returns rows in _id order runs
+        # over a small table's driver scan (see _small_scan): the
+        # filter and projection fold into its local relation, and the
+        # scan is already in _id order, so no job runs.
+        small = not multi and not (
+            stmt.as_of is not None
+            or stmt.order_by
+            or stmt.return_distinct
+            or stmt.return_count
+            or stmt.return_agg
+            or stmt.return_aggs
+        )
         for el in stmt.pattern:
             nt = self.catalog.node(el.type)
             if nt is None:
@@ -3087,9 +3448,11 @@ class GraphEngine:
                 if df.columns != columns:
                     where = _bind_where(stmt.where, [(alias, specs, df.columns)])
             else:
-                df = self._pruned_merged_df(key, tab, groups)
-                if df is None:
-                    df = self._merged_df(key)
+                df = self._live_view(key, tab, groups, small)
+                if isinstance(df, pa.Table):
+                    df = self._local_frame(df, tab.schema)
+                else:
+                    small = False
             df = df.filter(_where_col(where))
             if stmt.return_fields or stmt.return_aggs:
                 cols: list[Column] = [F.col(ID_COLUMN)]
@@ -3144,7 +3507,7 @@ class GraphEngine:
         out = _apply_order_limit(
             out,
             stmt,
-            [*tiebreak, *_id_sort_key()],
+            [] if small else [*tiebreak, *_id_sort_key()],
             distinct_cols=self._distinct_cols(
                 stmt,
                 # DISTINCT must name OUTPUT columns: a qualified return
@@ -3551,7 +3914,7 @@ class GraphEngine:
         lines = prune_lines + [
             (ln,) for ln in plan_string(res.df, "formatted").splitlines() if ln.strip()
         ]
-        df = self.spark.createDataFrame(lines, "plan: string")
+        df = self._local_frame(lines, "plan string")
         return StatementResult(
             kind="explain",
             message=f"Explained MATCH: {len(lines)} plan lines",
@@ -3607,7 +3970,7 @@ class GraphEngine:
                         n,
                     )
                 )
-            df = self.spark.createDataFrame(
+            df = self._local_frame(
                 rows,
                 "name string, version long, is_latest boolean, "
                 "layout string, buckets_owned int, chain_len int, "
@@ -3619,7 +3982,7 @@ class GraphEngine:
                 (n.name, len(n.fields), n.pk, self.catalog.version)
                 for n in sorted(self.catalog.nodes, key=lambda n: n.name)
             ]
-            df = self.spark.createDataFrame(
+            df = self._local_frame(
                 rows, "name string, n_fields int, pk string, catalog_version long"
             )
         else:
@@ -3634,7 +3997,7 @@ class GraphEngine:
                 )
                 for e in sorted(self.catalog.edges, key=lambda e: e.name)
             ]
-            df = self.spark.createDataFrame(
+            df = self._local_frame(
                 rows,
                 "name string, from_label string, from_card string, "
                 "to_label string, to_card string, n_props int",
@@ -3666,7 +4029,7 @@ class GraphEngine:
                  p.default.text if p.default else None)
                 for p in et.props
             ]
-        df = self.spark.createDataFrame(
+        df = self._local_frame(
             rows,
             "field string, type string, primary_key boolean, is_unique boolean, "
             "not_null boolean, default_value string",

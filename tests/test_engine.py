@@ -329,6 +329,53 @@ def test_bind_node_type_bulk_match(spark, sf_dir):
     assert res.df.count() == expected
 
 
+def _bound_keys(spark, tmp_path) -> GraphEngine:
+    """A flushed bound type C whose _id is its primary key k (1..5)."""
+    from pyspark.sql import functions as F
+
+    eng = GraphEngine(spark, data_dir=str(tmp_path / "bound"))
+    df = spark.range(1, 6).select(F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
+    eng.bind_node_type("C", df, pk="k")
+    eng.flush()
+    return eng
+
+
+@pytest.mark.parametrize("pk_type", ["double", "boolean", "timestamp", "decimal(10,0)"])
+def test_bound_type_primary_key_must_be_an_integer_or_a_string(spark, pk_type):
+    # INSERT spells the _id of such a key with Python's str, which
+    # differs from Spark's cast ('1.0E20' vs '1e+20', 'true' vs 'True')
+    eng = GraphEngine(spark)
+    df = spark.range(1, 3).selectExpr(f"cast(id as {pk_type}) as k", "id as v")
+    with pytest.raises(EngineError, match="integer or string column"):
+        eng.bind_node_type("C", df, pk="k")
+    assert eng.catalog.node("C") is None
+
+
+def test_bound_type_rejects_a_duplicate_primary_key(spark, tmp_path):
+    eng = _bound_keys(spark, tmp_path)
+    with pytest.raises(EngineError, match="unique violation on 'k'"):
+        eng.execute("INSERT NODE C (k: 1, v: 9);")
+    rows = eng.execute("MATCH C WHERE k: 1 RETURN v;")[0].df.collect()
+    assert [(r["_id"], r["v"]) for r in rows] == [("1", 10)]
+
+
+def test_bound_type_insert_takes_its_id_from_the_primary_key(spark, tmp_path):
+    eng = _bound_keys(spark, tmp_path)
+    res = eng.execute("INSERT NODE C (k: 10000001, v: 1);")[0]
+    assert res.message == "Inserted node C id=10000001"
+    # the new row's _id must not collide with a bound row's ("2"
+    # used to be minted from the sequential counter)
+    assert eng.execute("UPDATE NODE C SET v: 7 WHERE k: 10000001;")[0].count == 1
+    want = {"1": 10, "2": 20, "3": 30, "4": 40, "5": 50, "10000001": 7}
+    assert {r["_id"]: r["v"] for r in eng.node_df("C").collect()} == want
+    with pytest.raises(EngineError, match="cannot be updated"):
+        eng.execute("UPDATE NODE C SET k: 9 WHERE k: 1;")
+    # replay after a reopen mints the same ids
+    eng2 = GraphEngine(spark, data_dir=eng.data_dir)
+    assert {r["_id"]: r["v"] for r in eng2.node_df("C").collect()} == want
+    assert eng2.catalog.node("C").pk_id
+
+
 def test_durability_replay(spark, tmp_path):
     d = str(tmp_path / "db")
     eng = GraphEngine(spark, data_dir=d)
@@ -2483,12 +2530,17 @@ def test_return_count_field_non_null(eng):
     assert sorted(r.columns) == ["count_age", "n_rows"]
 
 
-def test_delta_chain_read_keeps_pushdown(spark, tmp_path):
+def test_delta_chain_read_keeps_pushdown(spark, tmp_path, monkeypatch):
     # r9: the multi-path chain read (full + deltas) must stay ONE
     # parquet scan with predicates pushed — a lost pushdown on the
-    # composed read would be a silent full-scan regression at scale
+    # composed read would be a silent full-scan regression at scale.
+    # A table this small is scanned on the driver; a zero cap keeps
+    # the statement on the Spark read this test is about.
     import re
 
+    from grapho_spark.engine import engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "_SMALL_SCAN_ROWS", 0)
     eng = GraphEngine(spark, data_dir=str(tmp_path / "d"))
     eng.execute(
         "CREATE NODE CPD (id: int PRIMARY KEY, v: int);"

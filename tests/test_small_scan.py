@@ -1,0 +1,298 @@
+"""Zero-job OLTP statements: driver rows enter Spark as Arrow local
+relations (``GraphEngine._local_frame``), and node MATCH, UPDATE and
+DELETE on a small flushed table run over a pyarrow scan
+(``GraphEngine._small_scan``). The small path must be invisible on the
+wire: replies are byte-identical to the Spark plan's."""
+
+from __future__ import annotations
+
+import ast
+import datetime as dt
+import decimal
+import random
+
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as ST
+
+from grapho_spark.engine import GraphEngine
+from grapho_spark.engine import engine as engine_mod
+from grapho_spark.server import execute_command
+
+from test_differential_model import DOMAIN, _rand_conds
+
+
+def _jobs(spark, fn):
+    """(result, Spark jobs ``fn`` ran), counted under a job group."""
+    sc = spark.sparkContext
+    group = f"small-scan-{random.random()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_engine_builds_driver_frames_only_through_local_frame():
+    tree = ast.parse(open(engine_mod.__file__, encoding="utf-8").read())
+
+    def calls(node) -> set:
+        return {
+            id(c)
+            for c in ast.walk(node)
+            if isinstance(c, ast.Call)
+            and isinstance(c.func, ast.Attribute)
+            and c.func.attr == "createDataFrame"
+        }
+
+    inside = set().union(
+        *(
+            calls(fn)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and fn.name == "_local_frame"
+        )
+    )
+    assert inside and calls(tree) == inside
+
+
+def test_local_frame_is_a_local_relation(spark):
+    eng = GraphEngine(spark)
+    eng.execute(
+        "CREATE NODE P (k: int PRIMARY KEY, at: datetime);"
+        "INSERT NODE P (k: 1, at: '2024-01-01T10:00:00+02:00');"
+        "INSERT NODE P (k: 2, at: '2024-01-01T08:00:00');"
+    )
+    df = eng.node_df("P")
+    plan = _plan(df)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    rows, jobs = _jobs(spark, lambda: df.filter(F.col("k") > 0).collect())
+    assert jobs == 0
+    # both instants are 08:00 UTC, as the list path converts them
+    assert {r["at"] for r in rows} == {dt.datetime(2024, 1, 1, 8, 0)}
+
+
+def test_local_frame_keeps_the_list_path_without_an_arrow_form(spark):
+    eng = GraphEngine(spark)
+    dup = ST.StructType([
+        ST.StructField("s", ST.StructType([
+            ST.StructField("a", ST.LongType()), ST.StructField("a", ST.LongType()),
+        ])),
+    ])
+    df = eng._local_frame([((1, 2),)], dup)
+    assert df.schema == dup
+    assert [tuple(r["s"]) for r in df.collect()] == [(1, 2)]
+
+
+def test_id_buckets_hash_like_spark_with_zero_jobs(spark, tmp_path):
+    eng = GraphEngine(spark)
+    ids = [str(i) for i in range(1000)] + [f"edge_{i}" for i in range(1000)]
+    path = str(tmp_path / "ids")
+    spark.createDataFrame([(i,) for i in ids], "_id string").write.parquet(path)
+    want = {
+        r["_id"]: r["b"]
+        for r in spark.read.parquet(path)
+        .select("_id", F.pmod(F.xxhash64("_id"), F.lit(16)).alias("b"))
+        .collect()
+    }
+    got, jobs = _jobs(spark, lambda: eng._id_buckets(ids, 16))
+    assert jobs == 0
+    assert got == [want[i] for i in ids]
+
+
+@pytest.fixture(scope="module")
+def bound(spark, tmp_path_factory):
+    """A flushed bound table of 150 rows carrying two UPDATE layers and
+    buffered inserts."""
+    d = str(tmp_path_factory.mktemp("small") / "d")
+    eng = GraphEngine(spark, data_dir=d)
+    df = spark.range(1, 151).select(
+        F.col("id").alias("c_custkey"),
+        F.concat(F.lit("Customer#"), F.col("id")).alias("c_name"),
+        (F.col("id") % 25).alias("c_nationkey"),
+        (F.col("id") * 1.5).alias("c_acctbal"),
+    )
+    eng.bind_node_type("Customer", df, pk="c_custkey")
+    eng.flush()
+    eng.execute(
+        "UPDATE NODE Customer SET c_acctbal: 1.25 WHERE c_custkey: 3;"
+        "UPDATE NODE Customer SET c_acctbal: 2.25 WHERE c_custkey: 4;"
+        "INSERT NODE Customer (c_custkey: 1001, c_name: 'n', c_nationkey: 3,"
+        " c_acctbal: 0.5);"
+    )
+    return eng
+
+
+@pytest.mark.parametrize(
+    "stmt, reply",
+    [
+        ("MATCH Customer WHERE c_custkey: 3 RETURN c_name, c_acctbal;",
+         "  ID: 3, Properties: map[c_acctbal:1.25 c_name:Customer#3]"),
+        ("MATCH Customer WHERE c_nationkey: 3 RETURN c_custkey;",
+         "  ID: 1001, Properties: map[c_custkey:1001]"),
+        ("UPDATE NODE Customer SET c_acctbal: 9.5 WHERE c_custkey: 7;",
+         "Updated 1 node(s)"),
+        ("DELETE NODE Customer WHERE c_custkey: 1001;", "Deleted 1 node(s)"),
+    ],
+)
+def test_small_statements_run_zero_jobs(spark, bound, stmt, reply):
+    out, jobs = _jobs(spark, lambda: execute_command(bound, stmt))
+    assert jobs == 0, out
+    assert reply in out.splitlines(), out
+
+
+def test_buffered_table_plan_is_a_local_scan(bound):
+    bound.execute(
+        "INSERT NODE Customer (c_custkey: 1002, c_name: 'm', c_nationkey: 4,"
+        " c_acctbal: 0.5);"
+    )
+    plan = _plan(bound._buffer_df(bound.tables[("node", "Customer")]))
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    merged = _plan(bound.node_df("Customer"))
+    assert "ExistingRDD" not in merged, merged
+
+
+# ---------------------------------------------------- the two paths agree
+
+
+def _twins(spark, tmp_path):
+    return [
+        GraphEngine(spark, data_dir=str(tmp_path / n), id_buckets=4, max_delta_chain=2)
+        for n in ("small", "spark")
+    ]
+
+
+def _agree(spark, monkeypatch, small, big, stmt) -> int:
+    """Run ``stmt`` on the small path and (cap 0) on the Spark path;
+    the replies must be byte-identical. Returns the small run's jobs."""
+    a, jobs = _jobs(spark, lambda: execute_command(small, stmt))
+    with monkeypatch.context() as m:
+        m.setattr(engine_mod, "_SMALL_SCAN_ROWS", 0)
+        b = execute_command(big, stmt)
+    assert a == b, (stmt, a, b)
+    return jobs
+
+
+def _layers(eng, name) -> set:
+    return {op for op, _ in eng.tables[("node", name)].mut_parts}
+
+
+def test_paths_agree_on_random_dml(spark, tmp_path, monkeypatch):
+    small, big = _twins(spark, tmp_path)
+    rng = random.Random(7)
+    run = lambda s: _agree(spark, monkeypatch, small, big, s)  # noqa: E731
+    run("CREATE NODE D (a: int, b: int, tag: string DEFAULT 'x');")
+    for _ in range(8):
+        run(f"INSERT NODE D (a: {rng.choice(DOMAIN)}, b: {rng.choice(DOMAIN)});")
+    run("INSERT NODE D (a: 1);")
+    run("MATCH D WHERE a > 1 RETURN b LIMIT 4;")  # pure-buffer
+    for eng in (small, big):
+        eng.flush()
+    seen = set()
+    for i in range(18):
+        text, _ = _rand_conds(rng)
+        kind = i % 6
+        if kind == 0:
+            run(f"INSERT NODE D (a: {rng.choice(DOMAIN)}, b: {rng.choice(DOMAIN)});")
+        elif kind in (1, 4):
+            run(f"UPDATE NODE D SET b: {rng.choice(DOMAIN)} WHERE {text};")
+        elif kind == 2:
+            run(f"DELETE NODE D WHERE {text};")
+        elif kind == 3:
+            run(f"MATCH D WHERE {text} RETURN a, b LIMIT 3 OFFSET 1;")
+        else:
+            run(f"MATCH D WHERE {text};")
+        seen |= _layers(small, "D")
+        if i == 11:
+            for eng in (small, big):
+                eng.flush()
+    run("MATCH D RETURN a, b, tag;")
+    assert {"u", "d", "fold", "rebase"} <= seen, seen
+
+
+def test_paths_agree_on_a_typed_table(spark, tmp_path, monkeypatch):
+    small, big = _twins(spark, tmp_path)
+    run = lambda s: _agree(spark, monkeypatch, small, big, s)  # noqa: E731
+    utc = dt.timezone.utc
+    # rows 11 and 12 hold instants outside the 1677-2262 range of
+    # nanosecond timestamps (Spark stores them as INT96)
+    far = {11: dt.datetime(3000, 1, 1, tzinfo=utc), 12: dt.datetime(1650, 6, 1, 12, tzinfo=utc)}
+    rows = [
+        (i, i if i % 3 else None, i * 0.5, float("nan") if i == 6 else i / 3,
+         decimal.Decimal(f"{i}.25") if i % 4 else None,
+         dt.date(2024, 1, i), far.get(i, dt.datetime(2024, 1, 1, i, 30, tzinfo=utc)),
+         i % 2 == 0, f"b{i}".encode(), [i, i + 1] if i % 5 else None, i % 7)
+        for i in range(1, 13)
+    ]
+    schema = ST.StructType([
+        ST.StructField("k", ST.LongType()), ST.StructField("n", ST.IntegerType()),
+        ST.StructField("f", ST.FloatType()), ST.StructField("x", ST.DoubleType()),
+        ST.StructField("dec", ST.DecimalType(10, 2)), ST.StructField("d", ST.DateType()),
+        ST.StructField("ts", ST.TimestampType()), ST.StructField("ok", ST.BooleanType()),
+        ST.StructField("bl", ST.BinaryType()),
+        ST.StructField("arr", ST.ArrayType(ST.LongType())),
+        # a byte column is a string in the catalog
+        ST.StructField("by", ST.ByteType()),
+    ])
+    run("CREATE NODE Ty (k: int PRIMARY KEY, fl: float, ok: bool, d: date,"
+        " ts: datetime, bl: blob, u: uuid, js: json, tm: time, s: string);")
+    for eng in (small, big):
+        eng.bind_node_type("B", spark.createDataFrame(rows, schema), pk="k")
+    for i in range(1, 7):
+        off = "+02:00" if i % 2 else ""
+        nulls = i == 3
+        run(
+            f"INSERT NODE Ty (k: {i}, fl: {i}.5, ok: {'true' if i % 2 else 'false'},"
+            f" d: '2024-02-0{i}', ts: '2024-01-01T1{i}:00:00{off}',"
+            f" bl: 'x{i}', u: '12345678-1234-5678-1234-56781234567{i}',"
+            f" js: '{{\"a\": {i}}}', tm: '0{i}:15', s: "
+            + ("null);" if nulls else f"'s{i}');")
+        )
+    for eng in (small, big):
+        eng.flush()
+    # the far instants stay on the small path (0 jobs), so the
+    # agreement below covers how pyarrow reads them
+    far_stmts = [
+        "MATCH B WHERE k IN (11, 12) RETURN k, ts;",
+        "UPDATE NODE B SET ok: false WHERE k: 11;",
+        "UPDATE NODE B SET x: 1.5 WHERE k: 12;",
+    ]
+    stmts = [
+        "MATCH B WHERE n > 2;",
+        "MATCH B WHERE dec: '3.25' RETURN k, dec;",
+        "MATCH B WHERE f: 2.5, ok: true;",
+        "MATCH B WHERE ts >= '2024-01-01T07:30:00+02:00' RETURN k, ts, arr;",
+        "UPDATE NODE B SET x: 0.125 WHERE n IN (1, 2, 4);",
+        "UPDATE NODE B SET ok: false WHERE dec: '5.25';",
+        "UPDATE NODE B SET dec: '7.75', f: 0.1 WHERE k: 2;",
+        "UPDATE NODE B SET ok: true WHERE x > 3.5;",  # NaN is above 3.5
+        "INSERT NODE B (k: 99, n: 7, ts: '2024-03-01T00:00:00+05:00');",
+        "DELETE NODE B WHERE ts: '2024-01-01T02:30:00';",
+        "UPDATE NODE B SET ts: '2024-06-01T12:00:00-03:00' WHERE k: 99;",
+        "MATCH B WHERE d <= '2024-01-05' RETURN k, d, bl;",
+        *far_stmts,
+        "MATCH B WHERE ts < '1700-01-01T00:00:00' RETURN k, n, x, ts;",
+        "MATCH B WHERE by: '5' RETURN k, by;",
+        "UPDATE NODE B SET ok: true WHERE by: '5';",
+        "UPDATE NODE B SET n: 0 WHERE by < '3';",
+        "DELETE NODE B WHERE by: '6';",
+        "MATCH Ty WHERE ts: '2024-01-01T11:00:00+02:00';",
+        "MATCH Ty WHERE ts < '2024-01-01T12:00:00' RETURN k, ts, tm;",
+        "UPDATE NODE Ty SET s: null WHERE ts: '2024-01-01T09:00:00';",
+        "UPDATE NODE Ty SET d: '2025-01-01', bl: 'y' WHERE u: '12345678-1234-5678-1234-567812345672';",
+        "INSERT NODE Ty (k: 7, ts: '2024-01-01T00:00:00-01:00', js: '[1]');",
+        "DELETE NODE Ty WHERE fl > 4.0, ok: false;",
+        "UPDATE NODE Ty SET tm: '23:59' WHERE s: null;",
+        "MATCH Ty;",
+        "MATCH B;",
+    ]
+    seen = set()
+    for stmt in stmts:
+        jobs = run(stmt)
+        assert stmt not in far_stmts or jobs == 0, (stmt, jobs)
+        seen |= _layers(small, "Ty") | _layers(small, "B")
+    assert {"u", "d", "fold", "rebase"} <= seen, seen
