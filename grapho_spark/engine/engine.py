@@ -47,7 +47,13 @@ driver with no job. A node MATCH, UPDATE or DELETE on a small flushed
 table (``_small_scan``: at most ``_SMALL_SCAN_ROWS`` rows to scan)
 reads the pruned chain files with pyarrow and replays the mutation
 layers on the driver, so point statements run with zero Spark jobs —
-the reference's own in-memory execution model at OLTP sizes.
+the reference's own in-memory execution model at OLTP sizes. A chain
+MATCH whose elements all have such scans joins them on the driver
+(``_chain_rows``: dict joins on row indices, the hop kinds of
+``_hop_schedule``) while the joined rows stay under the same cap; its
+WHERE, RETURN and LIMIT then run over one local relation, also with
+no job. INSERT EDGE checks endpoints and cardinality over the same
+driver scans.
 
 Durability: DDL goes ONLY to the catalog store (events JSONL); DML
 goes ONLY to the commit log (JSONL of statement ASTs), replayed past
@@ -818,7 +824,8 @@ def _parquet_table(paths: list[str], asch: pa.Schema) -> pa.Table:
     reads as nulls, as Spark's read with a schema does."""
     parts = []
     for p in paths:
-        t = pq.ParquetFile(p, coerce_int96_timestamp_unit="us").read()
+        f = pq.ParquetFile(p, coerce_int96_timestamp_unit="us")
+        t = f.read(columns=[n for n in asch.names if n in f.schema_arrow.names])
         parts.append(
             pa.Table.from_arrays(
                 [
@@ -856,6 +863,81 @@ def _id_order(t: pa.Table) -> pa.Table:
     ids = t.column(ID_COLUMN).to_pylist()
     order = sorted(range(len(ids)), key=lambda i: (len(ids[i]), ids[i]))
     return t.take(pa.array(order, type=pa.int64()))
+
+
+def _hop_schedule(pattern: tuple) -> list[tuple[str, str]]:
+    """The join kinds ``(src_how, dst_how)`` of each hop of a chain
+    pattern (edge elements 1, 3, ...). OPTIONAL (r11): the marked edge
+    hop and every later hop are LEFT joins, so left-prefix rows survive
+    with NULL-padded edge/right-node fields (inner joins after an
+    optional hop would re-drop the padded rows). A trailing ``OPTIONAL
+    B b`` left-outers ONLY the final dst join (B is absent exactly when
+    the edge dangles, since DELETE NODE does not cascade); a leading
+    ``OPTIONAL A a`` makes the first src join a RIGHT join (every
+    (e, b) survives, a NULL-padded)."""
+    hows = []
+    opt_seen = False
+    for i in range(1, len(pattern), 2):
+        opt_seen = opt_seen or pattern[i].optional
+        src = "left" if opt_seen else "inner"
+        if i == 1 and pattern[0].optional:
+            src = "right"
+        last_opt = i + 2 == len(pattern) and pattern[i + 1].optional
+        hows.append((src, "left" if opt_seen or last_opt else "inner"))
+    return hows
+
+
+def _chain_rows(scans: list[pa.Table], hows: list[tuple[str, str]]) -> list | None:
+    """A chain's joins on the driver over its elements' scans: one
+    tuple of row indices per result row (None where a side is
+    NULL-padded), joined through dicts (a NULL key never matches) and
+    sorted by the chain tiebreak, each element's ``(length(_id), _id)``
+    with NULLs first as in Spark's ascending sort. None once the rows
+    pass ``_SMALL_SCAN_ROWS``."""
+    ids = [t.column(ID_COLUMN).to_pylist() for t in scans]
+
+    def index(keys: list) -> dict:
+        at: dict = {}
+        for r, k in enumerate(keys):
+            if k is not None:
+                at.setdefault(k, []).append(r)
+        return at
+
+    def probe(rows: list, keys: list, at: dict, how: str) -> list | None:
+        out: list = []
+        for row in rows:
+            hits = () if row[-1] is None else at.get(keys[row[-1]], ())
+            if hits:
+                out.extend(row + (r,) for r in hits)
+            elif how == "left":
+                out.append(row + (None,))
+            if len(out) > _SMALL_SCAN_ROWS:
+                return None
+        return out
+
+    rows: list | None = [(r,) for r in range(scans[0].num_rows)]
+    for h, (src_how, dst_how) in enumerate(hows):
+        edge = scans[2 * h + 1]
+        src = edge.column(SRC_COLUMN).to_pylist()
+        if src_how == "right":  # the first hop: every edge row survives
+            at = index(ids[0])
+            rows = [(n, e) for e, k in enumerate(src) for n in at.get(k, (None,))]
+        else:
+            rows = probe(rows, ids[2 * h], index(src), src_how)
+        if rows is None or len(rows) > _SMALL_SCAN_ROWS:
+            return None
+        rows = probe(
+            rows, edge.column(DST_COLUMN).to_pylist(), index(ids[2 * h + 2]), dst_how
+        )
+        if rows is None:
+            return None
+
+    def key(e: int, r: int | None) -> tuple:
+        x = None if r is None else ids[e][r]
+        return (0,) if x is None else (1, len(x), x)
+
+    rows.sort(key=lambda row: tuple(key(e, r) for e, r in enumerate(row)))
+    return rows
 
 
 class _Files(NamedTuple):
@@ -2589,20 +2671,26 @@ class GraphEngine:
         where: list,
         i: int,
         nullable: bool,
-    ) -> DataFrame:
+        small: bool = False,
+    ) -> "DataFrame | pa.Table":
         """Pattern element ``i``'s live view for chain and
-        variable-length MATCH, every column prefixed ``<alias>_``. Its
-        base scan is zone/bloom-pruned by the WHERE groups that bind
-        exclusively to it; on a NULLABLE side (at/after an OPTIONAL
-        hop, or an optional endpoint) only predicates that also reject
-        the NULL padding qualify (see zones.compile_chain_pruning_groups)."""
+        variable-length MATCH, every column prefixed ``<alias>_``; with
+        ``small``, the unprefixed Arrow table when ``_live_view`` gives
+        one. Its base scan is zone/bloom-pruned by the WHERE groups
+        that bind exclusively to it; on a NULLABLE side (at/after an
+        OPTIONAL hop, or an optional endpoint) only predicates that
+        also reject the NULL padding qualify (see
+        zones.compile_chain_pruning_groups)."""
         df = self._live_view(
             key,
             self.tables[key],
             zn.compile_chain_pruning_groups(where, i, nullable)
             if where and self.zone_stats
             else None,
+            small,
         )
+        if isinstance(df, pa.Table):
+            return df
         return df.select(*[F.col(c).alias(f"{alias}_{c}") for c in df.columns])
 
     # --------------------------------------------------------- helpers
@@ -2783,24 +2871,23 @@ class GraphEngine:
         checked driver-side (no job). On a CLEAN flushed table the
         disk probe is BUCKET-PRUNED: the id's hash bucket is computed
         with no job (``_id_buckets``), then only the owning ``_gbkt``
-        leaf dir (plus any
-        delta dirs, which are batch-sized) is read — O(1) files where
-        the merged-frame filter reads every file's listing/footers.
-        At 100 TB this is the difference between a point lookup and a
-        table pass for every INSERT EDGE endpoint resolve. An
-        unflushed mutation (base_dirty) or in-memory engine falls back
-        to the full merged-frame filter."""
+        leaf dir (plus any delta dirs, which are batch-sized) is read —
+        O(1) files where the merged-frame filter reads every file's
+        listing/footers. At 100 TB this is the difference between a
+        point lookup and a table pass for every INSERT EDGE endpoint
+        resolve. When the inventories put those leafs at no more than
+        ``_SMALL_SCAN_ROWS`` rows, their ``_id`` column is read with
+        pyarrow (no job); otherwise Spark reads them with the id filter
+        pushed down. An unflushed mutation (base_dirty) or in-memory
+        engine looks in the small live view (``_live_view``) when there
+        is one, else runs the full merged-frame filter."""
         if any(r.get(ID_COLUMN) == id_text for r in tab.buffer):
             return True
         if tab.base is None:
             return False
         kind, name = key
         if not self.data_dir or tab.version == 0 or tab.base_dirty:
-            return bool(
-                tab.base.filter(F.col(ID_COLUMN) == F.lit(id_text))
-                .limit(1)
-                .collect()
-            )
+            return self._live_holds(key, tab, ID_COLUMN, id_text)
         chain = self._chain_versions(kind, name, tab.version)
         if not chain:
             return False
@@ -2811,28 +2898,48 @@ class GraphEngine:
             if not self._is_delta_version(kind, name, anchor)
             else None
         )
-        paths: list[str] = []
+        leafs: list[tuple[int, str]] = []  # (owner version, leaf key)
         if bm is not None:
             b = self._id_buckets([id_text], int(bm["n"]))[0]
             owner = bm["map"].get(str(b))
             if owner is not None:
-                paths.append(
-                    os.path.join(base_dir, f"v{owner}", f"{BUCKET_COLUMN}={b}")
-                )
-            start = 1
+                leafs.append((int(owner), str(b)))
         else:
             # legacy whole-dir anchor (pre-bucketed layout)
-            paths.append(os.path.join(base_dir, f"v{anchor}"))
-            start = 1
-        paths.extend(
-            os.path.join(base_dir, f"v{v}") for v in chain[start:]
-        )
-        if not paths:  # empty bucket, no deltas: provably absent
+            leafs.append((anchor, zn.ROOT_LEAF))
+        leafs.extend((v, zn.ROOT_LEAF) for v in chain[1:])
+        if not leafs:  # empty bucket, no deltas: provably absent
             return False
-        probe = self.spark.read.schema(tab.schema).parquet(*paths)
+        dirs = [
+            os.path.join(base_dir, f"v{v}")
+            if k == zn.ROOT_LEAF
+            else os.path.join(base_dir, f"v{v}", f"{BUCKET_COLUMN}={k}")
+            for v, k in leafs
+        ]
+        metas = [
+            (self._inventory(kind, name, v) or {"leafs": {}})["leafs"].get(k)
+            for v, k in leafs
+        ]
+        if None not in metas and sum(m["rows"] for m in metas) <= _SMALL_SCAN_ROWS:
+            ids = _parquet_table(
+                [os.path.join(d, f) for d, m in zip(dirs, metas) for f, _ in m["files"]],
+                pa.schema([pa.field(ID_COLUMN, pa.string())]),
+            ).column(ID_COLUMN)
+            return bool(pc.any(pc.equal(ids, id_text)).as_py())
+        probe = self.spark.read.schema(tab.schema).parquet(*dirs)
         return bool(
             probe.filter(F.col(ID_COLUMN) == F.lit(id_text)).limit(1).collect()
         )
+
+    def _live_holds(
+        self, key: tuple[str, str], tab: _Table, col: str, value: str
+    ) -> bool:
+        """Does the live view hold a row whose ``col`` equals ``value``?
+        Answered on the driver when the view is small (``_live_view``)."""
+        view = self._live_view(key, tab, None, small=True)
+        if isinstance(view, pa.Table):
+            return bool(pc.any(pc.equal(view.column(col), value)).as_py())
+        return bool(view.filter(F.col(col) == F.lit(value)).limit(1).count())
 
     def _mutation_rows(
         self,
@@ -2936,12 +3043,7 @@ class GraphEngine:
             if tab_e.base is None:  # pure-buffer fast path
                 taken = any(r.get(col) == node_id for r in tab_e.buffer)
             else:
-                taken = bool(
-                    self._merged_df(key)
-                    .filter(F.col(col) == F.lit(node_id))
-                    .limit(1)
-                    .count()
-                )
+                taken = self._live_holds(key, tab_e, col, node_id)
             if taken:
                 raise EngineError(
                     f"cardinality violation: {ep_side} {ep_label} is ONE "
@@ -3207,7 +3309,7 @@ class GraphEngine:
             for r in matched:
                 r.update(sets)
             tab.dirty = True
-            tab.blooms.clear()
+            self._bloom_put(tab, list(sets), sets)
         self._log_dml(stmt)
         return StatementResult(
             "update", f"Updated {len(matched)} {kind}(s)", count=len(matched)
@@ -3298,9 +3400,10 @@ class GraphEngine:
                                 f"unique violation on {idx.field!r} after update"
                             )
             self._publish_mutation(tab, path, "u", count, ids)
-            # SET may introduce values unseen by the sketches — a stale
-            # bloom would false-negative and skip a real duplicate scan.
-            tab.blooms.clear()
+            # SET may introduce values unseen by the sketches: put them,
+            # so each bloom stays a superset of the stored values (a
+            # stale bloom would false-negative and skip a real scan).
+            self._bloom_put(tab, list(sets), sets)
         self._log_dml(stmt)
         return StatementResult("update", f"Updated {count} {kind}(s)", count=count)
 
@@ -3547,7 +3650,15 @@ class GraphEngine:
         element's type name); WHERE keys apply to every element that
         declares the field (a key no element declares matches nothing,
         the reference's missing-prop rule); RETURN projects each field
-        from the first element declaring it, plus every ``_id``."""
+        from the first element declaring it, plus every ``_id``.
+
+        The join kinds of each hop come from ``_hop_schedule``. Without
+        ORDER BY, DISTINCT or aggregates, when every element has a small
+        Arrow scan (``_live_view``) and the joined rows stay within
+        ``_SMALL_SCAN_ROWS``, the joins run on the driver
+        (``_chain_rows``) and the result enters Spark as one local
+        relation already in tiebreak order: the same WHERE, RETURN and
+        LIMIT then run with no job. Otherwise Spark joins the scans."""
         pattern = stmt.pattern
         if len(pattern) % 2 == 0 or len(pattern) < 3:
             raise EngineError(
@@ -3592,42 +3703,9 @@ class GraphEngine:
                 "repeated types in an edge pattern need distinct aliases"
             )
 
-        # zone/bloom pruning per element (r13): an element's base scan
-        # prunes by the WHERE groups that resolve exclusively to it —
-        # on a NULLABLE side (at/after an OPTIONAL hop, or an optional
-        # endpoint) only predicates that also reject the NULL padding
-        # qualify (see zones.compile_chain_pruning_groups).
-        first_opt_edge = min(
-            (j for j in range(1, len(pattern), 2) if pattern[j].optional),
-            default=None,
-        )
-
-        def _nullable(i: int) -> bool:
-            return (
-                (first_opt_edge is not None and i >= first_opt_edge)
-                or (i == 0 and pattern[0].optional)
-                or (i == len(pattern) - 1 and pattern[i].optional)
-            )
-
-        # OPTIONAL (r11): the marked edge hop and every later hop
-        # compile to LEFT joins — left-prefix rows survive with
-        # NULL-padded edge/right-node fields when nothing matches
-        # (inner joins after an optional hop would silently re-drop
-        # the NULL-padded rows, turning OPTIONAL back into inner).
-        # WHERE stays a post-join filter: every leaf predicate is
-        # TOTAL (null-safe =, IsNotNull-guarded comparisons), so a
-        # predicate on an optional field drops NULL-padded rows —
-        # SQL LEFT JOIN + WHERE semantics — and its NOT keeps them.
-        # OPTIONAL node endpoints (r13): a trailing ``OPTIONAL B b``
-        # left-outers ONLY the final hop's dst join (the edge stays
-        # required — B is absent exactly when the edge dangles, since
-        # DELETE NODE does not cascade); the symmetric leading form
-        # ``MATCH OPTIONAL A a, E e, B b`` compiles the first hop's
-        # src join as a RIGHT join (every (e, b) survives, a
-        # NULL-padded). Combining a leading optional node with an
-        # optional FIRST edge would be a full-outer ambiguity — refused.
-        lead_opt = pattern[0].optional
-        if lead_opt and pattern[1].optional:
+        if pattern[0].optional and pattern[1].optional:
+            # a leading optional node with an optional FIRST edge
+            # would be a full-outer ambiguity
             raise EngineError(
                 "OPTIONAL on the leading node cannot combine with an "
                 "OPTIONAL first edge (ambiguous full-outer semantics)"
@@ -3643,34 +3721,70 @@ class GraphEngine:
                 for i in range(len(pattern))
             ],
         )
-
-        def prefixed(i: int) -> DataFrame:
-            return self._element_scan(keys[i], aliases[i], where, i, _nullable(i))
-
-        out = prefixed(0)
-        opt_seen = False
-        for i in range(1, len(pattern), 2):
-            opt_seen = opt_seen or pattern[i].optional
-            src_how = "left" if opt_seen else "inner"
-            if i == 1 and lead_opt:
-                src_how = "right"
-            dst_how = (
-                "left"
-                if opt_seen
-                or (i + 1 == len(pattern) - 1 and pattern[i + 1].optional)
-                else "inner"
+        # WHERE stays a post-join filter: every leaf predicate is TOTAL
+        # (null-safe =, IsNotNull-guarded comparisons), so a predicate
+        # on an optional field drops NULL-padded rows — SQL LEFT JOIN +
+        # WHERE semantics — and its NOT keeps them. The NULL-padded
+        # elements (the first under a right join, each one a left join
+        # adds) prune only by predicates that also reject the padding
+        # (zones.compile_chain_pruning_groups).
+        hows = _hop_schedule(pattern)
+        padded = [hows[0][0] == "right"]
+        padded += [how == "left" for hop in hows for how in hop]
+        # A result that keeps the tiebreak order can join on the driver
+        small = not (
+            stmt.order_by
+            or stmt.return_distinct
+            or stmt.return_count
+            or stmt.return_agg
+            or stmt.return_aggs
+        )
+        scans = [
+            self._element_scan(keys[i], aliases[i], where, i, padded[i], small)
+            for i in range(len(pattern))
+        ]
+        rows = None
+        if all(isinstance(t, pa.Table) for t in scans):
+            rows = _chain_rows(scans, hows)
+        if rows is not None:
+            fields: list[ST.StructField] = []
+            columns: list[pa.ChunkedArray] = []
+            for e, t in enumerate(scans):
+                take = pa.array([r[e] for r in rows], type=pa.int64())
+                columns.extend(t.take(take).columns)  # a None index pads
+                fields.extend(
+                    ST.StructField(
+                        f"{aliases[e]}_{f.name}", f.dataType, f.nullable or padded[e]
+                    )
+                    for f in self.tables[keys[e]].schema
+                )
+            schema = ST.StructType(fields)
+            out = self._local_frame(
+                pa.Table.from_arrays(columns, names=schema.fieldNames()), schema
             )
-            out = out.join(
-                prefixed(i),
-                F.col(f"{aliases[i]}_{SRC_COLUMN}")
-                == F.col(f"{aliases[i - 1]}_{ID_COLUMN}"),
-                src_how,
-            ).join(
-                prefixed(i + 1),
-                F.col(f"{aliases[i]}_{DST_COLUMN}")
-                == F.col(f"{aliases[i + 1]}_{ID_COLUMN}"),
-                dst_how,
-            )
+        else:
+            frames = [
+                self._local_frame(t, self.tables[keys[i]].schema).select(
+                    *[F.col(c).alias(f"{aliases[i]}_{c}") for c in t.column_names]
+                )
+                if isinstance(t, pa.Table)
+                else t
+                for i, t in enumerate(scans)
+            ]
+            out = frames[0]
+            for h, (src_how, dst_how) in enumerate(hows):
+                i = 2 * h + 1
+                out = out.join(
+                    frames[i],
+                    F.col(f"{aliases[i]}_{SRC_COLUMN}")
+                    == F.col(f"{aliases[i - 1]}_{ID_COLUMN}"),
+                    src_how,
+                ).join(
+                    frames[i + 1],
+                    F.col(f"{aliases[i]}_{DST_COLUMN}")
+                    == F.col(f"{aliases[i + 1]}_{ID_COLUMN}"),
+                    dst_how,
+                )
 
         if stmt.where:
             out = out.filter(_where_col(where, aliases))
@@ -3692,7 +3806,7 @@ class GraphEngine:
                 ret_cols.append(outn)
             out = out.select(*cols)
         sort_cols: list[Column] = []
-        for c in id_cols:
+        for c in id_cols if rows is None else ():  # driver rows are in order
             sort_cols.extend([F.length(c), F.col(c)])
         out = _apply_order_limit(
             out, stmt, sort_cols, distinct_cols=self._distinct_cols(stmt, ret_cols)

@@ -107,7 +107,7 @@ def test_id_buckets_hash_like_spark_with_zero_jobs(spark, tmp_path):
 @pytest.fixture(scope="module")
 def bound(spark, tmp_path_factory):
     """A flushed bound table of 150 rows carrying two UPDATE layers and
-    buffered inserts."""
+    buffered inserts, and 300 bound orders with their bound edge to it."""
     d = str(tmp_path_factory.mktemp("small") / "d")
     eng = GraphEngine(spark, data_dir=d)
     df = spark.range(1, 151).select(
@@ -117,6 +117,12 @@ def bound(spark, tmp_path_factory):
         (F.col("id") * 1.5).alias("c_acctbal"),
     )
     eng.bind_node_type("Customer", df, pk="c_custkey")
+    orders = spark.range(1, 301).select(
+        F.col("id").alias("o_orderkey"), (F.col("id") % 150 + 1).alias("o_custkey")
+    )
+    eng.bind_node_type("Orders", orders, pk="o_orderkey")
+    eng.bind_edge_type("PlacedBy", orders, src="o_orderkey", dst="o_custkey",
+                       from_label="Orders", to_label="Customer")
     eng.flush()
     eng.execute(
         "UPDATE NODE Customer SET c_acctbal: 1.25 WHERE c_custkey: 3;"
@@ -137,6 +143,9 @@ def bound(spark, tmp_path_factory):
         ("UPDATE NODE Customer SET c_acctbal: 9.5 WHERE c_custkey: 7;",
          "Updated 1 node(s)"),
         ("DELETE NODE Customer WHERE c_custkey: 1001;", "Deleted 1 node(s)"),
+        # the gql_oltp chain: orders 4 and 154 belong to customer 5
+        ("MATCH Orders o, PlacedBy p, Customer c WHERE c_custkey: 5 RETURN o_orderkey;",
+         "  ID: 154-edge_154_5-5, Properties: map[o_o_orderkey:154]"),
     ],
 )
 def test_small_statements_run_zero_jobs(spark, bound, stmt, reply):
@@ -154,6 +163,71 @@ def test_buffered_table_plan_is_a_local_scan(bound):
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
     merged = _plan(bound.node_df("Customer"))
     assert "ExistingRDD" not in merged, merged
+
+
+def test_chain_plan_is_a_local_scan(bound, monkeypatch):
+    def explain() -> list[str]:
+        res = bound.execute(
+            "EXPLAIN MATCH Orders o, PlacedBy p, Customer c WHERE c_custkey: 5"
+            " RETURN o_orderkey;"
+        )[0]
+        return [r["plan"] for r in res.df.collect()]
+
+    lines = explain()
+    plan = "\n".join(lines)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    # the driver path prunes the element scans as the Spark plan does
+    with monkeypatch.context() as m:
+        m.setattr(engine_mod, "_SMALL_SCAN_ROWS", 0)
+        spark_lines = explain()
+    pruning = [ln for ln in lines if ln.startswith("ZonePruning:")]
+    assert pruning and pruning == [
+        ln for ln in spark_lines if ln.startswith("ZonePruning:")
+    ]
+
+
+def test_insert_edge_runs_zero_jobs(spark, tmp_path, monkeypatch):
+    eng = GraphEngine(spark, data_dir=str(tmp_path / "d"))
+    nodes = spark.range(1, 21).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    eng.bind_node_type("U", nodes, pk="k")
+    eng.execute("CREATE EDGE Owns (FROM U ONE, TO U MANY);"
+                "INSERT EDGE Owns FROM U('1') TO U('2');")
+    eng.flush()
+    run = lambda s: _jobs(spark, lambda: execute_command(eng, s))  # noqa: E731
+    out, jobs = run("INSERT EDGE Owns FROM U('3') TO U('2');")
+    assert jobs == 0 and "OK" in out, out
+    out, jobs = run("INSERT EDGE Owns FROM U('6') TO U('99');")
+    assert jobs == 0 and "TO node not found" in out, out
+    # a bucket leaf past the cap is probed by Spark, id filter pushed
+    with monkeypatch.context() as m:
+        m.setattr(engine_mod, "_SMALL_SCAN_ROWS", 0)
+        out, jobs = run("INSERT EDGE Owns FROM U('7') TO U('8');")
+        assert jobs > 0 and "OK" in out, out
+        out, _ = run("INSERT EDGE Owns FROM U('9') TO U('99');")
+        assert "TO node not found" in out, out
+    # an UPDATE layer: endpoints are then found in the small live view
+    eng.execute("UPDATE NODE U SET v: 0 WHERE k: 4;")
+    out, jobs = run("INSERT EDGE Owns FROM U('4') TO U('2');")
+    assert jobs == 0 and "OK" in out, out
+    # U 1 already owns a flushed edge, U 3 a buffered one
+    for src in ("1", "3"):
+        out, jobs = run(f"INSERT EDGE Owns FROM U('{src}') TO U('5');")
+        assert jobs == 0 and "cardinality violation" in out, out
+
+
+def test_update_keeps_the_unique_bloom(spark, tmp_path):
+    eng = GraphEngine(spark, data_dir=str(tmp_path / "d"))
+    eng.execute(
+        "CREATE NODE V (k: int PRIMARY KEY, code: string UNIQUE);"
+        + "".join(f"INSERT NODE V (k: {i}, code: 'c{i}');" for i in range(1, 6))
+    )
+    eng.flush()
+    eng.execute("INSERT NODE V (k: 10, code: 'c10');")  # builds the blooms
+    eng.execute("UPDATE NODE V SET code: 'z' WHERE k: 1;")
+    _, jobs = _jobs(spark, lambda: eng.execute("INSERT NODE V (k: 11, code: 'c11');"))
+    assert jobs == 0
+    with pytest.raises(engine_mod.EngineError, match="unique violation on 'code'"):
+        eng.execute("INSERT NODE V (k: 12, code: 'z');")
 
 
 # ---------------------------------------------------- the two paths agree
@@ -177,8 +251,8 @@ def _agree(spark, monkeypatch, small, big, stmt) -> int:
     return jobs
 
 
-def _layers(eng, name) -> set:
-    return {op for op, _ in eng.tables[("node", name)].mut_parts}
+def _layers(eng, name, kind="node") -> set:
+    return {op for op, _ in eng.tables[(kind, name)].mut_parts}
 
 
 def test_paths_agree_on_random_dml(spark, tmp_path, monkeypatch):
@@ -296,3 +370,72 @@ def test_paths_agree_on_a_typed_table(spark, tmp_path, monkeypatch):
         assert stmt not in far_stmts or jobs == 0, (stmt, jobs)
         seen |= _layers(small, "Ty") | _layers(small, "B")
     assert {"u", "d", "fold", "rebase"} <= seen, seen
+
+
+def test_chain_paths_agree(spark, tmp_path, monkeypatch):
+    """Chain MATCH joins on the driver (``_chain_rows``) over small
+    scans; its replies equal the Spark joins' byte for byte."""
+    small, big = _twins(spark, tmp_path)
+    run = lambda s: _agree(spark, monkeypatch, small, big, s)  # noqa: E731
+    utc = dt.timezone.utc
+    rows = [
+        (i, [i, i + 1] if i % 3 else None, dt.datetime(2024, 1, 1, i, 30, tzinfo=utc))
+        for i in range(1, 7)
+    ]
+    schema = "k long, arr array<long>, ts timestamp"
+    for eng in (small, big):
+        eng.bind_node_type("A", spark.createDataFrame(rows, schema), pk="k")
+        eng.flush()
+    run("CREATE NODE P (k: int PRIMARY KEY, name: string, at: datetime);")
+    run("CREATE EDGE R (FROM A MANY, TO P MANY, PROPS (w: int, at: datetime));")
+    run("CREATE EDGE S (FROM P MANY, TO P MANY, PROPS (w: int));")
+    for i in range(1, 7):
+        run(f"INSERT NODE P (k: {i}, name: 'p{i}', at: '2024-02-0{i}T10:00:00+02:00');")
+    for a, p, w in [(1, 1, 1), (1, 2, 2), (2, 2, 3), (3, 6, 1), (5, 4, 2)]:
+        run(f"INSERT EDGE R FROM A('{a}') TO P(k: {p}) (w: {w}, at: '2024-03-0{w}T00:00:00');")
+    for a, b, w in [(1, 2, 1), (2, 3, 2), (2, 6, 3), (4, 1, 2), (6, 5, 1)]:
+        run(f"INSERT EDGE S FROM P(k: {a}) TO P(k: {b}) (w: {w});")
+    for eng in (small, big):
+        eng.flush()
+    # P and S each: fold + u, u, d, u (a rebase), then fold + u, d and
+    # buffered rows, so every layer kind is live at once
+    for stmt in [
+        "INSERT NODE P (k: 7, name: 'n7');",
+        "INSERT EDGE S FROM P(k: 7) TO P(k: 1) (w: 4);",
+        "UPDATE NODE P SET name: 'u3' WHERE k: 3;",
+        "UPDATE EDGE S SET w: 5 WHERE w: 1;",
+        "UPDATE NODE P SET name: 'u4' WHERE k: 4;",
+        "UPDATE EDGE S SET w: 6 WHERE w: 2;",
+        "DELETE NODE P WHERE k: 6;",  # leaves dangling R and S edges
+        "DELETE EDGE S WHERE w: 3;",
+        "UPDATE NODE P SET name: 'u5' WHERE k: 5;",
+        "UPDATE EDGE S SET w: 7 WHERE w: 4;",
+        "INSERT NODE P (k: 8, name: 'n8');",
+        "INSERT EDGE S FROM P(k: 8) TO P(k: 2) (w: 8);",
+        "INSERT EDGE R FROM A('2') TO P(k: 8) (w: 2);",
+        "UPDATE NODE P SET name: 'u1' WHERE k: 1;",
+        "UPDATE EDGE S SET w: 9 WHERE w: 8;",
+        "DELETE NODE P WHERE k: 2;",  # dangles R edges, as OPTIONAL P shows
+        "DELETE NODE A WHERE k: 5;",  # and OPTIONAL A pads a dangling source
+        "DELETE EDGE S WHERE w: 5;",
+        "INSERT NODE P (k: 9, name: 'n9');",
+        "INSERT EDGE S FROM P(k: 9) TO P(k: 1) (w: 1);",
+    ]:
+        run(stmt)
+    for kind, name in (("node", "P"), ("edge", "S")):
+        assert _layers(small, name, kind) == {"u", "d", "fold", "rebase"}, name
+        assert small.tables[(kind, name)].buffer, name
+    for stmt in [
+        "MATCH A a, R r, P p;",
+        "MATCH A a, R r, P p, S s, P q RETURN a.arr, a.ts, r.w, q.name AS qn;",
+        "MATCH A a, OPTIONAL R r, P p RETURN a.k, a.arr, p.name;",
+        "MATCH OPTIONAL A a, R r, P p RETURN a.k AS ak, r.w, p.k;",
+        "MATCH A a, R r, OPTIONAL P p RETURN a.k, r.at, p.name;",
+        "MATCH P p, S s, OPTIONAL P q RETURN s.w, q.at;",
+        "MATCH P p, S s, P q WHERE s.w > 1 RETURN s.w, p.name AS src, q.name AS dst;",
+        "MATCH A a, OPTIONAL R r, P p WHERE NOT p.name: 'p2' RETURN a.k, p.name LIMIT 3;",
+        "MATCH A a, R r, P p, OPTIONAL S s, P q WHERE NOT q.k: 2 RETURN a.ts, q.k;",
+        "MATCH A a, R r, P p WHERE a.k: 2 RETURN r.at, a.arr LIMIT 5;",
+        "MATCH P p, S s, P q WHERE w >= 2 RETURN w LIMIT 2 OFFSET 1;",
+    ]:
+        assert run(stmt) == 0, stmt

@@ -205,7 +205,13 @@ def test_explain_match_reports_pruning(eng):
     ]
 
 
-def test_chain_match_prunes_one_element(eng):
+def test_chain_match_prunes_one_element(eng, monkeypatch):
+    # Chains this small join on the driver and read no files; a zero
+    # cap keeps both statements on the Spark chain read this test is
+    # about (test_small_scan checks the driver path's pruning lines).
+    from grapho_spark.engine import engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "_SMALL_SCAN_ROWS", 0)
     eng.execute(
         "CREATE EDGE E (FROM T MANY, TO T MANY, PROPS (w: int));"
         "INSERT EDGE E FROM T(k: 5) TO T(k: 6) (w: 1);"
