@@ -18,8 +18,8 @@ declared-semantics fixes catalogued in SURVEY.md §1.3/§7:
   One binder, ``_bind_where``, resolves every key and coerces every
   literal ONCE per statement into a bound tree, and three lowerings
   read that tree: a Spark ``Column`` (``_where_col``), a row test for
-  pure-buffer DML and endpoint refs (``_row_test``) and zone-pruning
-  members (``zones.compile_pruning_groups``). Invariant: every leaf
+  DML on driver-held rows (``_row_test``) and zone-pruning members
+  (``zones.compile_pruning_groups``). Invariant: every leaf
   of every lowering returns true or false, never NULL, so NOT is
   plain negation.
 - Declared-semantics divergences (enforced here, absent in the
@@ -40,20 +40,28 @@ leaf dirs only. At cluster scale the buffer would be a streaming
 ingest table and flush() a compaction job — same architecture
 (Delta/Iceberg deletion vectors + OPTIMIZE).
 
+Every MATCH compiles in one ``_match``, in fixed steps: validate the
+pattern's shape (``_match_shape``: a node union, a node/edge chain or
+a variable-length reach), bind the WHERE once, scan each element
+(``_element_scan``), connect the scans (union, equi-joins, or the
+bounded shortest-hop expansion of ``_reach_pairs``), project RETURN,
+then order and limit.
+
 Driver rows (buffer, folded buffer snapshots, SHOW/DESCRIBE/EXPLAIN
 output) enter Spark one way, ``_local_frame``: an Arrow table that
 becomes a LocalRelation, which Spark filters and projects on the
-driver with no job. A node MATCH, UPDATE or DELETE on a small flushed
-table (``_small_scan``: at most ``_SMALL_SCAN_ROWS`` rows to scan)
-reads the pruned chain files with pyarrow and replays the mutation
-layers on the driver, so point statements run with zero Spark jobs —
-the reference's own in-memory execution model at OLTP sizes. A chain
-MATCH whose elements all have such scans joins them on the driver
-(``_chain_rows``: dict joins on row indices, the hop kinds of
-``_hop_schedule``) while the joined rows stay under the same cap; its
-WHERE, RETURN and LIMIT then run over one local relation, also with
-no job. INSERT EDGE checks endpoints and cardinality over the same
-driver scans.
+driver with no job. An element scan of a small flushed table
+(``_small_scan``: at most ``_SMALL_SCAN_ROWS`` rows to scan) reads the
+pruned chain files with pyarrow and replays the mutation layers on
+the driver, so point statements run with zero Spark jobs — the
+reference's own in-memory execution model at OLTP sizes. A node
+MATCH, UPDATE and DELETE read such scans, and so do the property
+endpoint refs of edge DML. A chain MATCH whose elements all have such
+scans joins them on the driver (``_chain_rows``: dict joins on row
+indices, the hop kinds of ``_hop_schedule``) while the joined rows
+stay under the same cap; its WHERE, RETURN and LIMIT then run over one
+local relation, also with no job. INSERT EDGE checks endpoints and
+cardinality over the same driver scans.
 
 Durability: DDL goes ONLY to the catalog store (events JSONL); DML
 goes ONLY to the commit log (JSONL of statement ASTs), replayed past
@@ -493,11 +501,11 @@ def _row_test(groups: list, aliases: list[str] | None = None):
     """The row-test lowering of a bound tree: ``callable(row) ->
     bool`` over row dicts keyed like ``_where_col``'s columns, with
     the same semantics. DML on driver-held rows (a pure-buffer table
-    or a small flushed table's scan, see ``_mutation_rows``) and
-    endpoint refs use it: point DML on in-memory rows is the
-    reference's own execution model (Go maps on one machine), and a
-    Spark job costs ~0.5 s per statement. Timestamps compare as the
-    instants Spark stores — epoch microseconds, as
+    or a small flushed table's scan, see ``_mutation_rows``) uses
+    it: point DML on in-memory rows is the reference's own execution
+    model (Go maps on one machine), and a Spark job costs ~0.5 s per
+    statement. Timestamps compare as the instants Spark stores — epoch
+    microseconds, as
     ``TimestampType().toInternal`` computes them — so values with and
     without a UTC offset order like they do in the ``Column``
     lowering; floating-point NaN equals NaN and sorts above every
@@ -549,11 +557,6 @@ def _row_test_exact(groups: list, schema: ST.StructType) -> bool:
                 ):
                     return False
     return True
-
-
-def _id_sort_key() -> list[Column]:
-    """Numeric-aware ordering for sequential string IDs ('2' < '10')."""
-    return [F.length(ID_COLUMN), F.col(ID_COLUMN)]
 
 
 def _resolve_result_col(out: DataFrame, name: str, clause: str) -> str:
@@ -857,9 +860,10 @@ def _parquet_files(path: str) -> list[str]:
 
 
 def _id_order(t: pa.Table) -> pa.Table:
-    """``t`` in the engine's ``_id`` order, ``(length(_id), _id)``
-    (see ``_id_sort_key``; Python's code-point order is Spark's UTF-8
-    byte order)."""
+    """``t`` in the engine's ``_id`` order, ``(length(_id), _id)``: the
+    numeric-aware order of sequential string ids ('2' < '10'), as
+    MATCH's tiebreak sorts them (Python's code-point order is Spark's
+    UTF-8 byte order)."""
     ids = t.column(ID_COLUMN).to_pylist()
     order = sorted(range(len(ids)), key=lambda i: (len(ids[i]), ids[i]))
     return t.take(pa.array(order, type=pa.int64()))
@@ -885,6 +889,48 @@ def _hop_schedule(pattern: tuple) -> list[tuple[str, str]]:
         last_opt = i + 2 == len(pattern) and pattern[i + 1].optional
         hows.append((src, "left" if opt_seen or last_opt else "inner"))
     return hows
+
+
+def _dead_fields(groups: list):
+    """The bare field names of a bound tree's Dead members, in order."""
+    for m in (m for g in groups for m in g):
+        if isinstance(m, zn.Sub):
+            yield from _dead_fields(m.groups)
+        elif isinstance(m, zn.Dead):
+            yield m.prop.name.split(".", 1)[-1]
+
+
+def _reach_pairs(edges: DataFrame, lo: int, hi: int) -> DataFrame:
+    """The ``(_s, _d, _hops)`` pairs of a variable-length edge: one row
+    per pair reachable in ``lo..hi`` hops over the edge list ``edges``,
+    with the SHORTEST such length (path multiplicity collapses in a min
+    aggregation, which makes the result deterministic). The L-step
+    reach sets are built by L-1 self-joins of the edge list (bounded
+    unrolling, L <= 10 — declarative, so Catalyst plans ordinary
+    equi-joins), unioned with a hops tag and min-aggregated on the
+    pair. Self-pairs (a = b via a cycle) are kept: a cycle IS a path.
+    Bounds no realizable length meets give the empty result."""
+    edges = edges.select(F.col(SRC_COLUMN).alias("_s"), F.col(DST_COLUMN).alias("_d"))
+    reach = edges.select("_s", "_d", F.lit(1).alias("_hops"))
+    layers = [reach] if lo <= 1 else []
+    frontier = reach
+    for depth in range(2, hi + 1):
+        nxt = edges.select(F.col("_s").alias("_s2"), F.col("_d").alias("_d2"))
+        frontier = (
+            frontier.join(nxt, frontier["_d"] == F.col("_s2"))
+            .select("_s", F.col("_d2").alias("_d"), F.lit(depth).alias("_hops"))
+            .distinct()  # per-layer: many paths, one (s, d) pair
+        )
+        if depth >= lo:
+            layers.append(frontier)
+    if not layers:
+        # e.g. *2..3 over a heterogeneous edge: the statement is
+        # well-formed and nothing is reachable
+        layers = [reach.filter(F.lit(False))]
+    pairs = layers[0]
+    for extra in layers[1:]:
+        pairs = pairs.unionByName(extra)
+    return pairs.groupBy("_s", "_d").agg(F.min("_hops").alias("_hops"))
 
 
 def _chain_rows(scans: list[pa.Table], hows: list[tuple[str, str]]) -> list | None:
@@ -2667,31 +2713,30 @@ class GraphEngine:
     def _element_scan(
         self,
         key: tuple[str, str],
-        alias: str,
         where: list,
-        i: int,
-        nullable: bool,
+        i: int = 0,
+        nullable: bool = False,
         small: bool = False,
+        as_of: int | None = None,
     ) -> "DataFrame | pa.Table":
-        """Pattern element ``i``'s live view for chain and
-        variable-length MATCH, every column prefixed ``<alias>_``; with
-        ``small``, the unprefixed Arrow table when ``_live_view`` gives
-        one. Its base scan is zone/bloom-pruned by the WHERE groups
-        that bind exclusively to it; on a NULLABLE side (at/after an
-        OPTIONAL hop, or an optional endpoint) only predicates that
-        also reject the NULL padding qualify (see
-        zones.compile_chain_pruning_groups)."""
-        df = self._live_view(
-            key,
-            self.tables[key],
+        """Pattern element ``i``'s unprefixed live view (``_live_view``:
+        with ``small``, an Arrow table in ``_id`` order when one
+        applies, else a DataFrame), or with ``as_of`` that committed
+        version of the table (``_df_at``). Its base scan is
+        zone/bloom-pruned by the groups of the bound WHERE that bind
+        exclusively to it; on a NULLABLE side (at/after an OPTIONAL hop,
+        or an optional endpoint) only predicates that also reject the
+        NULL padding qualify (see zones.compile_chain_pruning_groups).
+        Endpoint refs of edge DML scan their node table the same way,
+        bound alone."""
+        groups = (
             zn.compile_chain_pruning_groups(where, i, nullable)
             if where and self.zone_stats
-            else None,
-            small,
+            else None
         )
-        if isinstance(df, pa.Table):
-            return df
-        return df.select(*[F.col(c).alias(f"{alias}_{c}") for c in df.columns])
+        if as_of is not None:
+            return self._df_at(*key, as_of, prune_groups=groups)
+        return self._live_view(key, self.tables[key], groups, small)
 
     # --------------------------------------------------------- helpers
 
@@ -2812,36 +2857,30 @@ class GraphEngine:
             props, [(None, nt.field_map(), tab.schema.fieldNames())]
         )
 
-    @staticmethod
-    def _ref_test(ref: ast.NodeRef, bound: list):
-        """Row test of an endpoint ref: its id, else its properties (a
-        bare ref matches every node)."""
-        if ref.id is not None:
-            return lambda r: r.get(ID_COLUMN) == ref.id.text
-        return _row_test(bound)
-
-    @staticmethod
-    def _ref_col(ref: ast.NodeRef, bound: list) -> Column:
-        """The ``Column`` lowering of an endpoint ref (see ``_ref_test``)."""
-        if ref.id is not None:
-            return F.col(ID_COLUMN) == F.lit(ref.id.text)
-        return _where_col(bound)
+    def _ref_ids(
+        self, ref: ast.NodeRef, bound: list, tab: _Table
+    ) -> tuple[DataFrame, bool]:
+        """The ``_id`` of every node an endpoint ref matches (its id,
+        else its properties; a bare ref matches every node), read
+        through the node element scan, and whether that scan ran on the
+        driver. A driver scan is a small Arrow table in ``_id`` order,
+        so the ids come as a local relation in ``_id`` order, read with
+        no job; otherwise the live view is zone-pruned by the ref's
+        properties."""
+        view = self._element_scan(("node", ref.node_type), bound, small=True)
+        local = isinstance(view, pa.Table)
+        df = self._local_frame(view, tab.schema) if local else view
+        hit = (
+            F.col(ID_COLUMN) == F.lit(ref.id.text)
+            if ref.id is not None
+            else _where_col(bound)
+        )
+        return df.filter(hit).select(ID_COLUMN), local
 
     def _resolve_node_ref(self, ref: ast.NodeRef, declared_label: str, side: str) -> str:
         tab, bound = self._endpoint_ref(ref, declared_label, side)
         if ref.id is None and not ref.properties:
             raise EngineError(f"{side} node reference needs an id or properties")
-        if tab.base is None:
-            # pure-buffer fast path: point lookup over driver-held rows,
-            # same deterministic smallest-ID first-match
-            test = self._ref_test(ref, bound)
-            ids = sorted(
-                (r[ID_COLUMN] for r in tab.buffer if test(r)),
-                key=lambda i: (len(i), i),
-            )
-            if not ids:
-                raise EngineError(f"{side} node not found for {ref.node_type}")
-            return ids[0]
         if ref.id is not None:
             # direct-ID refs are EXISTENCE checks (the resolved id is
             # the literal itself) — answerable from the driver buffer
@@ -2853,13 +2892,10 @@ class GraphEngine:
         # deterministic first-match: smallest ID (the reference's
         # first-match is Go map-iteration nondeterministic,
         # server.go:758-764 — documented divergence)
-        hits = (
-            self._merged_df(("node", ref.node_type))
-            .filter(_where_col(bound))
-            .orderBy(*_id_sort_key())
-            .limit(1)
-            .collect()
-        )
+        ids, local = self._ref_ids(ref, bound, tab)
+        if not local:
+            ids = ids.orderBy(F.length(ID_COLUMN), F.col(ID_COLUMN))
+        hits = ids.limit(1).collect()
         if not hits:
             raise EngineError(f"{side} node not found for {ref.node_type}")
         return hits[0][ID_COLUMN]
@@ -2955,9 +2991,9 @@ class GraphEngine:
         """The matched-rows step UPDATE and DELETE share. The WHERE and
         the edge endpoint refs (set semantics: ALL matching nodes,
         unlike INSERT's single resolve) bind once and the result is
-        ``(test, rows, df, pred)``. When every endpoint node table is
-        pure-buffer, the statement runs on the driver with zero Spark
-        jobs: on a pure-buffer table ``(test, None, None, None)``, a
+        ``(test, rows, df, pred)``. When every endpoint's node scan runs
+        on the driver (``_ref_ids``), the statement can too, with zero
+        Spark jobs: on a pure-buffer table ``(test, None, None, None)``, a
         row test over ``tab.buffer``; on a small flushed table
         ``(test, rows, None, pred)``, the same test over the rows of
         ``_small_scan`` (``pred`` is the WHERE's ``Column`` for the
@@ -2978,16 +3014,20 @@ class GraphEngine:
             ):
                 if ref is not None:
                     eps.append((ref, side, col, *self._endpoint_ref(ref, label, side)))
-        driver_eps = all(ep_tab.base is None for *_, ep_tab, _ in eps)
-        if driver_eps:
-            tests = [_row_test(where)]
-            for ref, _, col, ep_tab, bound in eps:
-                hit = self._ref_test(ref, bound)
-                ids = {r[ID_COLUMN] for r in ep_tab.buffer if hit(r)}
-                tests.append(lambda r, c=col, s=ids: r.get(c) in s)
-            test = lambda r: all(t(r) for t in tests)  # noqa: E731
-            if tab.base is None:
-                return test, None, None, None
+        # each endpoint's matching ids, as a marker column to left-join
+        # on, and as a row test when its node scan ran on the driver
+        tests, markers = [_row_test(where)], []
+        for ref, side, col, ep_tab, bound in eps:
+            ids, local = self._ref_ids(ref, bound, ep_tab)
+            marker = f"_grapho_{side.lower()}_match"
+            markers.append((col, marker, ids.select(F.col(ID_COLUMN).alias(marker))))
+            if local:
+                hit = {r[ID_COLUMN] for r in ids.collect()}
+                tests.append(lambda r, c=col, s=hit: r.get(c) in s)
+        driver_eps = len(tests) == len(eps) + 1  # every endpoint has a test
+        test = lambda r: all(t(r) for t in tests)  # noqa: E731
+        if driver_eps and tab.base is None:
+            return test, None, None, None
         # zone/bloom pruning: restrict the base scan to the leafs whose
         # stats admit the predicate (point statements on a bloomed
         # field read O(1) leafs instead of the chain)
@@ -3009,13 +3049,7 @@ class GraphEngine:
         if isinstance(view, pa.Table):
             return test, view.to_pylist(), None, pred
         df = view
-        for ref, side, col, _, bound in eps:
-            marker = f"_grapho_{side.lower()}_match"
-            ids = (
-                self._merged_df(("node", ref.node_type))
-                .filter(self._ref_col(ref, bound))
-                .select(F.col(ID_COLUMN).alias(marker))
-            )
+        for col, marker, ids in markers:
             df = df.join(ids, df[col] == ids[marker], "left")
             pred = pred & F.col(marker).isNotNull()
         return None, None, df, pred
@@ -3451,240 +3485,116 @@ class GraphEngine:
 
     # ------------------------------------------------------------ MATCH
 
-    def _match(self, stmt: ast.MatchStmt) -> StatementResult:
-        if not stmt.pattern:
+    def _match_shape(self, stmt: ast.MatchStmt) -> tuple[str, list]:
+        """Validate a MATCH pattern: its shape and each element's field
+        specs. ``nodes`` is a union of node types (a missing type has
+        None specs: the union refuses it at its turn, see ``_match``);
+        ``chain`` alternates node, edge, node, ...; ``reach`` is node,
+        edge*lo..hi, node. The reference's grammar parses pattern
+        elements but hardcodes IsEdge=false (parser.go:685), because a
+        parser without a catalog cannot tell node types from edge
+        types; the engine can, so an element naming an edge type makes
+        the pattern a chain or a reach."""
+        pattern = stmt.pattern
+        node, edge = self.catalog.node, self.catalog.edge
+        if not pattern:
             raise EngineError("MATCH requires at least one pattern element")
         if stmt.as_of is not None:
             # Time-travel MATCH reads ONE committed parquet version —
             # a chain/var-length/multi pattern would need a consistent
             # multi-table snapshot the flush protocol doesn't define.
-            if len(stmt.pattern) != 1:
+            if len(pattern) != 1:
+                raise EngineError("AS OF supports a single node-pattern element")
+            if node(pattern[0].type) is None:
+                raise EngineError(f"node type {pattern[0].type!r} does not exist")
+        bounded = [el.max_hops > 1 or el.min_hops != 1 for el in pattern]
+        if all(node(el.type) is not None or edge(el.type) is None for el in pattern):
+            if any(bounded):
+                # *bounds on a node-only pattern would otherwise be
+                # silently dropped by the union
                 raise EngineError(
-                    "AS OF supports a single node-pattern element"
+                    "variable-length *bounds require an edge element in the pattern"
                 )
-            el = stmt.pattern[0]
-            if self.catalog.node(el.type) is None:
-                raise EngineError(f"node type {el.type!r} does not exist")
-        # Edge-pattern extension: the reference's grammar parses pattern
-        # elements but hardcodes IsEdge=false (parser.go:685) because a
-        # parser without a catalog cannot tell node types from edge
-        # types. The ENGINE can: an element naming an edge type turns
-        # the pattern into a traversal chain (node, edge, node, ...)
-        # compiled to src/dst equi-joins.
-        if any(
-            self.catalog.node(el.type) is None
-            and self.catalog.edge(el.type) is not None
-            for el in stmt.pattern
-        ):
-            return self._match_chain(stmt)
-        if any(el.max_hops > 1 or el.min_hops != 1 for el in stmt.pattern):
-            # *bounds on a node-only pattern would otherwise be
-            # silently dropped by the union path below.
-            raise EngineError(
-                "variable-length *bounds require an edge element in the pattern"
-            )
-        if any(el.optional for el in stmt.pattern):
-            # OPTIONAL on a node-only pattern has nothing to be
-            # optional relative to — the union path would silently
-            # ignore the marker
-            raise EngineError(
-                "OPTIONAL requires an edge element in a chain pattern"
-            )
-        frames: list[DataFrame] = []
-        multi = len(stmt.pattern) > 1
-        if multi and (
-            any(func != "COUNT" for func, _ in stmt.return_aggs)
-            # ADVICE r11: a SINGLE unaliased aggregate parses into the
-            # legacy return_agg encoding — guard it too, or
-            # COUNT(DISTINCT v) over a union pattern silently counts
-            # stringified cross-type values (int 1 vs string '1'
-            # merge; 1 vs 1.0 split)
-            or (stmt.return_agg and stmt.return_agg[0] != "COUNT")
-        ):
-            # the union path stringifies heterogenous prop columns for
-            # schema alignment; SUM/AVG over those strings would be an
-            # ANSI runtime cast error (or silent nonsense) — refuse.
-            raise EngineError(
-                "aggregates other than COUNT(*)/COUNT(field) over "
-                "a multi-type pattern are not supported (the union path "
-                "stringifies heterogenous columns; SUM/AVG would cast-"
-                "error and COUNT(DISTINCT)/MIN/MAX would compare strings)"
-            )
-        # A single-element MATCH that returns rows in _id order runs
-        # over a small table's driver scan (see _small_scan): the
-        # filter and projection fold into its local relation, and the
-        # scan is already in _id order, so no job runs.
-        small = not multi and not (
-            stmt.as_of is not None
-            or stmt.order_by
-            or stmt.return_distinct
-            or stmt.return_count
-            or stmt.return_agg
-            or stmt.return_aggs
-        )
-        for el in stmt.pattern:
-            nt = self.catalog.node(el.type)
-            if nt is None:
-                raise EngineError(f"node type {el.type!r} does not exist")
-            key = ("node", el.type)
-            tab = self.tables[key]
-            alias, specs = el.alias or el.type, nt.field_map()
-            columns = tab.schema.fieldNames()
-            where = _bind_where(stmt.where, [(alias, specs, columns)])
-            # zone/bloom pruning: a point MATCH on a bloomed/statted
-            # field reads O(candidate) leafs instead of the chain
-            groups = (
-                zn.compile_pruning_groups(where)
-                if where and self.zone_stats
-                else None
-            )
-            if stmt.as_of is not None:
-                # AS OF reads the committed version's parquet (buffered
-                # rows are NOT part of a past version); WHERE/RETURN
-                # resolve against the current catalog's field specs
-                # intersected with the version's physical columns, so a
-                # drifted version rebinds (pruning above stays
-                # conservative: a field the version lacks has no stats)
-                df = self._df_at(
-                    "node", el.type, stmt.as_of, prune_groups=groups
+            if any(el.optional for el in pattern):
+                # OPTIONAL on a node-only pattern has nothing to be
+                # optional relative to
+                raise EngineError(
+                    "OPTIONAL requires an edge element in a chain pattern"
                 )
-                if df.columns != columns:
-                    where = _bind_where(stmt.where, [(alias, specs, df.columns)])
-            else:
-                df = self._live_view(key, tab, groups, small)
-                if isinstance(df, pa.Table):
-                    df = self._local_frame(df, tab.schema)
-                else:
-                    small = False
-            df = df.filter(_where_col(where))
-            if stmt.return_fields or stmt.return_aggs:
-                cols: list[Column] = [F.col(ID_COLUMN)]
-                for rf, user_al in _return_items(stmt):
-                    if "." in rf:
-                        # alias-qualified: this element contributes the
-                        # field only when the alias names IT (output
-                        # column <alias>_<field>, or the user's AS
-                        # alias, like the chain path); other union
-                        # elements contribute null — the same shape as
-                        # an undeclared field
-                        q, f = rf.split(".", 1)
-                        outn = user_al or f"{q}_{f}"
-                        if q == alias and f in df.columns:
-                            cols.append(F.col(f).alias(outn))
-                        elif multi:
-                            cols.append(F.lit(None).cast("string").alias(outn))
-                        else:
-                            raise EngineError(
-                                f"RETURN field {rf!r} not found on type "
-                                f"{el.type!r} (alias {el.alias or el.type!r})"
-                            )
-                    elif rf in df.columns:
-                        cols.append(
-                            F.col(rf).alias(user_al) if user_al else F.col(rf)
-                        )
-                    elif multi:
-                        cols.append(
-                            F.lit(None).cast("string").alias(user_al or rf)
-                        )
-                    else:
-                        raise EngineError(
-                            f"RETURN field {rf!r} not found on type {el.type!r}"
-                        )
-                df = df.select(*cols)
-            if multi:
-                # align heterogenous schemas: label + stringified props
-                df = df.select(
-                    F.lit(el.type).alias("_label"),
-                    F.col(ID_COLUMN),
-                    *[
-                        F.col(c).cast("string").alias(c)
-                        for c in df.columns
-                        if c != ID_COLUMN
-                    ],
+            if len(pattern) > 1 and (
+                any(func != "COUNT" for func, _ in stmt.return_aggs)
+                # ADVICE r11: a SINGLE unaliased aggregate parses into the
+                # legacy return_agg encoding — guard it too, or
+                # COUNT(DISTINCT v) over a union pattern silently counts
+                # stringified cross-type values (int 1 vs string '1'
+                # merge; 1 vs 1.0 split)
+                or (stmt.return_agg and stmt.return_agg[0] != "COUNT")
+            ):
+                # the union stringifies heterogenous prop columns for
+                # schema alignment; SUM/AVG over those strings would be an
+                # ANSI runtime cast error (or silent nonsense) — refuse.
+                raise EngineError(
+                    "aggregates other than COUNT(*)/COUNT(field) over "
+                    "a multi-type pattern are not supported (the union path "
+                    "stringifies heterogenous columns; SUM/AVG would cast-"
+                    "error and COUNT(DISTINCT)/MIN/MAX would compare strings)"
                 )
-            frames.append(df)
-        out = frames[0]
-        for f2 in frames[1:]:
-            out = out.unionByName(f2, allowMissingColumns=True)
-        tiebreak = [F.col("_label")] if multi else []
-        out = _apply_order_limit(
-            out,
-            stmt,
-            [] if small else [*tiebreak, *_id_sort_key()],
-            distinct_cols=self._distinct_cols(
-                stmt,
-                # DISTINCT must name OUTPUT columns: a qualified return
-                # field (x.seg) was projected as x_seg above — passing
-                # the raw dotted name would make select() parse it as
-                # struct access and die (ADVICE r10); an AS alias IS
-                # the output column (r11)
-                (["_label"] if multi else [])
-                + [
-                    al or rf.replace(".", "_")
-                    for rf, al in zip(
-                        stmt.return_fields,
-                        stmt.return_aliases
-                        or (None,) * len(stmt.return_fields),
-                    )
-                ],
-            ),
-        )
-        return StatementResult("match", "", count=-1, df=out)
-
-    @staticmethod
-    def _distinct_cols(stmt: "ast.MatchStmt", cols: list[str]) -> list[str] | None:
-        """Projection for RETURN DISTINCT (None when not requested).
-        The parser only sets the flag with explicit return fields; the
-        guard covers programmatic ASTs."""
-        if not stmt.return_distinct:
-            return None
-        if not stmt.return_fields:
-            raise EngineError("RETURN DISTINCT requires explicit return fields")
-        return cols
-
-    def _match_chain(self, stmt: ast.MatchStmt) -> StatementResult:
-        """MATCH with edge elements: ``MATCH A a, E e, B b [WHERE ...]
-        [RETURN ...]`` — an alternating node/edge chain compiled to
-        ``edge._src = left._id AND edge._dst = right._id`` equi-joins.
-        Output columns are ``<alias>_<col>`` (alias defaults to the
-        element's type name); WHERE keys apply to every element that
-        declares the field (a key no element declares matches nothing,
-        the reference's missing-prop rule); RETURN projects each field
-        from the first element declaring it, plus every ``_id``.
-
-        The join kinds of each hop come from ``_hop_schedule``. Without
-        ORDER BY, DISTINCT or aggregates, when every element has a small
-        Arrow scan (``_live_view``) and the joined rows stay within
-        ``_SMALL_SCAN_ROWS``, the joins run on the driver
-        (``_chain_rows``) and the result enters Spark as one local
-        relation already in tiebreak order: the same WHERE, RETURN and
-        LIMIT then run with no job. Otherwise Spark joins the scans."""
-        pattern = stmt.pattern
+            return "nodes", [
+                None if (nt := node(el.type)) is None else nt.field_map()
+                for el in pattern
+            ]
         if len(pattern) % 2 == 0 or len(pattern) < 3:
             raise EngineError(
                 "edge-pattern MATCH must alternate node, edge, node, ..."
             )
-        if any(el.max_hops > 1 or el.min_hops != 1 for el in pattern):
-            return self._match_var_length(stmt)
-        specs: list[dict[str, FieldSpec]] = []
-        for i, el in enumerate(pattern):
-            if i % 2 == 0:
-                nt = self.catalog.node(el.type)
-                if nt is None:
-                    raise EngineError(
-                        f"pattern position {i + 1}: node type {el.type!r} expected"
-                    )
-                if el.optional and 0 < i < len(pattern) - 1:
-                    # an optional INTERIOR node would leave the next
-                    # hop joining through a NULL-padded _id — only the
-                    # endpoints have a well-defined left-outer form
-                    raise EngineError(
-                        "OPTIONAL on a node element is supported only "
-                        "on the first or last element of the chain"
-                    )
-                specs.append(nt.field_map())
-            else:
-                et = self.catalog.edge(el.type)
+        if any(bounded):
+            if len(pattern) != 3:
+                raise EngineError(
+                    "variable-length MATCH supports exactly node, edge*, node"
+                )
+            left, mid, right = pattern
+            if left.optional or right.optional:
+                # OPTIONAL on the NODE elements has nothing to be optional
+                # relative to; only the *bounds edge may carry it (r12)
+                raise EngineError(
+                    "OPTIONAL in a variable-length pattern belongs on the "
+                    "edge element"
+                )
+            if bounded[0] or bounded[2]:
+                raise EngineError("only the edge element may carry *bounds")
+            nt_l, et, nt_r = node(left.type), edge(mid.type), node(right.type)
+            if nt_l is None or nt_r is None or et is None:
+                raise EngineError(
+                    "variable-length MATCH needs node, edge, node types"
+                )
+            if (et.from_ep.label, et.to_ep.label) != (left.type, right.type):
+                raise EngineError(
+                    f"variable-length pattern labels must match edge "
+                    f"{mid.type!r}'s declared endpoints "
+                    f"({et.from_ep.label!r}->{et.to_ep.label!r} declared, "
+                    f"pattern has {left.type!r}->{right.type!r})"
+                )
+            shape, specs = "reach", [nt_l.field_map(), et.prop_map(), nt_r.field_map()]
+        else:
+            shape, specs = "chain", []
+            for i, el in enumerate(pattern):
+                if i % 2 == 0:
+                    nt = node(el.type)
+                    if nt is None:
+                        raise EngineError(
+                            f"pattern position {i + 1}: node type {el.type!r} expected"
+                        )
+                    if el.optional and 0 < i < len(pattern) - 1:
+                        # an optional INTERIOR node would leave the next
+                        # hop joining through a NULL-padded _id — only the
+                        # endpoints have a well-defined left-outer form
+                        raise EngineError(
+                            "OPTIONAL on a node element is supported only "
+                            "on the first or last element of the chain"
+                        )
+                    specs.append(nt.field_map())
+                    continue
+                et = edge(el.type)
                 if et is None:
                     raise EngineError(
                         f"pattern position {i + 1}: edge type {el.type!r} expected"
@@ -3702,7 +3612,6 @@ class GraphEngine:
             raise EngineError(
                 "repeated types in an edge pattern need distinct aliases"
             )
-
         if pattern[0].optional and pattern[1].optional:
             # a leading optional node with an optional FIRST edge
             # would be a full-outer ambiguity
@@ -3710,303 +3619,274 @@ class GraphEngine:
                 "OPTIONAL on the leading node cannot combine with an "
                 "OPTIONAL first edge (ambiguous full-outer semantics)"
             )
+        return shape, specs
+
+    def _match(self, stmt: ast.MatchStmt) -> StatementResult:
+        """THE MATCH compiler, in fixed steps: validate the pattern
+        (``_match_shape``), bind the WHERE, scan each element
+        (``_element_scan``), connect the scans, project RETURN, then
+        order and limit (``_apply_order_limit``). Connect has three
+        forms:
+
+        - ``nodes``: one element, or a union of node types under a
+          ``_label`` column with their other columns stringified. Each
+          element binds the WHERE alone, and RETURN names its bare
+          fields (``x.f`` projects as ``x_f`` and is null on the other
+          elements of a union).
+        - ``chain``: ``edge._src = left._id AND edge._dst = right._id``
+          equi-joins with the join kinds of ``_hop_schedule``. Without
+          ORDER BY, DISTINCT or aggregates, when every element has a
+          small Arrow scan (``_live_view``) and the joined rows stay
+          within ``_SMALL_SCAN_ROWS``, the joins run on the driver
+          (``_chain_rows``) and the result enters Spark as one local
+          relation already in tiebreak order, so WHERE, RETURN and
+          LIMIT run with no job. Otherwise Spark joins the scans.
+        - ``reach``: one row per reachable (a, b) pair with
+          ``<alias>_hops``, the shortest path length within the bounds
+          (``_reach_pairs``), joined back to the endpoint scans.
+
+        Chain and reach columns are ``<alias>_<col>`` (alias defaults to
+        the element's type name). Their WHERE is a post-join filter: a
+        key applies to every element that declares it (a key no element
+        declares matches nothing, the reference's missing-prop rule),
+        and every leaf predicate is TOTAL, so a predicate on an optional
+        field drops NULL-padded rows (SQL LEFT JOIN + WHERE) and its NOT
+        keeps them. RETURN projects each field from the first element
+        declaring it, plus every id (the reach: its endpoints' ids and
+        the hops)."""
+        shape, specs = self._match_shape(stmt)
+        pattern = stmt.pattern
+        n = len(pattern)
+        aliases = [el.alias or el.type for el in pattern]
         keys = [
-            ("node" if i % 2 == 0 else "edge", el.type)
+            ("edge" if shape != "nodes" and i % 2 else "node", el.type)
             for i, el in enumerate(pattern)
         ]
-        where = _bind_where(
-            stmt.where,
-            [
-                (aliases[i], specs[i], self._table(*keys[i]).schema.fieldNames())
-                for i in range(len(pattern))
-            ],
-        )
-        # WHERE stays a post-join filter: every leaf predicate is TOTAL
-        # (null-safe =, IsNotNull-guarded comparisons), so a predicate
-        # on an optional field drops NULL-padded rows — SQL LEFT JOIN +
-        # WHERE semantics — and its NOT keeps them. The NULL-padded
-        # elements (the first under a right join, each one a left join
-        # adds) prune only by predicates that also reject the padding
-        # (zones.compile_chain_pruning_groups).
-        hows = _hop_schedule(pattern)
-        padded = [hows[0][0] == "right"]
-        padded += [how == "left" for hop in hows for how in hop]
-        # A result that keeps the tiebreak order can join on the driver
-        small = not (
-            stmt.order_by
+        # Bind. The union binds each element alone (a missing type is
+        # refused at its turn); chain and reach bind once.
+
+        def element(i: int) -> tuple:
+            if specs[i] is None:
+                raise EngineError(f"node type {pattern[i].type!r} does not exist")
+            if shape == "reach" and i == 1:
+                return (aliases[i], {}, [])  # the edge list carries no predicates
+            return (aliases[i], specs[i], self._table(*keys[i]).schema.fieldNames())
+
+        if shape == "nodes":
+            wheres = [_bind_where(stmt.where, [element(i)]) for i in range(n)]
+        else:
+            where = _bind_where(stmt.where, [element(i) for i in range(n)])
+            wheres = [where, [], where] if shape == "reach" else [where] * n
+        if shape == "reach":
+            # a WHERE key that binds to neither endpoint but names an
+            # edge property is an error, not a FALSE member
+            bare = next((f for f in _dead_fields(where) if f in specs[1]), None)
+            if bare is not None:
+                raise EngineError(
+                    f"WHERE on edge property {bare!r} is not "
+                    f"supported across a variable-length edge"
+                )
+
+        # Scan. The NULL-padded elements (the first under a right join,
+        # each one a left join adds, the right endpoint of an OPTIONAL
+        # *bounds edge) prune only by predicates that also reject the
+        # padding. A result that keeps the tiebreak order can read small
+        # Arrow scans. The reach scans its right endpoint first.
+        hows = _hop_schedule(pattern) if shape == "chain" else []
+        padded = [False] * (n - 1) + [shape == "reach" and pattern[1].optional]
+        if hows:
+            padded = [hows[0][0] == "right"]
+            padded += [how == "left" for hop in hows for how in hop]
+        small = (shape == "chain" or n == 1) and not (
+            stmt.as_of is not None
+            or stmt.order_by
             or stmt.return_distinct
             or stmt.return_count
             or stmt.return_agg
             or stmt.return_aggs
         )
-        scans = [
-            self._element_scan(keys[i], aliases[i], where, i, padded[i], small)
-            for i in range(len(pattern))
-        ]
-        rows = None
-        if all(isinstance(t, pa.Table) for t in scans):
-            rows = _chain_rows(scans, hows)
-        if rows is not None:
-            fields: list[ST.StructField] = []
-            columns: list[pa.ChunkedArray] = []
-            for e, t in enumerate(scans):
-                take = pa.array([r[e] for r in rows], type=pa.int64())
-                columns.extend(t.take(take).columns)  # a None index pads
-                fields.extend(
-                    ST.StructField(
-                        f"{aliases[e]}_{f.name}", f.dataType, f.nullable or padded[e]
+        scans: list = [None] * n
+        for i in reversed(range(n)) if shape == "reach" else range(n):
+            scans[i] = self._element_scan(
+                keys[i], wheres[i], 0 if shape == "nodes" else i, padded[i],
+                small, stmt.as_of,
+            )
+
+        def frame(i: int) -> DataFrame:
+            if isinstance(scans[i], pa.Table):
+                return self._local_frame(scans[i], self.tables[keys[i]].schema)
+            return scans[i]
+
+        def prefixed(i: int) -> DataFrame:
+            df = frame(i)
+            return df.select(*[F.col(c).alias(f"{aliases[i]}_{c}") for c in df.columns])
+
+        # Connect and project.
+        in_order = False  # rows already in tiebreak order
+        ret_cols: list[str] = []
+        if shape == "nodes":
+            multi = n > 1
+            in_order = small and isinstance(scans[0], pa.Table)
+            frames = []
+            for i, el in enumerate(pattern):
+                df = frame(i)
+                if stmt.as_of is not None and df.columns != element(i)[2]:
+                    # a drifted version rebinds against its own columns
+                    # (the pruning above stays conservative: a field the
+                    # version lacks has no stats)
+                    wheres[i] = _bind_where(
+                        stmt.where, [(aliases[i], specs[i], df.columns)]
                     )
-                    for f in self.tables[keys[e]].schema
-                )
-            schema = ST.StructType(fields)
-            out = self._local_frame(
-                pa.Table.from_arrays(columns, names=schema.fieldNames()), schema
-            )
-        else:
-            frames = [
-                self._local_frame(t, self.tables[keys[i]].schema).select(
-                    *[F.col(c).alias(f"{aliases[i]}_{c}") for c in t.column_names]
-                )
-                if isinstance(t, pa.Table)
-                else t
-                for i, t in enumerate(scans)
-            ]
+                df = df.filter(_where_col(wheres[i]))
+                if stmt.return_fields or stmt.return_aggs:
+                    cols: list[Column | str] = [F.col(ID_COLUMN)]
+                    ret_cols = ["_label"] if multi else []
+                    for rf, user_al in _return_items(stmt):
+                        q, f = rf.split(".", 1) if "." in rf else (None, rf)
+                        outn = user_al or (f"{q}_{f}" if q else f)
+                        ret_cols.append(outn)
+                        if q in (None, aliases[i]) and f in df.columns:
+                            cols.append(F.col(f).alias(outn) if q or user_al else f)
+                        elif multi:
+                            # the field of another element, or undeclared
+                            cols.append(F.lit(None).cast("string").alias(outn))
+                        else:
+                            raise EngineError(
+                                f"RETURN field {rf!r} not found on type {el.type!r}"
+                                + (f" (alias {aliases[i]!r})" if q else "")
+                            )
+                    df = df.select(*cols)
+                if multi:
+                    df = df.select(
+                        F.lit(el.type).alias("_label"),
+                        F.col(ID_COLUMN),
+                        *[
+                            F.col(c).cast("string").alias(c)
+                            for c in df.columns
+                            if c != ID_COLUMN
+                        ],
+                    )
+                frames.append(df)
             out = frames[0]
-            for h, (src_how, dst_how) in enumerate(hows):
-                i = 2 * h + 1
-                out = out.join(
-                    frames[i],
-                    F.col(f"{aliases[i]}_{SRC_COLUMN}")
-                    == F.col(f"{aliases[i - 1]}_{ID_COLUMN}"),
-                    src_how,
-                ).join(
-                    frames[i + 1],
-                    F.col(f"{aliases[i]}_{DST_COLUMN}")
-                    == F.col(f"{aliases[i + 1]}_{ID_COLUMN}"),
-                    dst_how,
-                )
-
-        if stmt.where:
-            out = out.filter(_where_col(where, aliases))
-
-        id_cols = [f"{a}_{ID_COLUMN}" for a in aliases]
-        ret_cols: list[str] = []
-        if stmt.return_fields or stmt.return_aggs:
-            cols = list(id_cols)
-            for rf, user_al in _return_items(stmt):
-                owner, bare = _return_field_owner(
-                    rf, aliases, specs, "not found in pattern"
-                )
-                outn = user_al or f"{owner}_{bare}"
-                cols.append(
-                    F.col(f"{owner}_{bare}").alias(outn)
-                    if user_al
-                    else f"{owner}_{bare}"
-                )
-                ret_cols.append(outn)
-            out = out.select(*cols)
-        sort_cols: list[Column] = []
-        for c in id_cols if rows is None else ():  # driver rows are in order
-            sort_cols.extend([F.length(c), F.col(c)])
-        out = _apply_order_limit(
-            out, stmt, sort_cols, distinct_cols=self._distinct_cols(stmt, ret_cols)
-        )
-        return StatementResult("match", "", count=-1, df=out)
-
-    def _match_var_length(self, stmt: ast.MatchStmt) -> StatementResult:
-        """Variable-length traversal (grammar extension, absent from
-        the reference): ``MATCH A a, E*lo..hi e, B b``. Returns one
-        row per reachable (a, b) pair with ``<alias>_hops`` = the
-        SHORTEST path length within [lo, hi] — deterministic (path
-        multiplicity is collapsed by a min aggregation), which is what
-        makes the statement oracle-checkable.
-
-        Hop composition goes through the edge's declared endpoint
-        labels: hop i+1 can extend hop i only if E's to-label equals
-        its from-label, because endpoint IDs live in per-label key
-        spaces (a bound Customer key and a bound Nation key may share
-        the value '3' without being the same node — composing across
-        labels would fabricate paths). A self-label edge (X->X)
-        therefore composes to any depth; a heterogeneous edge (X->Y,
-        X != Y) admits exactly one hop, so bounds [lo..hi] intersect
-        {1}: lo <= 1 yields the single-hop pairs, lo > 1 yields the
-        (correct) empty result. The pattern's node labels must equal
-        the edge's declared endpoint labels; the last hop always lands
-        on B's table.
-
-        Plan shape: the L-step reach sets are built by L-1 self-joins
-        of the edge list (bounded unrolling, L <= 10 — declarative, so
-        Catalyst plans ordinary equi-joins), unioned with a hops tag,
-        min-aggregated on the endpoint pair, then joined back to the
-        endpoint node tables for properties. Self-pairs (a = b via a
-        cycle) are kept — a cycle IS a path.
-        """
-        pattern = stmt.pattern
-        if len(pattern) != 3:
-            raise EngineError(
-                "variable-length MATCH supports exactly node, edge*, node"
-            )
-        if pattern[0].optional or pattern[2].optional:
-            # OPTIONAL on the NODE elements has nothing to be optional
-            # relative to; only the *bounds edge may carry it (r12)
-            raise EngineError(
-                "OPTIONAL in a variable-length pattern belongs on the "
-                "edge element"
-            )
-        left_el, edge_el, right_el = pattern
-        for el in (left_el, right_el):
-            if el.max_hops > 1 or el.min_hops != 1:
-                raise EngineError("only the edge element may carry *bounds")
-        nt_l = self.catalog.node(left_el.type)
-        nt_r = self.catalog.node(right_el.type)
-        et = self.catalog.edge(edge_el.type)
-        if nt_l is None or nt_r is None or et is None:
-            raise EngineError(
-                "variable-length MATCH needs node, edge, node types"
-            )
-        if not (
-            et.from_ep.label == left_el.type
-            and et.to_ep.label == right_el.type
-        ):
-            raise EngineError(
-                f"variable-length pattern labels must match edge "
-                f"{edge_el.type!r}'s declared endpoints "
-                f"({et.from_ep.label!r}->{et.to_ep.label!r} declared, "
-                f"pattern has {left_el.type!r}->{right_el.type!r})"
-            )
-        # Heterogeneous endpoints cannot self-compose (per-label key
-        # spaces) — the only realizable path length is 1.
-        composable = et.from_ep.label == et.to_ep.label
-        aliases = [el.alias or el.type for el in pattern]
-        if len(set(aliases)) != len(aliases):
-            raise EngineError(
-                "repeated types in an edge pattern need distinct aliases"
-            )
-        a, e_alias, b = aliases
-        node_keys = [("node", left_el.type), ("node", right_el.type)]
-        node_aliases = [a, b]
-        node_specs = [nt_l.field_map(), nt_r.field_map()]
-        where = _bind_where(
-            stmt.where,
-            [
-                (al, sp, self._table(*key).schema.fieldNames())
-                for al, sp, key in zip(node_aliases, node_specs, node_keys)
-            ],
-        )
-
-        def reject_edge_props(groups: list) -> None:
-            # the edge list carries no predicates: a WHERE key that
-            # binds to neither endpoint but names an edge property is
-            # an error, not a FALSE member
-            for m in (m for g in groups for m in g):
-                if isinstance(m, zn.Sub):
-                    reject_edge_props(m.groups)
-                elif isinstance(m, zn.Dead):
-                    bare = m.prop.name.split(".", 1)[-1]
-                    if bare in et.prop_map():
-                        raise EngineError(
-                            f"WHERE on edge property {bare!r} is not "
-                            f"supported across a variable-length edge"
+            for f2 in frames[1:]:
+                out = out.unionByName(f2, allowMissingColumns=True)
+            id_cols = [ID_COLUMN]
+        else:
+            if shape == "chain":
+                rows = None
+                if all(isinstance(t, pa.Table) for t in scans):
+                    rows = _chain_rows(scans, hows)
+                if rows is not None:
+                    fields: list[ST.StructField] = []
+                    columns: list[pa.ChunkedArray] = []
+                    for e, t in enumerate(scans):
+                        take = pa.array([r[e] for r in rows], type=pa.int64())
+                        columns.extend(t.take(take).columns)  # a None index pads
+                        fields.extend(
+                            ST.StructField(
+                                f"{aliases[e]}_{f.name}",
+                                f.dataType,
+                                f.nullable or padded[e],
+                            )
+                            for f in self.tables[keys[e]].schema
                         )
-
-        reject_edge_props(where)
-
-        edges = self._merged_df(("edge", edge_el.type)).select(
-            F.col(SRC_COLUMN).alias("_s"), F.col(DST_COLUMN).alias("_d")
-        )
-        lo, hi = edge_el.min_hops, edge_el.max_hops
-        if not composable:
-            hi = min(hi, 1)  # deeper layers are provably empty
-        reach = edges.select("_s", "_d", F.lit(1).alias("_hops"))
-        layers = [reach] if lo <= 1 else []
-        frontier = reach
-        for depth in range(2, hi + 1):
-            nxt = edges.select(
-                F.col("_s").alias("_s2"), F.col("_d").alias("_d2")
-            )
-            frontier = (
-                frontier.join(nxt, frontier["_d"] == F.col("_s2"))
-                .select("_s", F.col("_d2").alias("_d"), F.lit(depth).alias("_hops"))
-                .distinct()  # per-layer: many paths, one (s, d) pair
-            )
-            if depth >= lo:
-                layers.append(frontier)
-        if not layers:
-            # bounds admit no realizable path length (e.g. *2..3 over a
-            # heterogeneous edge) — the correct result is empty, not an
-            # error: the statement is well-formed, nothing is reachable
-            layers = [reach.filter(F.lit(False))]
-        pairs = layers[0]
-        for extra in layers[1:]:
-            pairs = pairs.unionByName(extra)
-        pairs = pairs.groupBy("_s", "_d").agg(F.min("_hops").alias("_hops"))
-
-        # r12: OPTIONAL on the *bounds edge = left-outer composition —
-        # every left-endpoint row survives; rows with no reachable
-        # right endpoint within the bounds NULL-pad hops and the right
-        # node's columns. The (pairs ⋈ right) inner block builds first
-        # so the outer join NULL-pads it as a unit (joining pairs
-        # left-outer then right inner would re-drop the padded rows).
-        # The endpoint scans prune like chain elements (r14); only the
-        # right endpoint of an OPTIONAL *bounds edge is nullable.
-        inner = pairs.join(
-            self._element_scan(node_keys[1], b, where, 1, edge_el.optional),
-            F.col("_d") == F.col(f"{b}_{ID_COLUMN}"),
-        )
-        out = (
-            self._element_scan(node_keys[0], a, where, 0, False)
-            .join(
-                inner,
-                F.col("_s") == F.col(f"{a}_{ID_COLUMN}"),
-                "left" if edge_el.optional else "inner",
-            )
-            .withColumn(f"{e_alias}_hops", F.col("_hops").cast("long"))
-            .drop("_s", "_d", "_hops")
-        )
-
-        if stmt.where:
-            out = out.filter(_where_col(where, node_aliases))
-
-        id_cols = [f"{a}_{ID_COLUMN}", f"{b}_{ID_COLUMN}"]
-        ret_cols: list[str] = []
-        if stmt.return_fields or stmt.return_aggs:
-            cols = list(id_cols) + [f"{e_alias}_hops"]
-            for rf, user_al in _return_items(stmt):
-                if rf == "hops" or rf == f"{e_alias}.hops":
-                    if user_al:
-                        out = out.withColumn(user_al, F.col(f"{e_alias}_hops"))
-                        cols.append(user_al)
-                        ret_cols.append(user_al)
+                    schema = ST.StructType(fields)
+                    out = self._local_frame(
+                        pa.Table.from_arrays(columns, names=schema.fieldNames()), schema
+                    )
+                    in_order = True
+                else:
+                    out = prefixed(0)
+                    for h, (src_how, dst_how) in enumerate(hows):
+                        i = 2 * h + 1
+                        out = out.join(
+                            prefixed(i),
+                            F.col(f"{aliases[i]}_{SRC_COLUMN}")
+                            == F.col(f"{aliases[i - 1]}_{ID_COLUMN}"),
+                            src_how,
+                        ).join(
+                            prefixed(i + 1),
+                            F.col(f"{aliases[i]}_{DST_COLUMN}")
+                            == F.col(f"{aliases[i + 1]}_{ID_COLUMN}"),
+                            dst_how,
+                        )
+            else:
+                # Hop composition goes through the edge's declared
+                # endpoint labels: endpoint IDs live in per-label key
+                # spaces, so a heterogeneous edge (X->Y) admits exactly
+                # one hop and deeper layers are provably empty.
+                et = self.catalog.edge(pattern[1].type)
+                hi = pattern[1].max_hops if et.from_ep.label == et.to_ep.label else 1
+                pairs = _reach_pairs(scans[1], pattern[1].min_hops, hi)
+                # r12: OPTIONAL on the *bounds edge = left-outer
+                # composition: every left-endpoint row survives, and rows
+                # with no reachable right endpoint NULL-pad hops and the
+                # right node's columns. The (pairs ⋈ right) inner block
+                # builds first so the outer join NULL-pads it as a unit.
+                inner = pairs.join(
+                    prefixed(2), F.col("_d") == F.col(f"{aliases[2]}_{ID_COLUMN}")
+                )
+                out = (
+                    prefixed(0)
+                    .join(
+                        inner,
+                        F.col("_s") == F.col(f"{aliases[0]}_{ID_COLUMN}"),
+                        "left" if pattern[1].optional else "inner",
+                    )
+                    .withColumn(f"{aliases[1]}_hops", F.col("_hops").cast("long"))
+                    .drop("_s", "_d", "_hops")
+                )
+            if stmt.where:
+                out = out.filter(_where_col(where, aliases))
+            ends = [i for i in range(n) if shape == "chain" or i % 2 == 0]
+            id_cols = [f"{aliases[i]}_{ID_COLUMN}" for i in ends]
+            if stmt.return_fields or stmt.return_aggs:
+                hops = f"{aliases[1]}_hops"
+                cols = list(id_cols) + ([hops] if shape == "reach" else [])
+                for rf, user_al in _return_items(stmt):
+                    if shape == "reach" and rf in ("hops", f"{aliases[1]}.hops"):
+                        if not user_al:
+                            ret_cols.append(hops)
+                            continue  # always projected as <alias>_hops
+                        src = hops
                     else:
-                        ret_cols.append(f"{e_alias}_hops")
-                    continue  # always projected as <alias>_hops
-                owner, bare = _return_field_owner(
-                    rf, node_aliases, node_specs,
-                    "not found on the endpoint types",
-                )
-                outn = user_al or f"{owner}_{bare}"
-                cols.append(
-                    F.col(f"{owner}_{bare}").alias(outn)
-                    if user_al
-                    else f"{owner}_{bare}"
-                )
-                ret_cols.append(outn)
-            out = out.select(*cols)
-        sort_cols: list[Column] = []
-        for c in id_cols:
-            sort_cols.extend([F.length(c), F.col(c)])
+                        owner, bare = _return_field_owner(
+                            rf,
+                            [aliases[i] for i in ends],
+                            [specs[i] for i in ends],
+                            "not found in pattern"
+                            if shape == "chain"
+                            else "not found on the endpoint types",
+                        )
+                        src = f"{owner}_{bare}"
+                    ret_cols.append(user_al or src)
+                    cols.append(F.col(src).alias(user_al) if user_al else src)
+                out = out.select(*cols)
+
+        # Order and limit: the user's keys, then the tiebreak — the
+        # union's _label, then each id column numeric-aware ('2' < '10')
+        if stmt.return_distinct and not stmt.return_fields:
+            # the parser only sets the flag with explicit return fields;
+            # this guards programmatic ASTs
+            raise EngineError("RETURN DISTINCT requires explicit return fields")
+        tiebreak = [F.col("_label")] if shape == "nodes" and n > 1 else []
+        tiebreak += [k for c in id_cols for k in (F.length(c), F.col(c))]
         out = _apply_order_limit(
-            out, stmt, sort_cols, distinct_cols=self._distinct_cols(stmt, ret_cols)
+            out,
+            stmt,
+            [] if in_order else tiebreak,
+            distinct_cols=ret_cols if stmt.return_distinct else None,
         )
         return StatementResult("match", "", count=-1, df=out)
 
     # ------------------------------------------------- SHOW / DESCRIBE
 
     def _explain(self, stmt: ast.ExplainStmt) -> StatementResult:
-        """EXPLAIN MATCH ... : compile the traversal exactly as MATCH
-        would (same code path — the plan shown IS the plan that would
-        run) and return the formatted physical plan, one line per row,
-        instead of executing it. The plan-audit surface
+        """EXPLAIN MATCH ... : compile the pattern through ``_match``,
+        the one MATCH compiler (the plan shown IS the plan that would
+        run), and return the zone-pruning decisions of its element
+        scans, in scan order, then the formatted physical plan, one
+        line per row, instead of executing it. The plan-audit surface
         (plan_expectations.py) through the GQL wire protocol. Plan text
         comes straight from the JVM (plan_string), not a stdout
         capture, so concurrent engines can't interleave output."""

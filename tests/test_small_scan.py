@@ -439,3 +439,42 @@ def test_chain_paths_agree(spark, tmp_path, monkeypatch):
         "MATCH P p, S s, P q WHERE w >= 2 RETURN w LIMIT 2 OFFSET 1;",
     ]:
         assert run(stmt) == 0, stmt
+
+
+def test_property_endpoint_refs_run_zero_jobs(spark, tmp_path, monkeypatch):
+    """Endpoint refs by properties read the node element scan: on
+    flushed, mutated and buffered P they run no job, resolve the
+    smallest id and refuse an absent node, as the Spark path does."""
+    small, big = [
+        GraphEngine(spark, data_dir=str(tmp_path / n), id_buckets=4)
+        for n in ("small", "spark")
+    ]
+    run = lambda s: _agree(spark, monkeypatch, small, big, s)  # noqa: E731
+    run("CREATE NODE P (k: int, g: int);")
+    run("CREATE EDGE S (FROM P MANY, TO P MANY, PROPS (w: int));")
+    for k in range(1, 13):  # ids '1'..'12'
+        run(f"INSERT NODE P (k: {k}, g: {k % 3});")
+    for eng in (small, big):
+        eng.flush()
+    for stmt in [
+        "INSERT EDGE S FROM P(k: 9) TO P(k: 1) (w: 1);",  # flushed P
+        # g: 1 matches ids 1, 4, 7 and 10: '1' is the smallest
+        "INSERT EDGE S FROM P(g: 1) TO P(k: 12) (w: 2);",
+        "UPDATE EDGE S FROM P (k: 9) TO P SET w: 4;",
+        "UPDATE NODE P SET g: 5 WHERE k IN (9, 10);",  # mutated P
+        # g: 5 now matches ids 9 and 10: '9' is the smallest
+        "INSERT EDGE S FROM P(g: 5) TO P(k: 2) (w: 5);",
+        "UPDATE EDGE S FROM P (g: 5) TO P (k: 1) SET w: 6;",
+        "INSERT NODE P (k: 13, g: 7);",  # buffered P
+        "INSERT EDGE S FROM P(k: 13) TO P(g: 7) (w: 7);",
+        "INSERT EDGE S FROM P(g: 8) TO P(k: 1) (w: 8);",  # refused
+        "DELETE EDGE S FROM P TO P (k: 1) WHERE w: 6;",
+    ]:
+        assert run(stmt) == 0, stmt
+    assert {op for op, _ in small.tables[("node", "P")].mut_parts} == {"u"}
+    assert small.tables[("node", "P")].buffer
+    out = execute_command(small, "MATCH P a, S s, P b RETURN a.k, s.w, b.k;")
+    rows = [ln.split("map")[1] for ln in out.splitlines() if "Properties" in ln]
+    assert rows == [
+        "[a_k:1 b_k:12 s_w:2]", "[a_k:9 b_k:2 s_w:5]", "[a_k:13 b_k:13 s_w:7]"
+    ], out
