@@ -2,15 +2,18 @@
 
 Contract: ``edges`` has columns ``src`` and ``dst`` (any orderable
 type); algorithms treat the graph as directed unless noted. All loops
-use ``localCheckpoint`` between rounds to truncate lineage (without it
-round N replays rounds 1..N-1 — the classic iterative-Spark trap), and
-each round is a bounded number of shuffles on the same key so the
-shape holds at cluster scale.
+use ``checkpoint_state`` between rounds to truncate lineage (without
+it round N replays rounds 1..N-1 — the classic iterative-Spark trap),
+and each round is a bounded number of shuffles on the same key so the
+shape holds at cluster scale. A loop's halt probe (frontier size,
+convergence fingerprint) is a ``pyspark.sql.Observation`` on the state
+it checkpoints, so it rides the round's one job instead of running its
+own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from grapho_spark.sparkutil import (
@@ -93,18 +96,18 @@ def bfs(
 
 def _bfs_loop(e, visited, frontier, max_hops):
     for hop in range(1, max_hops + 1):
-        nxt = (
+        # the frontier size, observed on the checkpoint, is the
+        # emptiness probe
+        obs = Observation()
+        nxt = checkpoint_state(
             e.join(frontier, e.src == frontier.node)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("hops", F.lit(hop))
+            .observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        # pinning count doubles as the emptiness probe (r15 — the
-        # separate isEmpty was one extra job per hop)
-        n_new = nxt.count()
-        nxt = nxt.localCheckpoint()
-        if n_new == 0:
+        if obs.get["n"] == 0:
             break
         visited = checkpoint_state(visited.unionByName(nxt))
         frontier = nxt.select("node")
@@ -162,7 +165,10 @@ def multi_source_bfs(
                 .groupBy(F.col("dst").alias("node"))
                 .agg(F.array_distinct(F.flatten(F.collect_list("srcs"))).alias("arr"))
             )
-            nxt = (
+            # the frontier size, observed on the checkpoint, is the
+            # emptiness probe
+            obs = Observation()
+            nxt = checkpoint_state(
                 arrivals.join(visited, "node", "left")
                 .select(
                     "node",
@@ -173,12 +179,9 @@ def multi_source_bfs(
                     ).alias("new_srcs"),
                 )
                 .filter(F.size("new_srcs") > 0)
+                .observe(obs, F.count(F.lit(1)).alias("n"))
             )
-            # the checkpoint's pinning count doubles as the emptiness
-            # probe — the r14 loop paid a separate isEmpty job per hop
-            n_new = nxt.count()
-            nxt = nxt.localCheckpoint()
-            if n_new == 0:
+            if obs.get["n"] == 0:
                 break
             out = out.unionByName(
                 nxt.select(
@@ -250,7 +253,6 @@ def _cc_loop(sym, labels, max_iter):
     # scale (a giant component over billions of nodes) swap this loop
     # for large-star/small-star, which alternates the same two joins
     # skew-safely.
-    from pyspark import StorageLevel
     from pyspark.sql.types import NumericType
 
     # Convergence fingerprint: labels only ever DECREASE, so for
@@ -263,11 +265,13 @@ def _cc_loop(sym, labels, max_iter):
     # hash-delta sums to cancel exactly (~2^-128), while a true
     # fixpoint always matches.
     if isinstance(labels.schema["component"].dataType, NumericType):
-        _fp_exprs = [F.sum(F.col("component").cast("decimal(38,0)"))]
+        _fp_exprs = [F.sum(F.col("component").cast("decimal(38,0)")).alias("fp")]
     else:
         _fp_exprs = [
-            F.sum(F.xxhash64(F.col("component")).cast("decimal(38,0)")),
-            F.sum(F.xxhash64(F.lit("cc2"), F.col("component")).cast("decimal(38,0)")),
+            F.sum(F.xxhash64(F.col("component")).cast("decimal(38,0)")).alias("fp"),
+            F.sum(
+                F.xxhash64(F.lit("cc2"), F.col("component")).cast("decimal(38,0)")
+            ).alias("fp2"),
         ]
 
     prev_sum = None
@@ -286,7 +290,10 @@ def _cc_loop(sym, labels, max_iter):
         jump = minned.select(
             F.col("node").alias("sc_node"), F.col("component").alias("sc_component")
         )
-        new_labels = (
+        # The fingerprint rides the checkpoint's job (one job/round)
+        # instead of a separate old⋈new shuffle.
+        obs = Observation()
+        labels = checkpoint_state(
             minned.join(jump, minned.component == F.col("sc_node"), "left")
             .select(
                 "node",
@@ -295,13 +302,9 @@ def _cc_loop(sym, labels, max_iter):
                     F.coalesce(F.col("sc_component"), F.col("component")),
                 ).alias("component"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .observe(obs, *_fp_exprs)
         )
-        # The fingerprint rides the materialization action (one
-        # codegen'd job/round) instead of a separate old⋈new shuffle.
-        cur_sum = tuple(new_labels.agg(*_fp_exprs).collect()[0])
-        labels = new_labels.localCheckpoint()  # cheap: copies cached blocks
-        new_labels.unpersist()
+        cur_sum = obs.get
         if prev_sum is not None and cur_sum == prev_sum:
             break
         prev_sum = cur_sum
@@ -382,19 +385,22 @@ def connected_components_lss(edges: DataFrame, max_iter: int = 30) -> DataFrame:
         )
         prev_fp = None
         for _ in range(max_iter):
-            e = checkpoint_state(small_star(large_star(e)))
             # Fingerprint convergence: edge multiset unchanged. Dual
             # independently-seeded hash sums (same scheme as _cc_loop)
-            # make a false fixpoint require both deltas to cancel.
-            fp = tuple(
-                e.agg(
-                    F.count(F.lit(1)),
-                    F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")),
+            # make a false fixpoint require both deltas to cancel; the
+            # fingerprint is observed on the round's checkpoint.
+            obs = Observation()
+            e = checkpoint_state(
+                small_star(large_star(e)).observe(
+                    obs,
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
                     F.sum(
                         F.xxhash64(F.lit("lss2"), "src", "dst").cast("decimal(38,0)")
-                    ),
-                ).collect()[0]
+                    ).alias("h2"),
+                )
             )
+            fp = obs.get
             if fp == prev_fp:
                 break
             prev_fp = fp
@@ -440,13 +446,16 @@ def pagerank(
                 edges.select("src", "dst") if directed else _symmetrize(edges)
             ).transform(materialize)
         )
+        # the node count is observed on the materializing action
+        obs = Observation()
         nodes = (
             e.select(F.col("src").alias("node"))
             .unionAll(e.select(F.col("dst").alias("node")))
             .distinct()
+            .observe(obs, F.count(F.lit(1)).alias("n"))
             .transform(materialize)
         )
-        n = nodes.count()
+        n = obs.get["n"]
         deg = e.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("d"))
         if directed:
             # If every node has out-degree, the per-iteration

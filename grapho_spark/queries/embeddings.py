@@ -1504,13 +1504,10 @@ def _kmeans_pair(
             cents = vecs.join(F.broadcast(seed_ids), "vec_id").select(
                 F.col("vec_id").alias("cid"), "pos", F.col("val").alias("cval")
             )
-        # materialize (persist+count, ONE execution) per round instead
-        # of checkpoint_state (count + eager localCheckpoint = the plan
-        # runs twice): measured 26.8s vs 47.3s for the 32-cell/3-round
-        # chain at sf0.1 with bit-identical assignments (r14, VERDICT
-        # r13 #5); lineage depth stays bounded because rounds <= 3
-        # everywhere and each round reads the previous round's cached
-        # frame.
+        # materialize (persist+count) per round, not checkpoint_state:
+        # the rounds need a reuse barrier, not lineage truncation,
+        # because rounds <= 3 everywhere and each round reads the
+        # previous round's cached frame.
         for _ in range(rounds):
             cents = materialize(recompute(assign(cents)))
         return cents
@@ -2263,7 +2260,7 @@ def _pq16_codebook_impl(
     varr = _pq_varr(spark, sf_dir, pred)
     cw = _codewords(varr.select((F.col("vec_id") % _ANN_PQ_K).alias("grp"), "sub", "dvm"))
     for _ in range(_ANN_PQ_TRAIN):
-        # materialize, not checkpoint_state: same one-execution win as
+        # materialize, not checkpoint_state: a reuse barrier as in
         # _kmeans_pair's rounds (trains <= _ANN_PQ_TRAIN = 2 rounds)
         cw = materialize(_codewords(_pq_assign_hof(varr, cw)))
     return cw

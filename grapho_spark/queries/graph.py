@@ -973,10 +973,9 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan exchanged bedges 4x + sorted it 8x; the score vector is to
     # the edge list what the rank vector is to PPR — ≪ edges, and at
     # 100 TB the stated alternative is bucketing bedges by both keys).
-    # materialize(), not bare localCheckpoint(): the direct checkpoint
-    # materializes via the codegen-less .rdd path (PERF.md measured
-    # 17s vs 1.8s on a same-shape plan). a2 is materialized too — it
-    # feeds both h2 and the authority output, and without the barrier
+    # materialize(): bedges is a reuse barrier, not loop state, so it
+    # needs no lineage truncation. a2 is materialized too — it feeds
+    # both h2 and the authority output, and without the barrier
     # Catalyst re-inlines the whole chain into each consumer.
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")

@@ -36,10 +36,10 @@ def materialize(df: DataFrame, pinned: bool = False) -> DataFrame:
     project-collapse cannot inline the computation into every
     downstream join/explode (which recomputes it per consumer).
 
-    Measured on an identical shingling plan at sf0.1:
-    persist+count 1.8s, count-then-localCheckpoint 3.8s, direct
-    localCheckpoint 17s (the checkpoint materializes through the
-    ``.rdd`` conversion path, losing codegen). Use
+    Measured on an identical shingling plan at sf0.1 (an earlier
+    Spark): persist+count 1.8s, count-then-localCheckpoint 3.8s,
+    direct localCheckpoint 17s. On Spark 4.1.2 the direct checkpoint
+    of per-round loop state is not slower (PERF.md). Use
     ``checkpoint_state`` instead inside iterative loops, where lineage
     truncation is the point.
 
@@ -120,16 +120,17 @@ def memo_table(spark: SparkSession, key: str, builder) -> DataFrame:
 
 
 def checkpoint_state(df: DataFrame) -> DataFrame:
-    """Pin per-iteration loop state AND truncate lineage.
+    """Pin per-iteration loop state AND truncate lineage: one eager
+    localCheckpoint, which runs the round's plan exactly once.
 
-    Runs the plan as a DataFrame action first (shuffle outputs stay
-    registered with the DAG scheduler), then eager localCheckpoint —
-    the checkpoint's re-execution skips to the final stage instead of
-    paying the slow ``.rdd`` path for the whole plan. Without lineage
-    truncation, iteration N replays rounds 1..N-1 (or re-plans an
-    N-deep nested tree under persist).
+    Without lineage truncation, iteration N replays rounds 1..N-1 (or
+    re-plans an N-deep nested tree under persist). A loop that needs a
+    probe of the new state (frontier size, convergence fingerprint)
+    attaches a ``pyspark.sql.Observation`` before the call —
+    ``checkpoint_state(df.observe(obs, ...))`` — and reads ``obs.get``
+    afterwards: the probe rides the checkpoint's job instead of
+    running its own.
     """
-    df.count()
     return df.localCheckpoint()
 
 

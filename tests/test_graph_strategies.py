@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 
 import grapho_spark.queries.graph as G
+from test_small_scan import _jobs
 
 SF = "/root/testdata/sf0.001"
 
@@ -142,3 +143,44 @@ def test_multi_source_bfs_equals_per_source_bfs(spark):
         single = {r.node: r.hops for r in bfs(sym, start, max_hops=3).collect()}
         got = {n: h for (src, n), h in multi.items() if src == s}
         assert got == single, (s, got, single)
+
+
+# Warm Spark jobs per call on one small fixed graph (a 10-hop chain, a
+# triangle and a pair). A loop round is one execution of its plan:
+# checkpoint_state runs one job, and the frontier and fingerprint probes
+# are Observations on that job. The first call warms the session
+# (persisted inputs, plan caches); the second is counted.
+_LOOP_JOBS = {
+    "bfs": 15,
+    "multi_source_bfs": 17,
+    "connected_components": 13,
+    "connected_components_str": 26,
+    "connected_components_lss": 27,
+    "pagerank_prepared": 14,
+    "label_propagation": 10,
+}
+
+
+@pytest.mark.parametrize("algo", sorted(_LOOP_JOBS))
+def test_loop_jobs_per_algorithm(spark, algo):
+    from grapho_spark import analytics as A
+    from grapho_spark.analytics.algorithms import _symmetrize
+    from grapho_spark.sparkutil import materialize
+
+    pairs = [(i, i + 1) for i in range(10)] + [(20, 21), (21, 22), (22, 20), (30, 31)]
+    e = _edges_df(spark, pairs)
+    start = spark.createDataFrame([(0,), (20,)], "node long")
+    prepared = materialize(_symmetrize(e).repartition("src"))
+    calls = {
+        "bfs": lambda: A.bfs(e, start, 4),
+        "multi_source_bfs": lambda: A.multi_source_bfs(e, start, 4),
+        "connected_components": lambda: A.connected_components(e),
+        "connected_components_str": lambda: A.connected_components(
+            _edges_df(spark, [(f"n{a}", f"n{b}") for a, b in pairs], typ="string")
+        ),
+        "connected_components_lss": lambda: A.connected_components_lss(e),
+        "pagerank_prepared": lambda: A.pagerank(prepared, iters=3, prepared=True),
+        "label_propagation": lambda: A.label_propagation(e, 3),
+    }
+    calls[algo]()
+    assert _jobs(spark, calls[algo])[1] == _LOOP_JOBS[algo]
