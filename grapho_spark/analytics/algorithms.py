@@ -13,24 +13,49 @@ own.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from grapho_spark.sparkutil import (
+    LOOP_ROWS,
     checkpoint_state,
     materialize,
     no_aqe,
+    scaled_partitions,
     shuffle_partitions,
 )
 
 
-def _loop_partitions(n_rows: int, spark) -> int:
-    """Shuffle-partition count for per-round iteration state: ~100k
-    rows per partition, floored at 4 and capped at the cluster's
-    parallelism. On a 1000-executor cluster with billions of edges this
-    returns the cap; on a thresholded co-purchase graph it returns 4 —
-    the same cost-based call either way."""
-    return max(4, min(spark.sparkContext.defaultParallelism, n_rows // 100_000 + 1))
+@contextmanager
+def _loop(edges: DataFrame, prepared: bool, table, copies: int = 2):
+    """Every loop's preamble: size the loop, enter ``no_aqe`` and
+    ``shuffle_partitions`` at that count, and yield the loop's edge
+    table.
+
+    ``prepared=True``: ``edges`` is a materialized, src-partitioned
+    session view (``queries.graph.prepared_sym_edges``). It is yielded
+    as is, and the loop takes the view's own partition count (read off
+    the view, no job), so the per-round state is co-partitioned with
+    it. Otherwise the count is ``scaled_partitions`` over ``copies``
+    times the edge rows, and the yielded table is ``table(edges)``
+    materialized at that count."""
+    spark = edges.sparkSession
+    if prepared:
+        parts = edges.rdd.getNumPartitions()
+    else:
+        parts = scaled_partitions(spark, copies * edges.count(), LOOP_ROWS, 4)
+    with no_aqe(spark), shuffle_partitions(spark, parts):
+        yield edges if prepared else materialize(table(edges))
+
+
+def _by_src(directed: bool):
+    """The loop edge table partitioned on the per-round join key: each
+    round then shuffles only its state, never the edges."""
+    return lambda edges: (
+        edges.select("src", "dst") if directed else _symmetrize(edges)
+    ).repartition("src")
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -71,26 +96,13 @@ def bfs(
     ``max_hops``: returns (node, hops) with the MINIMUM hop count.
 
     Each round: frontier ⋈ edges -> next frontier minus visited — one
-    shuffle per hop, frontier-sized not graph-sized.
+    shuffle per hop, frontier-sized not graph-sized. ``prepared=True``:
+    ``edges`` is a session view shared across traversal queries (see
+    ``_loop``).
     """
-    # Cache the edge table PRE-PARTITIONED on the per-hop join key:
-    # each hop then shuffles only the frontier, never the edges.
-    # ``prepared=True``: the caller passes it already partitioned +
-    # materialized (e.g. a session-memoized view shared across
-    # traversal queries).
-    e = (
-        edges
-        if prepared
-        else materialize(
-            (edges.select("src", "dst") if directed else _symmetrize(edges)).repartition(
-                "src"
-            )
-        )
-    )
     visited = start_nodes.select("node").distinct().withColumn("hops", F.lit(0))
     frontier = visited.select("node")
-    spark = edges.sparkSession
-    with no_aqe(spark), shuffle_partitions(spark, _loop_partitions(e.count(), spark)):
+    with _loop(edges, prepared, _by_src(directed), 1 if directed else 2) as e:
         return _bfs_loop(e, visited, frontier, max_hops)
 
 
@@ -141,15 +153,6 @@ def multi_source_bfs(
     # src-partitioned edge table pre-materialized (``prepared=True``,
     # e.g. a session-memoized view shared by the centrality
     # estimators) — skipping a full repartition+persist per call.
-    e = (
-        edges
-        if prepared
-        else materialize(
-            (edges.select("src", "dst") if directed else _symmetrize(edges)).repartition(
-                "src"
-            )
-        )
-    )
     src0 = sources.select("node").distinct()
     # per-node visited source-set; seeded with {self} for each source
     visited = src0.select("node", F.array(F.col("node")).alias("srcs"))
@@ -157,8 +160,7 @@ def multi_source_bfs(
         F.col("node").alias("source"), F.col("node"), F.lit(0).alias("hops")
     )
     frontier = visited  # newly-arrived source-sets per node
-    spark = edges.sparkSession
-    with no_aqe(spark), shuffle_partitions(spark, _loop_partitions(e.count(), spark)):
+    with _loop(edges, prepared, _by_src(directed), 1 if directed else 2) as e:
         for hop in range(1, max_hops + 1):
             arrivals = (
                 e.join(frontier, e.src == frontier.node)
@@ -217,15 +219,12 @@ def connected_components(
     undirected graph; converges in O(diameter) rounds.
 
     ``prepared=True``: ``edges`` is already symmetrized,
-    src-partitioned to the loop partition count and materialized (a
-    shared session view) — skip the per-call symmetrize+persist."""
-    spark = edges.sparkSession
-    parts = _loop_partitions(edges.count() if prepared else 2 * edges.count(), spark)
-    with no_aqe(spark), shuffle_partitions(spark, parts):
-        # Pre-partitioned on src (the per-round join/groupBy key): the
-        # cached edge table never re-exchanges inside the loop — only
-        # the node-sized label table shuffles per round.
-        sym = edges if prepared else materialize(_symmetrize(edges).repartition("src"))
+    src-partitioned and materialized (a shared session view) — skip
+    the per-call symmetrize+persist."""
+    # Pre-partitioned on src (the per-round join/groupBy key): the
+    # cached edge table never re-exchanges inside the loop — only the
+    # node-sized label table shuffles per round.
+    with _loop(edges, prepared, _by_src(False)) as sym:
         # Seed each node with min({self} ∪ N(v)) in ONE aggregation over
         # the symmetrized edges — the same state a full first round of
         # join+union+min would produce from identity labels, minus that
@@ -329,9 +328,6 @@ def connected_components_lss(edges: DataFrame, max_iter: int = 30) -> DataFrame:
     broadcast-free shuffle join on the node key. Converges in
     O(log^2 n) rounds (in practice a handful).
     """
-    spark = edges.sparkSession
-    parts = _loop_partitions(2 * edges.count(), spark)
-
     def large_star(e: DataFrame) -> DataFrame:
         # For each node u (over the symmetrized neighborhood): attach
         # every LARGER neighbor to m = min(N(u) ∪ {u}). No explicit
@@ -371,17 +367,15 @@ def connected_components_lss(edges: DataFrame, max_iter: int = 30) -> DataFrame:
             .distinct()
         )
 
-    with no_aqe(spark), shuffle_partitions(spark, parts):
+    def simple(ed: DataFrame) -> DataFrame:
+        return ed.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
+
+    with _loop(edges, False, simple) as e:
         # Track original nodes: singletons and nodes whose edges get
         # absorbed must still appear in the output labeled as of the
         # final star forest.
         nodes = materialize(
             _symmetrize(edges).select(F.col("src").alias("node")).distinct()
-        )
-        e = materialize(
-            edges.select("src", "dst")
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
         )
         prev_fp = None
         for _ in range(max_iter):
@@ -436,16 +430,10 @@ def pagerank(
     ``prepared=True``: ``edges`` is the already-symmetrized,
     src-partitioned, materialized shared view (implies
     ``directed=False`` semantics are pre-applied)."""
-    spark = edges.sparkSession
-    parts = _loop_partitions(edges.count() if prepared else 2 * edges.count(), spark)
-    with no_aqe(spark), shuffle_partitions(spark, parts):
-        e = (
-            edges
-            if prepared
-            else (
-                edges.select("src", "dst") if directed else _symmetrize(edges)
-            ).transform(materialize)
-        )
+    def table(ed: DataFrame) -> DataFrame:
+        return ed.select("src", "dst") if directed else _symmetrize(ed)
+
+    with _loop(edges, prepared, table) as e:
         # the node count is observed on the materializing action
         obs = Observation()
         nodes = (
@@ -530,11 +518,8 @@ def label_propagation(
     """
     from pyspark.sql import Window
 
-    spark = edges.sparkSession
-    parts = _loop_partitions(edges.count() if prepared else 2 * edges.count(), spark)
-    with no_aqe(spark), shuffle_partitions(spark, parts):
-        # src-partitioned cache: rounds shuffle labels, not edges.
-        sym = edges if prepared else materialize(_symmetrize(edges).repartition("src"))
+    # src-partitioned cache: rounds shuffle labels, not edges.
+    with _loop(edges, prepared, _by_src(False)) as sym:
         labels = (
             sym.select(F.col("src").alias("node"))
             .distinct()
@@ -568,12 +553,9 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     the shrinking edge set — the peel can only shrink data, so the
     worst round is the first.
     """
-    spark = edges.sparkSession
-    parts = _loop_partitions(2 * edges.count(), spark)
-    with no_aqe(spark), shuffle_partitions(spark, parts):
-        # src-partitioned: the degree groupBy and the src-side semi
-        # join reuse the cached partitioning every round.
-        sym = materialize(_symmetrize(edges).repartition("src"))
+    # src-partitioned: the degree groupBy and the src-side semi join
+    # reuse the cached partitioning every round.
+    with _loop(edges, False, _by_src(False)) as sym:
         for _ in range(rounds):
             deg = sym.groupBy(F.col("src").alias("node")).agg(
                 F.count(F.lit(1)).alias("d")
@@ -601,12 +583,12 @@ def sssp(weighted_edges: DataFrame, start_nodes: DataFrame, max_hops: int) -> Da
     distance table; hop-bounding is also how you keep 100 TB SSSP from
     flooding a high-diameter graph.
     """
-    spark = weighted_edges.sparkSession
-    parts = _loop_partitions(2 * weighted_edges.count(), spark)
-    with no_aqe(spark), shuffle_partitions(spark, parts):
+    def table(ed: DataFrame) -> DataFrame:
         # src-partitioned: relaxation joins shuffle only the distance
         # table.
-        e = materialize(weighted_edges.select("src", "dst", "cost").repartition("src"))
+        return ed.select("src", "dst", "cost").repartition("src")
+
+    with _loop(weighted_edges, False, table) as e:
         dist = start_nodes.select("node").distinct().withColumn("dist", F.lit(0.0))
         for _ in range(max_hops):
             relaxed = (

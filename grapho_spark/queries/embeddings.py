@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from grapho_spark.queries import query
 from grapho_spark.tables import load_table
-from grapho_spark.sparkutil import materialize, scratch_path
+from grapho_spark.sparkutil import materialize, scaled_partitions, scratch_path
 
 DIM = 64
 
@@ -338,11 +338,7 @@ def _micro_varr(e: DataFrame, expl: DataFrame) -> DataFrame:
     count sized so each task folds ~4096 subspace rows, capped at
     cluster parallelism; ``e`` is the (filtered) raw table whose
     metadata-cheap count sizes it."""
-    n_vecs = e.count()
-    par = max(
-        1,
-        min(e.sparkSession.sparkContext.defaultParallelism, n_vecs * _PQ_M // 4096 + 1),
-    )
+    par = scaled_partitions(e.sparkSession, e.count() * _PQ_M, 4096, 1)
     return (
         expl.groupBy("vec_id", "sub")
         .agg(_fan_in("pos", "dvm").alias("dvm"))
@@ -1442,8 +1438,7 @@ def _kmeans_pair(
         # task) and capped at cluster parallelism — at scale the cap
         # binds, locally it spreads the interpreted HOF work across
         # cores.
-        n_vecs = e.count()  # metadata-cheap columnar count
-        par = max(1, min(spark.sparkContext.defaultParallelism, n_vecs // 256 + 1))
+        par = scaled_partitions(spark, e.count(), 256, 1)  # metadata-cheap count
         varr = materialize(
             vecs.groupBy("vec_id")
             .agg(_fan_in("pos", "val").alias("varr"))

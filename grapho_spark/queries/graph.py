@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from grapho_spark.queries import query
-from grapho_spark.sparkutil import materialize, memo_table
+from grapho_spark.sparkutil import LOOP_ROWS, materialize, memo_table, scaled_partitions
 from grapho_spark.tables import load_table
 
 MIN_WEIGHT = 2
@@ -112,16 +112,16 @@ def prepared_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     PageRank, harmonic/stress multi-source BFS, bounded BFS) each
     cached their own repartitioned copy per invocation — one shared
     materialized view serves them all, the same production posture as
-    copurchase_edges itself. Partitioned to the LOOP partition count
-    (``_loop_partitions`` over the edge rows — the same cost-based
-    sizing every consumer loop derives), so per-round joins on src are
-    co-partitioned with the iteration state instead of re-exchanging
-    the edge table each round."""
-    from grapho_spark.analytics.algorithms import _loop_partitions
+    copurchase_edges itself. This builder is the one place that sizes
+    the view: ``scaled_partitions`` over its rows at ``LOOP_ROWS`` per
+    partition. A loop given the view (``prepared=True``) reads that
+    count off it and shuffles its per-round state to match, so
+    per-round joins on src are co-partitioned with the iteration state
+    instead of re-exchanging the edge table each round."""
 
     def build() -> DataFrame:
         edges = copurchase_edges(spark, sf_dir)
-        parts = _loop_partitions(2 * edges.count(), spark)
+        parts = scaled_partitions(spark, 2 * edges.count(), LOOP_ROWS, 4)
         return sym_edges(edges).repartition(parts, "src")
 
     return memo_table(spark, f"sym_edges_by_src:{sf_dir}", build)

@@ -134,9 +134,27 @@ def checkpoint_state(df: DataFrame) -> DataFrame:
     return df.localCheckpoint()
 
 
+def scaled_partitions(spark, amount: int, per_partition: int, floor: int) -> int:
+    """The partition count for ``amount`` units of state (rows, bytes,
+    subspace rows): one partition per ``per_partition`` units, capped at
+    the cluster's parallelism and floored at ``floor``. The floor wins
+    over the cap: on a context with fewer cores than ``floor`` the
+    count is ``floor``. On a 1000-executor cluster with billions of
+    rows this returns the cap; on a thresholded co-purchase graph it
+    returns the floor — the same cost-based call either way."""
+    cap = spark.sparkContext.defaultParallelism
+    return max(floor, min(cap, amount // per_partition + 1))
+
+
+# Rows of iterative loop state per shuffle partition (the edge tables
+# the graph loops and their shared prepared views partition on src).
+LOOP_ROWS = 100_000
+
+
 @contextmanager
-def shuffle_partitions(spark: SparkSession, n: int):
-    """Temporarily set ``spark.sql.shuffle.partitions``.
+def shuffle_partitions(spark: SparkSession, n: int | None):
+    """Temporarily set ``spark.sql.shuffle.partitions`` (``None`` leaves
+    the session conf alone).
 
     Iterative algorithms size their per-round shuffles to the ITERATION
     STATE (frontier / label / rank tables), not to the session default:
@@ -145,7 +163,12 @@ def shuffle_partitions(spark: SparkSession, n: int):
     partitions pays 32 task launches per round for microseconds of
     work each. The caller picks n from the measured state size (a
     cost-based choice, same at cluster scale where the default may be
-    thousands)."""
+    thousands). A streaming query reads the conf when it starts, so
+    scoping it around start() and processAllAvailable() sizes the
+    stream's state stores and leaves the batch plans around it alone."""
+    if n is None:
+        yield
+        return
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, str(n))

@@ -21,13 +21,17 @@ import os
 import shutil
 import uuid
 from collections.abc import Iterable
-from contextlib import contextmanager as _contextmanager
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from grapho_spark.sparkutil import scaled_partitions, shuffle_partitions
+
+# Source bytes per streaming state partition.
+_STATE_BYTES = 64 << 20
 
 
 def stream_state_partitions(spark, *paths: str) -> int:
@@ -42,14 +46,11 @@ def stream_state_partitions(spark, *paths: str) -> int:
     default (cores) made a megabyte-scale stream pay 32 state commits
     per operator per batch — measured at sf0.1: windowed quantile 4.8s
     -> 1.3s, windowed counts 2.9s -> 0.9s at the derived count. The
-    per-partition byte target is env-tunable
-    (``SPARK_GRAFT_STREAM_PART_BYTES``, default 64 MB); the count
-    floors at 4 and caps at the cluster parallelism, so a 100 TB
-    backlog still derives the cap — the same cost-based call
-    ``_loop_partitions`` makes for iterative state.
+    count is ``scaled_partitions`` over the source bytes, one partition
+    per ``_STATE_BYTES`` with a floor of 4, so a 100 TB backlog still
+    derives the cluster's parallelism — the same cost-based call the
+    graph loops make for their per-round state.
     """
-    import os
-
     total = 0
     for p in paths:
         if os.path.isdir(p):
@@ -57,27 +58,7 @@ def stream_state_partitions(spark, *paths: str) -> int:
                 total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
         elif os.path.exists(p):
             total += os.path.getsize(p)
-    target = int(os.environ.get("SPARK_GRAFT_STREAM_PART_BYTES", str(64 << 20)))
-    return max(4, min(spark.sparkContext.defaultParallelism, total // target + 1))
-
-
-@_contextmanager
-def _scoped_shuffle_partitions(spark, n: int | None):
-    """Pin spark.sql.shuffle.partitions for the duration of a streaming
-    run (None = leave the session conf alone). The streaming engine
-    reads the conf when the query STARTS, so scoping around
-    start()/processAllAvailable() is sufficient and the batch plans
-    around the stream keep the session default."""
-    if n is None:
-        yield
-        return
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    return scaled_partitions(spark, total, _STATE_BYTES, 4)
 
 
 def run_with_checkpoint(
@@ -92,7 +73,7 @@ def run_with_checkpoint(
     thing the ``statestore`` reader introspects, and what a production
     restart resumes from."""
     spark = stream_df.sparkSession
-    with _scoped_shuffle_partitions(spark, state_partitions):
+    with shuffle_partitions(spark, state_partitions):
         q = (
             stream_df.writeStream.outputMode(out_mode)
             .format("noop")
@@ -137,7 +118,7 @@ def run_to_memory(
     spark = stream_df.sparkSession
     ckpt_base = _ephemeral_ckpt_base()
     ckpt = None
-    with _scoped_shuffle_partitions(spark, state_partitions):
+    with shuffle_partitions(spark, state_partitions):
         w = stream_df.writeStream.outputMode(out_mode).format("memory").queryName(name)
         if ckpt_base is not None:
             ckpt = os.path.join(ckpt_base, name)

@@ -156,7 +156,7 @@ _LOOP_JOBS = {
     "connected_components": 13,
     "connected_components_str": 26,
     "connected_components_lss": 27,
-    "pagerank_prepared": 14,
+    "pagerank_prepared": 12,
     "label_propagation": 10,
 }
 
@@ -165,12 +165,15 @@ _LOOP_JOBS = {
 def test_loop_jobs_per_algorithm(spark, algo):
     from grapho_spark import analytics as A
     from grapho_spark.analytics.algorithms import _symmetrize
-    from grapho_spark.sparkutil import materialize
+    from grapho_spark.sparkutil import LOOP_ROWS, materialize, scaled_partitions
 
     pairs = [(i, i + 1) for i in range(10)] + [(20, 21), (21, 22), (22, 20), (30, 31)]
     e = _edges_df(spark, pairs)
     start = spark.createDataFrame([(0,), (20,)], "node long")
-    prepared = materialize(_symmetrize(e).repartition("src"))
+    # built as queries.graph.prepared_sym_edges builds its view: an
+    # explicit partition count, which the loop reads off the view
+    parts = scaled_partitions(spark, 2 * e.count(), LOOP_ROWS, 4)
+    prepared = materialize(_symmetrize(e).repartition(parts, "src"))
     calls = {
         "bfs": lambda: A.bfs(e, start, 4),
         "multi_source_bfs": lambda: A.multi_source_bfs(e, start, 4),

@@ -4,6 +4,7 @@ weights as co-order counts."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR as SF
@@ -50,3 +51,52 @@ def test_market_basket_counts_equal_memoized_weights(spark):
         .collect()
     }
     assert direct == via_memo
+
+
+@pytest.mark.parametrize(
+    "algo", ["connected_components", "label_propagation", "multi_source_bfs", "pagerank"]
+)
+def test_prepared_view_sizes_its_loop_with_no_job(spark, monkeypatch, algo):
+    """A loop given a prepared view takes the view's own partition count
+    and launches no job before its loop starts: the count is read off
+    the view, never recounted."""
+    from grapho_spark import analytics as A
+    from grapho_spark.analytics import algorithms
+    from grapho_spark.queries.graph import (
+        copurchase_edges,
+        prepared_sym_edges,
+        sym_edges,
+    )
+    from grapho_spark.sparkutil import materialize
+
+    sc = spark.sparkContext
+    group = {}
+    seen = []
+    real = algorithms.shuffle_partitions
+
+    def spy(session, n):
+        seen.append((n, len(sc.statusTracker().getJobIdsForGroup(group["id"]))))
+        return real(session, n)
+
+    monkeypatch.setattr(algorithms, "shuffle_partitions", spy)
+    calls = {
+        "connected_components": lambda v: A.connected_components(v, prepared=True),
+        "label_propagation": lambda v: A.label_propagation(v, 2, prepared=True),
+        "multi_source_bfs": lambda v: A.multi_source_bfs(
+            v, v.select(F.col("src").alias("node")).distinct().filter("node % 7 = 0"),
+            max_hops=2, prepared=True,
+        ),
+        "pagerank": lambda v: A.pagerank(v, iters=2, prepared=True),
+    }
+    view = prepared_sym_edges(spark, SF)
+    # the same view at a count the sizing rule would not choose
+    odd = materialize(sym_edges(copurchase_edges(spark, SF)).repartition(7, "src"))
+    for v in (view, odd):
+        group["id"] = f"prepared-view-{algo}-{len(seen)}"
+        sc.setJobGroup(group["id"], group["id"])
+        try:
+            calls[algo](v)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    odd.unpersist()
+    assert seen == [(view.rdd.getNumPartitions(), 0), (7, 0)]
